@@ -128,6 +128,46 @@ object TileGrid {
     (ymin - my) <= fb.ymax && (ymax + my) >= fb.ymin
   }
 
+  /** Exact column range `(lo, hi)` of [[cover]] (empty when lo > hi): the
+    * quotient candidate, widened by one tile, with both ends trimmed to
+    * [[xOverlaps]]. The quotient is within one tile of the exact answer,
+    * so each trim loop runs at most two iterations. */
+  private def xRange(z: Int, fb: BBox, frac: Double): (Long, Long) = {
+    val span = tileSpan(z)
+    val m = frac * span
+    // x: tile t expanded range [X0 + t·span − m, X0 + (t+1)·span + m]
+    var x0 = math.max(0L, ceilM1((fb.xmin - m + HalfWorld) / span) - 1)
+    var x1 = math.min((1L << z) - 1L,
+      math.floor((fb.xmax + m + HalfWorld) / span).toLong + 1)
+    while (x0 <= x1 && !xOverlaps(z, x0, frac, fb)) x0 += 1
+    while (x1 >= x0 && !xOverlaps(z, x1, frac, fb)) x1 -= 1
+    (x0, x1)
+  }
+
+  /** Row analog of [[xRange]]. */
+  private def yRange(z: Int, fb: BBox, frac: Double): (Long, Long) = {
+    val span = tileSpan(z)
+    val m = frac * span
+    // y (row 0 north): tile r covers [Ymax−(r+1)span−m, Ymax−r·span+m]
+    var y0 = math.max(0L, ceilM1((HalfWorld - fb.ymax - m) / span) - 1)
+    var y1 = math.min((1L << z) - 1L,
+      math.floor((HalfWorld - fb.ymin + m) / span).toLong + 1)
+    while (y0 <= y1 && !yOverlaps(z, y0, frac, fb)) y0 += 1
+    while (y1 >= y0 && !yOverlaps(z, y1, frac, fb)) y1 -= 1
+    (y0, y1)
+  }
+
+  private def ceilM1(v: Double): Long = math.ceil(v).toLong - 1
+
+  // the reference PARSES zoom ≤ 30 in layer configs (layer.rs:253-261)
+  // but z30 tile ids don't fit the 5+29+29-bit packing — materializing
+  // z30 must be an explicit error, never silent bit-garbage (VERDICT r2)
+  private def requirePackable(z: Int): Unit =
+    require(z >= 0 && z <= TileId.MaxZ,
+      s"zoom $z outside packed TileId range [0, ${TileId.MaxZ}]: " +
+        "z30 tiles cannot be materialized (config zoom gates may still " +
+        "say '30'; they bind only up to the requested pyramid zMax)")
+
   /** All tiles at zoom z whose margin-expanded bbox intersects (inclusively)
     * the given feature bbox — the batch inversion of the reference's R-tree
     * `query(bbox)` (SURVEY.md §2.3 J4). Inclusive-touch boundaries produce
@@ -137,36 +177,15 @@ object TileGrid {
     * are then trimmed/extended with the EXACT per-axis predicate above, so
     * the result equals `{ t | tileBBoxWithMargin(t).intersects(fb) }` even
     * when a box edge sits exactly on (or within an ulp of) a tile edge.
-    * The quotient is within one tile of the exact answer, so each trim loop
-    * runs at most two iterations.
     *
     * Returns packed tile ids, row-major.
     */
   def cover(z: Int, fb: BBox, extent: Int, margin: Int): Array[Long] = {
-    // the reference PARSES zoom ≤ 30 in layer configs (layer.rs:253-261)
-    // but z30 tile ids don't fit the 5+29+29-bit packing — materializing
-    // z30 must be an explicit error, never silent bit-garbage (VERDICT r2)
-    require(z >= 0 && z <= TileId.MaxZ,
-      s"zoom $z outside packed TileId range [0, ${TileId.MaxZ}]: " +
-        "z30 tiles cannot be materialized (config zoom gates may still " +
-        "say '30'; they bind only up to the requested pyramid zMax)")
+    requirePackable(z)
     if (fb.xmin > fb.xmax || fb.ymin > fb.ymax) return Array.empty
-    val span = tileSpan(z)
     val frac = margin.toDouble / extent.toDouble
-    val m = frac * span
-    val n = (1L << z) - 1L
-    // x: tile t expanded range [X0 + t·span − m, X0 + (t+1)·span + m]
-    def ceilM1(v: Double): Long = math.ceil(v).toLong - 1
-    var x0 = math.max(0L, ceilM1((fb.xmin - m + HalfWorld) / span) - 1)
-    var x1 = math.min(n, math.floor((fb.xmax + m + HalfWorld) / span).toLong + 1)
-    // y (row 0 north): tile r covers [Ymax−(r+1)span−m, Ymax−r·span+m]
-    var y0 = math.max(0L, ceilM1((HalfWorld - fb.ymax - m) / span) - 1)
-    var y1 = math.min(n, math.floor((HalfWorld - fb.ymin + m) / span).toLong + 1)
-    // trim both ends to the exact predicate (candidate widened by 1 above)
-    while (x0 <= x1 && !xOverlaps(z, x0, frac, fb)) x0 += 1
-    while (x1 >= x0 && !xOverlaps(z, x1, frac, fb)) x1 -= 1
-    while (y0 <= y1 && !yOverlaps(z, y0, frac, fb)) y0 += 1
-    while (y1 >= y0 && !yOverlaps(z, y1, frac, fb)) y1 -= 1
+    val (x0, x1) = xRange(z, fb, frac)
+    val (y0, y1) = yRange(z, fb, frac)
     if (x0 > x1 || y0 > y1) return Array.empty
     val cells = (x1 - x0 + 1) * (y1 - y0 + 1)
     // a continent-wide bbox at a deep zoom legitimately covers billions
@@ -186,5 +205,23 @@ object TileGrid {
       yy += 1
     }
     out
+  }
+
+  /** `cover(z, fb, extent, margin).contains(TileId.pack(z, x, y))` without
+    * materializing the cover: the same inverted-bbox early-out and the
+    * same exact column/row ranges, so the two agree bit-for-bit at FP tile
+    * boundaries. O(1), and — unlike [[cover]] — never fails on a bbox
+    * whose cover would exceed Int.MaxValue tiles. The single-tile render
+    * uses it as its map-side filter. */
+  def covers(z: Int, x: Int, y: Int, fb: BBox, extent: Int,
+             margin: Int): Boolean = {
+    requirePackable(z)
+    if (fb.xmin > fb.xmax || fb.ymin > fb.ymax) return false
+    val frac = margin.toDouble / extent.toDouble
+    val (x0, x1) = xRange(z, fb, frac)
+    x0 <= x && x <= x1 && {
+      val (y0, y1) = yRange(z, fb, frac)
+      y0 <= y && y <= y1
+    }
   }
 }

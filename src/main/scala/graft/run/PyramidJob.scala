@@ -13,7 +13,9 @@ import graft.tile.Pyramid
   *
   * The job is split into per-zoom batches. Each batch:
   *   - writes its tiles idempotently to `out/fmt=<fmt>/z=<z>/` (keyed by
-  *     (group, z, x, y) — a re-run overwrites with identical bytes);
+  *     (group, z, x, y) — a re-run overwrites with identical bytes); the
+  *     files hold group, x, y and bytes, and a read from `out` gets fmt
+  *     and z back from the directory names;
   *   - collects per-partition lineage (partition id → rows, bytes) via an
   *     accumulator DURING the write (no second pass);
   *   - commits a manifest `out/_manifest/<fmt>_z<z>.json` (written to a
@@ -59,7 +61,9 @@ object PyramidJob {
             }
           }
         }(tiles.encoder)
-        graft.sources.TableIO.write(metered.toDF(),
+        // the partition directories carry fmt and z; writing them as data
+        // columns too would duplicate both in a read from the table root
+        graft.sources.TableIO.write(metered.toDF().drop("fmt", "z"),
           s"$out/fmt=$fmt/z=$z")
         val wall = (System.nanoTime() - t0) / 1e9
         // committed totals come from the WRITTEN output: accumulator

@@ -45,6 +45,23 @@ class JobsSpec extends AnyFunSuite {
     val r3 = PyramidJob.run(spark, feats, cfg, "tile", "mvt", 0, 6, out)
     assert(r3.count(!_.skipped) == 1 && !r3(5).skipped)
     assert(spark.read.parquet(s"$out/fmt=mvt").count() == before)
+    // the files leave fmt and z to the partition directories (a read from
+    // the root dedups a duplicate with only a COLUMN_ALREADY_EXISTS warning)
+    assert(spark.read.parquet(s"$out/fmt=mvt/z=6").schema.fieldNames.toSeq
+      == Seq("group", "x", "y", "bytes"))
+    // read from the table root: fmt and z come once each, from the
+    // partition directories, and the rows are the pyramid's
+    val table = spark.read.parquet(out)
+    val names = table.schema.fieldNames.toSeq
+    assert(names.count(_ == "fmt") == 1 && names.count(_ == "z") == 1,
+      names)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("group", "z", "x", "y", "fmt", "bytes").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
+          r.getString(4), r.getAs[Array[Byte]](5).toSeq)).toSet
+    val want = rows(graft.tile.Pyramid.tiles(spark, feats, cfg, "tile",
+      "mvt", 0, 6).toDF())
+    assert(rows(table) == want)
     feats.unpersist()
   }
 
