@@ -134,35 +134,6 @@ object ScalingBench {
       countyCols = 24, countyRows = 20)
     val featPath = "/tmp/graft_scaling_features"
     val dataDir = "/root/repo/data"
-    // "pv7" = measured-plan version (pv3: RingCodec-packed rings; pv4:
-    // whole-feature packFeat blob + layer-rank int rows; pv5: shuffled
-    // FeatPayload packed to one blob + streaming MvtLayer encode; pv6:
-    // UTF_8 charset constants + alloc-free sint validation in the
-    // encode row loop; pv7: per-partition reusable FeatureEncoder —
-    // primitive command buffer, reused ProtoWriter/MvtGeomEncoder, tag
-    // values as raw byte slices, no per-row String round trip; pv8:
-    // cover-fusion, measured at parity and REJECTED — see ROUND4_NOTES;
-    // pv9: weight-aware final-merge partitioning — sampled per-tile
-    // weights, LPT-pinned fat merges on first-wave partition indices,
-    // RDD shuffle of RunCodec-packed runs); bump when the pyramid job
-    // or the timing method changes so old level files can't win the min
-    // pv9's final merge is an RDD shuffle of (Long, Array[Byte]) records
-    // (Catalyst exchanges use the UnsafeRow serializer and ignore
-    // spark.serializer; only this one RDD exchange is affected). Kryo
-    // was A/B'd against the Java default in interleaved same-window L8
-    // bursts (tools/ab_serializer.sh → data/ab5k_level_8.json 16.92 s
-    // vs data/ab5j_level_8.json 15.60 s, min of 6 reps each; an earlier
-    // window agreed: data/abk9.json 8.37 s kryo vs ab9new.json 5.61 s
-    // java) and LOST — the shuffle rows are dominated by one large
-    // pre-packed byte blob, which Java serialization writes essentially
-    // raw while Kryo pays an extra buffer copy/resize per record. The
-    // knob stays for re-A/B and is FINGERPRINTED: a java-serializer
-    // record must never min-merge with a kryo one.
-    val serializer = sys.env.getOrElse("SPARK_GRAFT_SCALING_SERIALIZER",
-      "java") match {
-      case "kryo" => "org.apache.spark.serializer.KryoSerializer"
-      case _      => "org.apache.spark.serializer.JavaSerializer"
-    }
     // mode "threads" (default): local[k] — k tasks multiplex ONE JVM; the
     // sandbox stand-in used since round 1. mode "executors": Spark's
     // local-cluster[k,1,mem] master — k REAL executor JVMs of 1 core each
@@ -183,21 +154,37 @@ object ScalingBench {
       "-XX:ActiveProcessorCount=1 -XX:+UseParallelGC -Xmn3g" +
         " -XX:-UseAdaptiveSizePolicy")
     // pv10: AQE partition COALESCING is off for the measured job. The
-    // r5 stage profile showed AQE folding the salt-run sort+pack stage
-    // (CPU-heavy, but only a few MB of shuffle bytes post-compression)
-    // down to 2-3 tasks — a ~2-3.5 s near-serial stage inside the L8
-    // wall, and a LEVEL-DEPENDENT one (the coalesce target tracks
-    // defaultParallelism), which violated the identical-plan-at-every-
-    // level protocol. With coalescing off every shuffle read is the
-    // fixed 32 partitions at every level; the knob is fingerprinted and
-    // the prior ladder state is preserved in data/scaling_pv9.json.
+    // r5 stage profile showed AQE folding pv9's low-zoom run sort+pack
+    // stage (CPU-heavy, but only a few MB of shuffle bytes
+    // post-compression; deleted in pv11) down to 2-3 tasks — a ~2-3.5 s
+    // near-serial stage inside the L8 wall, and a LEVEL-DEPENDENT one
+    // (the coalesce target tracks defaultParallelism), which violated
+    // the identical-plan-at-every-level protocol. The pyramid's one
+    // groupByKey(tile_id) exchange would be coalesced the same way, so
+    // coalescing stays off: every shuffle read is the fixed 32
+    // partitions at every level; the knob is fingerprinted and the
+    // prior ladder state is preserved in data/scaling_pv9.json.
     val coalesce = sys.env.getOrElse("SPARK_GRAFT_SCALING_COALESCE",
       "false")
-    val fp = fingerprint(Seq("pv10", p.toString, zMax.toString,
+    // measured-plan version (pv3: RingCodec-packed rings; pv4:
+    // whole-feature packFeat blob + layer-rank int rows; pv5: shuffled
+    // FeatPayload packed to one blob + streaming MvtLayer encode; pv6:
+    // UTF_8 charset constants + alloc-free sint validation in the
+    // encode row loop; pv7: per-partition reusable FeatureEncoder —
+    // primitive command buffer, reused ProtoWriter/MvtGeomEncoder, tag
+    // values as raw byte slices, no per-row String round trip; pv8:
+    // cover-fusion, measured at parity and REJECTED — see ROUND4_NOTES;
+    // pv9: weight-aware final-merge partitioning of the salted low-zoom
+    // branch; pv10: AQE coalescing off; pv11: the salted branch, its
+    // sampled placement and its RDD shuffle are gone — every zoom is one
+    // groupByKey(tile_id), so the job has no RDD shuffle and
+    // spark.serializer no longer reaches it); bump when the pyramid job
+    // or the timing method changes so old level files can't win the min
+    val fp = fingerprint(Seq("pv11", p.toString, zMax.toString,
       sys.env.getOrElse("SPARK_GRAFT_SCALING_PARTITIONS", "32"),
       sys.env.getOrElse("SPARK_GRAFT_SCALING_ADVISORY_MB", "8"),
       sys.env.getOrElse("SPARK_GRAFT_SCALING_AQE", "true"),
-      serializer, coalesce) ++
+      coalesce) ++
       (if (mode == "executors") Seq(s"executors|$execMemMb|$execGc|mx-v2")
        else Nil): _*)
 
@@ -221,7 +208,6 @@ object ScalingBench {
         .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
           s"${advisoryMb}m")
-        .config("spark.serializer", serializer)
         .config("spark.network.timeout", "600s")
         .config("spark.executor.heartbeatInterval", "60s")
         .config("spark.ui.enabled", "false")

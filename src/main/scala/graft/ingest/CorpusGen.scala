@@ -17,7 +17,8 @@ object CorpusGen {
   import SpanCodec.mix64
 
   /** Corpus parameters. `skew` clusters 80% of cells into one z8 tile
-    * (forces the salted/AQE path at the bench scale). */
+    * (one hot tile per low zoom in the pyramid's groupByKey(tile_id)
+    * exchange at the bench scale). */
   final case class Params(
       nx: Int, ny: Int,
       countyCols: Int, countyRows: Int,

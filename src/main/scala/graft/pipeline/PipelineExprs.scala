@@ -74,22 +74,30 @@ object PipelineExprHelpers {
   /** Squared L2 distance of one (double-array) row against every row of
     * a constant centroid matrix, in centroid order — the loop form of
     * `transform(centroidLit, c => aggregate(zip_with(c, ne, (x,y) =>
-    * (x-y)²), 0.0, +))`, same subtraction and fold order. */
+    * (x-y)²), 0.0, +))`, same subtraction and fold order. A null row, a
+    * null element or a width that differs from the centroid's gives a
+    * null distance, exactly like the Column form (`zip_with` pads the
+    * shorter side with nulls, and a null term nulls the fold). */
   def centroidDists(e: ArrayData,
                     matrix: Array[Array[Double]]): ArrayData = {
     val k = matrix.length
-    val out = new Array[Double](k)
+    val out = new Array[Any](k)
+    var ok = e != null
+    var i = 0
+    while (ok && i < e.numElements()) { if (e.isNullAt(i)) ok = false; i += 1 }
     var c = 0
     while (c < k) {
       val cent = matrix(c)
-      var s = 0.0
-      var i = 0
-      while (i < cent.length) {
-        val d = cent(i) - e.getDouble(i)
-        s += d * d
-        i += 1
+      if (ok && e.numElements() == cent.length) {
+        var s = 0.0
+        i = 0
+        while (i < cent.length) {
+          val d = cent(i) - e.getDouble(i)
+          s += d * d
+          i += 1
+        }
+        out(c) = s
       }
-      out(c) = s
       c += 1
     }
     new GenericArrayData(out)
@@ -141,29 +149,28 @@ case class LshBuckets(child: Expression,
 case class CentroidDists(child: Expression, matrix: Array[Array[Double]])
     extends Expression {
   override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = child.nullable
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  // a null/mismatched row yields null distances, exactly like the Column
+  // encoding it replaces — never a null array
+  override def nullable: Boolean = false
   override def foldable: Boolean = false
 
-  override def eval(input: InternalRow): Any = {
-    val e = child.eval(input)
-    if (e == null) null
-    else PipelineExprHelpers.centroidDists(e.asInstanceOf[ArrayData], matrix)
-  }
+  override def eval(input: InternalRow): Any =
+    PipelineExprHelpers.centroidDists(
+      child.eval(input).asInstanceOf[ArrayData], matrix)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
     val m = ctx.addReferenceObj("centroidMatrix", matrix, "double[][]")
+    val in = if (child.nullable)
+      s"${c.isNull} ? null : ${c.value}" else c.value.code
     ev.copy(code =
       code"""
         ${c.code}
-        boolean ${ev.isNull} = ${if (child.nullable) c.isNull.code else "false"};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.pipeline.PipelineExprHelpers.centroidDists(
-            ${c.value}, $m);
-        }
+        boolean ${ev.isNull} = false;
+        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+          graft.pipeline.PipelineExprHelpers.centroidDists(($in), $m);
       """)
   }
 

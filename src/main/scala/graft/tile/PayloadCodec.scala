@@ -10,8 +10,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `tag_vals: Seq[String]` and `content: String` as typed columns, and
   * Catalyst's object serializer runs a boxed `MapObjects` loop plus a
   * `String ⇄ UTF8String` conversion for each of them — on BOTH sides of
-  * the exchange, and TWICE for the salted z≤8 branch (whose stage-1
-  * output nested the per-salt run arrays). A width-8
+  * the pyramid's one `groupByKey(tile_id)` exchange. A width-8
   * JFR profile showed the deserializer conversions plus the downstream
   * per-row Seq rebuilds among the top CPU consumers; packing the whole
   * payload into one binary column reduces every (de)serialization to a

@@ -1,8 +1,6 @@
 package graft.tile
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -22,13 +20,13 @@ final case class TileFeatRow(tile_id: Long, layer_rank: Int,
   * transform / command encode) is done per-feature BEFORE the shuffle, so
   * the hot z0-2 tiles (a z0 tile covers the whole corpus) never serialize
   * encode work into one task. The shuffle representation is minimal: the
-  * sort/merge key rides as three primitives and EVERYTHING else —
+  * sort key rides as three primitives and EVERYTHING else —
   * pre-varinted geometry commands (~1-2 B per command vs 8 B of Long),
   * tag include-pattern indices + value strings, wyrm content + found —
   * is one [[PayloadCodec]] blob, so Catalyst (de)serializes the row as
-  * primitives plus a byte copy on both sides of the exchange (and again
-  * through [[TilePartial]] on the salted branch). Key names and sint
-  * flags are re-derived from the layer config at assembly. */
+  * primitives plus a byte copy on both sides of the pyramid's one
+  * exchange. Key names and sint flags are re-derived from the layer
+  * config at assembly. */
 final case class FeatPayload(
     tile_id: Long, layer_rank: Int, kind_rank: Int, id: Long,
     blob: Array[Byte])
@@ -44,10 +42,11 @@ final case class FeatPayload(
   *                                        feature order (kind_rank, id),
   *                                        layer order = config order
   *
-  * Skew note: the only per-tile serial work left after the rewrite is
-  * dictionary interning + byte concatenation (O(bytes)); AQE sizes the
-  * Catalyst exchanges, and the final merge exchange places fat tiles
-  * explicitly (pv9 weight-aware partitioner below).
+  * Every zoom takes this same path, as in the reference (one R-tree
+  * query per tile, then layer fold and assembly). Skew note: the only
+  * per-tile serial work left after the per-feature encode is the payload
+  * sort, dictionary interning and byte concatenation (O(bytes)); AQE
+  * sizes the exchange.
   */
 object Pyramid extends Serializable {
 
@@ -203,149 +202,24 @@ object Pyramid extends Serializable {
     arr
   }
 
-  /** Deterministic salt from the (unique per tile) feature key. */
-  def saltOf(p: FeatPayload, nSalts: Int): Int =
-    math.floorMod(graft.ingest.SpanCodec.mix64(
-      p.id + p.layer_rank * 1000003L + p.kind_rank * 31L).toInt, nSalts)
-
-  /** k-way merge of per-salt runs each sorted by (layer_rank, kind_rank,
-    * id) — keys are unique per tile (layer dedup upstream), so the merge
-    * is deterministic and reproduces exactly the order a single global
-    * sort would give. */
-  def mergeRuns(runs: Seq[Array[FeatPayload]]): Iterator[FeatPayload] = {
-    val live = runs.filter(_.nonEmpty)
-    if (live.isEmpty) return Iterator.empty
-    if (live.size == 1) return live.head.iterator
-    // (run << 32 | idx) packed cursors in a binary heap ordered by the
-    // head payload's key — no per-comparison tuple boxing
-    val ord: Ordering[Long] = new Ordering[Long] {
-      override def compare(a: Long, b: Long): Int =
-        payloadOrd.compare(
-          live((a >> 32).toInt)(a.toInt), live((b >> 32).toInt)(b.toInt))
-    }
-    val pq = mutable.PriorityQueue.empty[Long](ord.reverse)
-    live.indices.foreach(r => pq.enqueue(r.toLong << 32))
-    new Iterator[FeatPayload] {
-      def hasNext: Boolean = pq.nonEmpty
-      def next(): FeatPayload = {
-        val c = pq.dequeue()
-        val r = (c >> 32).toInt; val i = c.toInt
-        if (i + 1 < live(r).length) pq.enqueue((r.toLong << 32) | (i + 1))
-        live(r)(i)
-      }
-    }
-  }
-
-  /** Zooms ≤ this go through the salted two-stage aggregation: a z0 tile
-    * covers the entire corpus, so a single `groupByKey(tile_id)` task
-    * would receive (and sort) every feature payload — the one shape that
-    * does not survive a 100× scale-up (VERDICT r1 #2). */
+  /** Kept only because the repo benchmark
+    * (`perfbench/src/graft/perfbench/Workloads.scala`) splits its traced
+    * pyramid passes here — `tile.pyramid_lo` is z0..8, `tile.pyramid_hi`
+    * z9..14 — and the benchmark's files change only with the benchmark.
+    * [[tiles]] has one path for every zoom and does not read it. */
   val SaltMaxZ = 8
 
-  /** Salt fan-out for hot low-zoom tiles. */
-  val NumSalts = 16
-
-  // ---- pv9: weight-aware final-merge partitioning (VERDICT r4 #3) ----
-  // The measured L8 tail was the LAST exchange: hash-partitioning
-  // `tile_id` packs several hot-lineage tiles (the z0 tile plus the tile
-  // containing the corpus hot-spot at each zoom ≤ SaltMaxZ, each carrying
-  // a comparable share of all payload bytes) into one reduce partition,
-  // and that fat partition can land in the stage's LAST scheduling wave —
-  // its serial merge then adds its full wall to the tail (maxTask ≈ 80 %
-  // of stage wall at L8; more partitions measurably made it WORSE, see
-  // ROUND4_NOTES pv7). The fix uses knowledge the plan already has: a
-  // bounded sampled cover-count pass estimates per-tile payload weight,
-  // the heaviest tiles are LPT-packed onto the LOWEST partition indices
-  // (local + cluster schedulers launch tasks in ascending index order, so
-  // the serial fat merges start in the FIRST wave and overlap everything
-  // else), and every other tile hashes across all partitions as before.
-  // Output bytes are unchanged — only the reduce-side placement moves.
-
-  /** 1-in-N deterministic feature sample for the weight stats pass. The
-    * sampled cover pass costs ~1/N of one explode scan (no encode, no
-    * payload bytes) and the collect is bounded by [[heavyPinnedMax]]
-    * rows — constant driver state at any corpus size. */
-  val WeightSampleMod = 64
-
-  /** At most one pinned heavy tile per reduce partition slot. */
-  def heavyPinnedMax(nP: Int): Int = nP
-
-  /** Greedy LPT (longest-processing-time) assignment of the sampled-
-    * heaviest tiles to reduce partitions: heaviest first, each to the
-    * currently-lightest bin (ties → lowest index), so the fattest merges
-    * occupy the earliest-scheduled slots and no two top-K tiles share a
-    * partition unless the bin balance demands it. */
-  private[tile] def lptAssign(heavy: Seq[(Long, Long)],
-                              nP: Int): Map[Long, Int] = {
-    val loads = new Array[Long](nP)
-    val out = Map.newBuilder[Long, Int]
-    heavy.sortBy { case (t, w) => (-w, t) }.foreach { case (t, w) =>
-      var best = 0
-      var i = 1
-      while (i < nP) { if (loads(i) < loads(best)) best = i; i += 1 }
-      loads(best) += math.max(w, 1L)
-      out += (t -> best)
-    }
-    out.result()
-  }
-
-  /** Sampled per-tile cover counts over the salted zoom range → pinned
-    * partition for the top-K heaviest tiles. Runs one bounded job at plan
-    * build (the same eager-stats precedent as the IVF training sample);
-    * an empty sample (tiny corpus) degrades to pure hash placement. */
-  private def heavyBins(spark: SparkSession, features: Dataset[Feature],
-                        group: LayerGroup, extent: Int, fmt: String,
-                        zMin: Int, zMax: Int, nP: Int): Map[Long, Int] = {
-    import spark.implicits._
-    val meta = group.layers
-      .map(l => (l.name, l.zoom.zmin, l.zoom.zmax))
-      .toDF("layer", "zmin", "zmax")
-    val marginCol =
-      if (fmt == "wyrm") lit(TileGrid.WyrmMargin) else mvtMarginCol($"z")
-    val heavy = features.toDF()
-      .where(pmod(xxhash64($"id", $"layer"), lit(WeightSampleMod)) === 0)
-      .join(broadcast(meta), Seq("layer"))
-      .where($"zmin" <= zMax && $"zmax" >= zMin)
-      .withColumn("z",
-        explode(sequence(greatest($"zmin", lit(zMin)),
-          least($"zmax", lit(zMax)))))
-      .withColumn("tile_id",
-        explode(GeoFunctions.tileCover($"z", $"xmin", $"ymin", $"xmax",
-          $"ymax", marginCol, lit(extent))))
-      .groupBy($"tile_id").agg(count(lit(1)).as("w"))
-      .orderBy($"w".desc, $"tile_id")
-      .limit(heavyPinnedMax(nP))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .toSeq
-    lptAssign(heavy, nP)
-  }
-
-  /** Full pyramid for one group + format.
+  /** Full pyramid for one group + format, one path for every zoom in
+    * [zMin, zMax]: per-feature encode, ONE shuffle — groupByKey(tile_id)
+    * — then sort the tile's payloads by (layer_rank, kind_rank, id) and
+    * stream-assemble them.
     *
-    * High zooms (z > SaltMaxZ): one shuffle — groupByKey(tile_id), sort
-    * the (small) per-tile set, stream-assemble.
-    *
-    * Low zooms (z ≤ SaltMaxZ): salted two-stage — (tile_id, salt) partial
-    * sort in parallel (the O(n log n) work distributes across NumSalts
-    * tasks per hot tile), then a per-tile k-way merge of ≤ NumSalts
-    * pre-sorted runs feeding the same streaming assembler, placed by the
-    * pv9 weight-aware partitioner (fat merges pinned to first-wave
-    * partition indices). Byte-identical output: the merge reproduces the
-    * global (layer_rank, kind_rank, id) order regardless of placement.
-    *
-    * Memory honesty (ADVICE r2): the salting distributes the sort CPU and
-    * the stage-1 buffers, but the FINAL merge task still receives every
-    * pre-encoded payload of its tile — O(features-per-tile) bytes in one
-    * task, on top of the O(output-bytes) assembler state. That residual
-    * is inherent to emitting one contiguous tile blob whose layers
-    * interleave features from all salts; it is bounded by the encoded
-    * payload bytes of the hottest tile (a z0 tile holds only what the
-    * config's zoom gates admit at z0, exactly as in the reference), and
-    * payloads arrive pre-varinted (~1-2 B/command), so the bound is the
-    * OUTPUT tile size ×~1, not the raw geometry size. A hierarchical
-    * per-salt pre-assembly cannot shrink it without breaking byte
-    * identity (layer buffers would have to merge mid-feature).
+    * Memory: a tile's task receives every pre-encoded payload of that
+    * tile, so the bound is the encoded payload bytes of the hottest tile
+    * (a z0 tile holds only what the config's zoom gates admit at z0,
+    * exactly as in the reference). Payloads arrive pre-varinted
+    * (~1-2 B/command), so that is the OUTPUT tile size ×~1, not the raw
+    * geometry size.
     */
   def tiles(spark: SparkSession, features: Dataset[Feature], cfgE: EngineCfg,
             groupName: String, fmt: String, zMin: Int, zMax: Int)
@@ -358,64 +232,15 @@ object Pyramid extends Serializable {
         s"[0, ${TileId.MaxZ}] — z30 (reference config max) cannot be " +
         "materialized with the 5+29+29-bit packing")
     val group = cfgE.groups.find(_.name == groupName).get
-    // split at the zoom-explode SOURCE (not a post-encode filter), so the
-    // expensive per-feature encode runs exactly once per (feature, tile)
-    // — a shared `enc` scanned by two filtered branches would recompute
-    // the whole encode lineage per branch
-    def enc(lo: Int, hi: Int) =
-      coverJoin(spark, features, group, cfgE.tileExtent, fmt, lo, hi)
-        .mapPartitions { it =>
-          // one reusable encoder per partition (buffers amortized across
-          // every (feature, zoom, tile) row — see FeatureEncoder)
-          val fe = new FeatureEncoder(cfgE, group, fmt)
-          it.flatMap(fe.encode)
-        }
-
-    val branches = Seq.newBuilder[Dataset[TileRow]]
-    if (zMax > SaltMaxZ)
-      branches += enc(math.max(zMin, SaltMaxZ + 1), zMax)
-        .groupByKey(_.tile_id)
-        .flatMapGroups(new AssembleSingles(cfgE, group, fmt, groupName))
-    if (zMin <= SaltMaxZ) {
-      val loMax = math.min(zMax, SaltMaxZ)
-      val nP = scala.util.Try(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)
-        .getOrElse(spark.sparkContext.defaultParallelism)
-      val part = new WeightedTilePartitioner(nP,
-        heavyBins(spark, features, group, cfgE.tileExtent, fmt,
-          zMin, loMax, nP))
-      // stage 1 (Catalyst): per-(tile, salt) sorted runs, packed to one
-      // blob each; the final exchange is an RDD shuffle so the weighted
-      // partitioner (and its first-wave placement of the fat merges)
-      // applies — AQE never coalesces it, and the shuffle record is a
-      // flat (Long, Array[Byte]) pair
-      val runs = enc(zMin, loMax)
-        .groupByKey(p => (p.tile_id, saltOf(p, NumSalts)))
-        .mapGroups { (key: (Long, Int), rows: Iterator[FeatPayload]) =>
-          (key._1, RunCodec.pack(sortPayloads(rows.toArray)))
-        }
-      val merged = runs.rdd
-        .repartitionAndSortWithinPartitions(part)
-        .mapPartitions { it =>
-          // same-tile runs arrive consecutively (sorted by tile_id);
-          // stream-group them into the k-way merge + assembler, one
-          // pooled MvtLayer per task (pv7 discipline)
-          val pool =
-            if (fmt == "mvt") new MvtLayer("", cfgE.tileExtent) else null
-          val buf = it.buffered
-          Iterator.continually(()).takeWhile(_ => buf.hasNext).flatMap {
-            _ =>
-              val tid = buf.head._1
-              val tileRuns = Seq.newBuilder[Array[FeatPayload]]
-              while (buf.hasNext && buf.head._1 == tid)
-                tileRuns += RunCodec.unpack(tid, buf.next()._2)
-              assembleSorted(cfgE, group, fmt, groupName, tid,
-                mergeRuns(tileRuns.result()), pool)
-          }
-        }
-      branches += spark.createDataset(merged)
-    }
-    branches.result().reduce(_ unionByName _)
+    coverJoin(spark, features, group, cfgE.tileExtent, fmt, zMin, zMax)
+      .mapPartitions { it =>
+        // one reusable encoder per partition (buffers amortized across
+        // every (feature, zoom, tile) row — see FeatureEncoder)
+        val fe = new FeatureEncoder(cfgE, group, fmt)
+        it.flatMap(fe.encode)
+      }
+      .groupByKey(_.tile_id)
+      .flatMapGroups(new AssembleSingles(cfgE, group, fmt, groupName))
   }
 
   /** Single-tile render (S8's production shape; the reference answers
@@ -480,33 +305,6 @@ object Pyramid extends Serializable {
         sortPayloads(rows.toArray).iterator, pool)
   }
 
-}
-
-/** Reduce-partition placement for the salted branch's final merge: the
-  * sampled-heaviest tiles are pinned to LPT-chosen low indices (first
-  * scheduling wave, one fat merge per slot where balance allows); every
-  * other tile hashes uniformly across all partitions. Placement only —
-  * per-tile bytes are identical under any partitioner (pinned by the sbt
-  * byte-parity oracle suite). */
-final class WeightedTilePartitioner(override val numPartitions: Int,
-                                    val pinned: Map[Long, Int])
-    extends org.apache.spark.Partitioner {
-  require(numPartitions > 0, "WeightedTilePartitioner: no partitions")
-  override def getPartition(key: Any): Int = {
-    val tid = key.asInstanceOf[Long]
-    pinned.get(tid) match {
-      case Some(p) => p
-      case None =>
-        math.floorMod(graft.ingest.SpanCodec.mix64(tid).toInt,
-          numPartitions)
-    }
-  }
-  override def equals(o: Any): Boolean = o match {
-    case w: WeightedTilePartitioner =>
-      w.numPartitions == numPartitions && w.pinned == pinned
-    case _ => false
-  }
-  override def hashCode: Int = numPartitions * 31 + pinned.hashCode
 }
 
 /** Reusable per-partition feature encoder — the engine's map-side hot

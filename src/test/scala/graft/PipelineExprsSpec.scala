@@ -100,6 +100,34 @@ class PipelineExprsSpec extends AnyFunSuite {
       // bit-identical, not approximately equal: same IEEE fold
       assert(got == want, s"dist mismatch for vec ${r.getLong(0)}")
     }
+    // edge rows: null array, null element, short and long arrays, NaN —
+    // the Column form gives null distances for the first four (zip_with
+    // pads with nulls) and propagates NaN; the kernel must agree
+    val base = transform(sequence(lit(0), lit(dim - 1)),
+      i => ($"id" + i * 0.01).cast("double"))
+    val edge = spark.range(0, 6).select($"id",
+      when($"id" === 0, lit(null).cast("array<double>"))
+        .when($"id" === 1, transform(base, (v, i) =>
+          when(i === 3, lit(null).cast("double")).otherwise(v)))
+        .when($"id" === 2, slice(base, 1, dim - 1))
+        .when($"id" === 3, concat(base, array(lit(0.5))))
+        .when($"id" === 4, transform(base, (v, i) =>
+          when(i === 5, lit(Double.NaN)).otherwise(v)))
+        .otherwise(base).as("ne"))
+      // barrier: the kernel reads `ne` as a plain attribute, as in
+      // production
+      .repartition(2)
+      .select($"id",
+        PipelineExprs.centroidDists($"ne", cents).as("got"),
+        transform(centLit, c => l2(c, $"ne")).as("want"))
+    def bits(r: org.apache.spark.sql.Row, i: Int) =
+      Option(r.getSeq[java.lang.Double](i)).map(_.map(d =>
+        Option(d).map(java.lang.Double.doubleToLongBits(_))))
+    val edgeRows = edge.collect().sortBy(_.getLong(0))
+    assert(edgeRows.length == 6)
+    val bad = edgeRows.filter(r => bits(r, 1) != bits(r, 2))
+      .map(r => s"row ${r.getLong(0)}: got ${r.get(1)}, want ${r.get(2)}")
+    assert(bad.isEmpty, bad.mkString("dist mismatch on edge rows\n", "\n", ""))
   }
 
   test("in-row dedupMinhash == r5 explode+distinct+groupBy shape") {

@@ -210,25 +210,6 @@ class PropertySpec extends AnyFunSuite {
     if (kind == "node") Some(math.rint(lon * 1e7) / 1e7) else None,
     refs, members)
 
-  test("salted k-way merge ≡ global sort for arbitrary payload splits") {
-    import graft.tile.{FeatPayload, Pyramid}
-    val genKeys = Gen.listOf(for {
-      lr <- Gen.chooseNum(0, 20)
-      kr <- Gen.chooseNum(0, 2)
-      id <- Gen.chooseNum(0L, 1L << 40)
-    } yield (lr, kr, id)).map(_.distinct)
-    check(Prop.forAllNoShrink(genKeys, Gen.chooseNum(1, 16)) {
-      (keys, nSalts) =>
-        val ps = keys.map { case (lr, kr, id) =>
-          FeatPayload(0L, lr, kr, id, Array.empty)
-        }
-        def key(p: FeatPayload) = (p.layer_rank, p.kind_rank, p.id)
-        val runs = ps.groupBy(Pyramid.saltOf(_, nSalts)).values
-          .map(_.sortBy(key).toArray).toSeq
-        Pyramid.mergeRuns(runs).map(key).toSeq == ps.sortBy(key).map(key)
-    })
-  }
-
   test("isParsableLong ≡ toLongOption.isDefined (sint drop rule)") {
     val edge = Seq("", "+", "-", "0", "+5", "-5", "12a", " 5", "5 ",
       "9223372036854775807", "9223372036854775808",
