@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** Large-scale training-data pipeline operators over the `documents` and
   * `embeddings` tables (judge-graded alongside SURVEY.md §2; each op has a
@@ -260,17 +263,9 @@ object PipelineOps {
   /** [[dedupClusters]] over the SimHash pairs — keep-one-per-cluster for
     * the hamming-radius near-dup definition. One row per document;
     * unpaired documents keep themselves. */
-  def dedupSimhashClusters(spark: SparkSession, sfDir: String,
-                           maxIters: Int = 20): DataFrame = {
-    import spark.implicits._
-    val comp = minLabelComponents(spark,
-      dedupSimhashPairs(spark, sfDir).select($"doc_a", $"doc_b"), maxIters)
-    documents(spark, sfDir).select($"doc_id")
-      .join(comp, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"keep_id", $"doc_id").as("keep_id"),
-        coalesce($"cluster_n", lit(1L)).as("cluster_n"))
-  }
+  def dedupSimhashClusters(spark: SparkSession, sfDir: String): DataFrame =
+    clusters(documents(spark, sfDir).select(col("doc_id")),
+      dedupSimhashPairs(spark, sfDir).select(col("doc_a"), col("doc_b")))
 
   /** n-gram Jaccard near-dup pairs (2-shingles, τ = 0.5) via shingle join —
     * set sizes from per-doc distinct counts, no cross join. Shingles with
@@ -375,63 +370,35 @@ object PipelineOps {
 
   /** Near-dup CLUSTER RESOLUTION (VERDICT r3 #2) — the stage every real
     * training-data dedup ends with: LSH candidate pairs → connected
-    * components ([[minLabelComponents]]) → one keeper per cluster. Pairs
-    * alone don't dedup anything; `(doc_id, keep_id)` does.
+    * components ([[components]]) → one keeper per cluster. Pairs alone
+    * don't dedup anything; `(doc_id, keep_id)` does.
+    *
+    * MinHash pairs carry no similarity filter: (a, b) is a pair iff a
+    * and b share a kept (band, sig) bucket, so the pair graph's
+    * components are those of the doc↔bucket bipartite graph. The edges
+    * handed to [[components]] are doc-only stars instead: each kept
+    * bucket links every member to its min doc `m`, so a witness path
+    * a–bucket–b becomes a–m–b and the components are exactly the
+    * bipartite ones. One row per kept posting (O(n·bands)) instead of
+    * one per same-bucket pair (O(Σ bucket²)); one bucket window gives
+    * both the [[MaxBucket]] fence count and `m`.
     *
     * Output: one row per document — `keep_id` = min doc_id of its
     * component (itself when unpaired), `cluster_n` = component size. */
-  def dedupClusters(spark: SparkSession, sfDir: String,
-                    maxIters: Int = 20): DataFrame = {
+  def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // r6 (guide §1.2 "the distributed algorithm" — the order-of-magnitude
-    // lever): MinHash pairs carry NO similarity filter — (a, b) is an
-    // edge iff a and b share a kept (band, sig) bucket — so connected
-    // components over the pair graph are EXACTLY the components of the
-    // doc↔bucket BIPARTITE graph (a–bucket–b is the pair's witness
-    // path). The bipartite edge list is one row per kept posting
-    // (O(n·bands)) instead of one per same-bucket pair (O(Σ bucket²), the
-    // 70-task-sec self-join this op used to run before its loop): the
-    // pair materialization drops out of the op entirely and every
-    // propagation round shuffles posting-count rows, not pair-count.
-    // Equivalence of the OUTPUT is row-for-row: every doc with a kept
-    // posting gets the component min over docs (bucket vertices start at
-    // their local doc-min and never win a min against a real doc id);
-    // singleton-bucket docs resolve to themselves with cluster_n = 1,
-    // identical to the unpaired fallback below. Oracle-checked unchanged.
+    // cached: later calls over the same corpus reuse the signature build
     val sigs = dedupMinhash(spark, sfDir)
       .select($"doc_id", posexplode(array($"sig0", $"sig1", $"sig2",
         $"sig3")).as(Seq("band", "sig")))
       .cache()
-    val keepB = sigs.groupBy($"band", $"sig")
-      .agg(count(lit(1)).as("bc"))
-      .where($"bc" <= MaxBucket)
-      .select($"band", $"sig")
-    val posts = sigs.join(keepB, Seq("band", "sig"))
-    def dKey(id: Column) = struct(lit(0).as("kind"),
-      id.as("num"), lit("").as("s"))
-    def bKey(band: Column, sig: Column) = struct(lit(1).as("kind"),
-      band.cast("long").as("num"), sig.as("s"))
-    val edges = posts.select(dKey($"doc_id").as("src"),
-        bKey($"band", $"sig").as("dst"))
-      .union(posts.select(bKey($"band", $"sig").as("src"),
-        dKey($"doc_id").as("dst")))
-    // bucket vertices seed at their bucket's doc-min — the first
-    // doc→bucket half-hop folded into initialization, so the bipartite
-    // loop needs no more rounds than the pair loop did
-    val init = posts.select(dKey($"doc_id").as("key"),
-        $"doc_id".as("label")).distinct()
-      .union(posts.groupBy($"band", $"sig")
-        .agg(min($"doc_id").as("label"))
-        .select(bKey($"band", $"sig").as("key"), $"label"))
-    val comp = minLabelLoopKeyed(spark, edges, init, maxIters)
-      .where($"key.kind" === 0)
-      .select($"key.num".as("doc_id"), $"label".as("keep_id"))
-    val sizes = comp.groupBy($"keep_id").agg(count(lit(1)).as("cluster_n"))
-    documents(spark, sfDir).select($"doc_id")
-      .join(comp.join(sizes, Seq("keep_id")), Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"keep_id", $"doc_id").as("keep_id"),
-        coalesce($"cluster_n", lit(1L)).as("cluster_n"))
+    val bucket = Window.partitionBy($"band", $"sig")
+    val star = sigs
+      .select($"doc_id", count(lit(1)).over(bucket).as("bc"),
+        min($"doc_id").over(bucket).as("m"))
+      .where($"bc" <= MaxBucket && $"doc_id" =!= $"m")
+      .select($"doc_id", $"m")
+    clusters(documents(spark, sfDir).select($"doc_id"), star)
   }
 
   /** [[dedupClusters]] over the n-gram Jaccard pairs — keep-one-per-
@@ -440,137 +407,126 @@ object PipelineOps {
     * n-gram Jaccard / embedding) ends in an actionable `(doc_id,
     * keep_id)`. One row per document; unpaired documents keep
     * themselves (cluster_n = 1). */
-  def dedupNgramJaccardClusters(spark: SparkSession, sfDir: String,
-                                maxIters: Int = 20): DataFrame = {
-    import spark.implicits._
-    val comp = minLabelComponents(spark,
-      dedupNgramJaccard(spark, sfDir).select($"doc_a", $"doc_b"), maxIters)
-    documents(spark, sfDir).select($"doc_id")
-      .join(comp, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"keep_id", $"doc_id").as("keep_id"),
-        coalesce($"cluster_n", lit(1L)).as("cluster_n"))
-  }
+  def dedupNgramJaccardClusters(spark: SparkSession,
+                                sfDir: String): DataFrame =
+    clusters(documents(spark, sfDir).select(col("doc_id")),
+      dedupNgramJaccard(spark, sfDir).select(col("doc_a"), col("doc_b")))
 
   /** [[dedupClusters]] over the EMBEDDING near-dup pairs — the same
     * keep-one-per-cluster tail composed onto [[dedupEmbedding]], so the
     * embedding variant (like the MinHash one) ends in an actionable
     * `(vec_id, keep_id)` instead of stopping at pairs. One row per
     * vector; unpaired vectors keep themselves (cluster_n = 1). */
-  def dedupEmbeddingClusters(spark: SparkSession, sfDir: String,
-                             maxIters: Int = 20): DataFrame = {
-    import spark.implicits._
-    val comp = minLabelComponents(spark,
-      dedupEmbedding(spark, sfDir).select($"vec_a", $"vec_b"), maxIters)
-      .toDF("vec_id", "keep_id", "cluster_n")
-    embeddings(spark, sfDir).select($"vec_id")
-      .join(comp, Seq("vec_id"), "left")
-      .select($"vec_id",
-        coalesce($"keep_id", $"vec_id").as("keep_id"),
-        coalesce($"cluster_n", lit(1L)).as("cluster_n"))
+  def dedupEmbeddingClusters(spark: SparkSession, sfDir: String): DataFrame =
+    clusters(embeddings(spark, sfDir).select(col("vec_id")),
+      dedupEmbedding(spark, sfDir).select(col("vec_a"), col("vec_b")))
+
+  /** The keep-one-per-cluster tail of every `*Clusters` op: one row per
+    * id of the one-column frame `ids` — its [[components]] keeper and
+    * size over `pairs`, or itself and 1 when it is on no pair. */
+  private def clusters(ids: DataFrame, pairs: DataFrame): DataFrame = {
+    val id = ids.columns.head
+    val comp = components(ids.sparkSession, pairs)
+      .withColumnRenamed("doc_id", id)
+    ids.join(comp, Seq(id), "left")
+      .select(col(id), coalesce(col("keep_id"), col(id)).as("keep_id"),
+        coalesce(col("cluster_n"), lit(1L)).as("cluster_n"))
   }
 
-  /** Connected components of a candidate-pair graph by iterative
-    * min-label propagation (Pregel-style) — the shared tail of every
-    * dedup variant. Input: one row per undirected pair (a, b); output:
-    * one row per PAIRED id — (doc_id, keep_id = component min,
-    * cluster_n = component size). Each round every vertex takes the min
-    * of its own label and its neighbors'; `localCheckpoint` per round
-    * cuts the lineage exactly like the relation dep-closure loop (Dig).
-    * Rounds needed = component diameter — near-dup clusters are
-    * collision quasi-cliques (diameter ≈ 2-3), so the loop converges in
-    * a handful of shuffles at any corpus size; the edge list, not the
-    * corpus, is the working set. A graph that hasn't converged by
-    * `maxIters` fails LOUDLY rather than returning wrong clusters — for
-    * adversarial long-chain graphs the documented scale-out is the
-    * large-star/small-star variant (alternation halves path lengths →
-    * O(log n) rounds), which this corpus shape does not need.
+  /** Connected components of an undirected pair graph by alternating
+    * large-star / small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014) — the shared tail of
+    * every dedup variant. Input: one row per pair (a, b) of long ids, in
+    * any orientation, duplicates allowed, self-loops dropped. Output: one
+    * row per id on an edge — (doc_id, keep_id = component min, cluster_n
+    * = component size).
     *
-    * Constant factors (VERDICT r4 wrong #3 — the loop was Spark-overhead
-    * bound at ~2 full-plan actions per round): the edge list is
-    * pre-partitioned by `src` ONCE (repartition + cache), so each
-    * round's message join reuses that exchange and shuffles only the
-    * (smaller) label frame; and convergence rides THROUGH the round's
-    * one checkpoint pass as a `chg` flag computed inside the same
-    * min-aggregation (the vertex's own previous label travels as a
-    * tagged union row), so the per-round convergence check is a
-    * filter-isEmpty over the already-checkpointed partitions — no second
-    * full-plan action, no extra aggregation exchange. */
-  /** Min-label propagation over an EXPLICIT edge list of struct vertex
-    * keys with caller-supplied initial labels (r6) — the loop body of
-    * [[minLabelComponents]] generalized so [[dedupClusters]] can run it
-    * on the doc↔bucket bipartite graph (vertices of two kinds) instead
-    * of materialized pairs. Same per-round shape: pre-partitioned cached
-    * edges, one checkpointed action per round, the own/prev tagged-union
-    * convergence flag. Returns (key, label) at the fixpoint; fails
-    * loudly past `maxIters` like the pair loop. */
-  private def minLabelLoopKeyed(spark: SparkSession, edges0: DataFrame,
-                                init: DataFrame,
-                                maxIters: Int): DataFrame = {
+    * Edges live as an `RDD[(Long, Long)]`, one record per edge oriented
+    * (hi, lo). A round is a large-star step then a small-star step; each
+    * keys its edges on (u, v), runs `repartitionAndSortWithinPartitions`
+    * with a partitioner on u alone and streams the sorted groups
+    * ([[starStep]]): the first v of a group is u's min neighbour, so no
+    * vertex buffers its neighbour list, and consecutive duplicates are
+    * skipped in the stream.
+    *   - large-star at u links every HIGHER neighbour v to m = min(u,
+    *     Γ(u)): emits (v, m) for v > u;
+    *   - small-star at u links u and every LOWER neighbour v to m =
+    *     min(Γ(u) below u): emits (u, m) and (v, m) for v ≠ m.
+    * The alternation halves path lengths, so rounds grow as O(log n)
+    * with no cap (a 1,000-node path takes about ten).
+    *
+    * One round is one Spark job of three stages: the small-star output
+    * is `localCheckpoint`ed (persisted, lineage cut) and one `count`
+    * materialises it; the previous round is unpersisted after that.
+    * Convergence rides through the same job on an accumulator that
+    * counts edges that moved: large-star finds a vertex with both a lower
+    * and a higher neighbour, or small-star finds one with two distinct
+    * lower ones. When neither happens the round's input was already a
+    * set of stars centred on the component mins — both steps then
+    * reproduce it — so the loop stops after one confirming round, and
+    * every non-root v has exactly one edge (v, m): keep_id = m, and
+    * cluster_n = leaves of m + 1. */
+  private[pipeline] def components(spark: SparkSession,
+                                   pairs: DataFrame): DataFrame = {
     import spark.implicits._
-    val edges = edges0.toDF("src", "dst")
-      .repartition(spark.sparkContext.defaultParallelism, $"src").cache()
-    var labels = init.toDF("key", "label").localCheckpoint()
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val msgs = edges.join(labels, edges("src") === labels("key"))
-        .select(edges("dst").as("key"), labels("label"))
-      val next = labels.select($"key", $"label", lit(true).as("own"))
-        .union(msgs.select($"key", $"label", lit(false).as("own")))
-        .groupBy($"key")
-        .agg(min($"label").as("label"),
-          min(when($"own", $"label")).as("prev"))
-        .withColumn("chg", $"label" < $"prev")
-        .localCheckpoint()
-      converged = next.where($"chg").isEmpty
-      labels = next.select($"key", $"label")
-      it += 1
+    val sc = spark.sparkContext
+    val byU = new ByFirst(sc.defaultParallelism)
+    def sorted(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      e.map((_, ())).repartitionAndSortWithinPartitions(byU).keys
+    var edges = pairs.rdd.flatMap { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      if (a == b) None else Some((math.max(a, b), math.min(a, b)))
     }
-    require(converged,
-      s"minLabelLoopKeyed: not converged after $maxIters rounds — " +
-        "component diameter exceeds the cap; use the " +
-        "large-star/small-star variant")
-    edges.unpersist()
-    labels
+    var moved = true
+    while (moved) {
+      val chg = sc.longAccumulator
+      val large = sorted(edges.flatMap(e => Iterator(e, e.swap)))
+        .mapPartitions(starStep(large = true, chg))
+      val next = sorted(large).mapPartitions(starStep(large = false, chg))
+        .localCheckpoint()
+      next.count()
+      edges.unpersist(blocking = false)
+      edges = next
+      moved = chg.sum > 0
+    }
+    val star = Window.partitionBy($"keep_id")
+    edges.toDF("doc_id", "keep_id")
+      .select($"doc_id", $"keep_id",
+        (count(lit(1)).over(star) + 1).as("cluster_n"),
+        (min($"doc_id").over(star) === $"doc_id").as("first"))
+      // each root rides on the row of its lowest leaf
+      .select(explode(when($"first", array($"doc_id", $"keep_id"))
+          .otherwise(array($"doc_id"))).as("doc_id"),
+        $"keep_id", $"cluster_n")
   }
 
-  private def minLabelComponents(spark: SparkSession, pairs: DataFrame,
-                                 maxIters: Int): DataFrame = {
-    import spark.implicits._
-    val p = pairs.toDF("a", "b")
-    val edges = p.union(p.select($"b", $"a")).toDF("src", "dst")
-      .repartition($"src").cache()
-    var labels = edges.select($"src".as("doc_id")).distinct()
-      .withColumn("label", $"doc_id")
-      .localCheckpoint()
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val msgs = edges.join(labels, edges("src") === labels("doc_id"))
-        .select(edges("dst").as("doc_id"), labels("label"))
-      // own rows tagged true: min(when(own)) recovers the PREVIOUS label
-      // inside the same shuffle, making "did anything change" a local
-      // column instead of a second aggregation action
-      val next = labels.select($"doc_id", $"label", lit(true).as("own"))
-        .union(msgs.select($"doc_id", $"label", lit(false).as("own")))
-        .groupBy($"doc_id")
-        .agg(min($"label").as("label"),
-          min(when($"own", $"label")).as("prev"))
-        .withColumn("chg", $"label" < $"prev")
-        .localCheckpoint() // the ONE materializing action of the round
-      converged = next.where($"chg").isEmpty // cached-partition scan only
-      labels = next.select($"doc_id", $"label")
-      it += 1
+  /** One large-star (`large`) or small-star step of [[components]] over a
+    * partition of (u, v) edges sorted by u then v: emits each output
+    * edge as (hi, lo) and adds to `chg` for every edge that moved. */
+  private def starStep(large: Boolean, chg: LongAccumulator)(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var open = false
+    var u, m, last = 0L
+    it.flatMap { case (a, v) =>
+      val head = !open || a != u
+      val dup = !head && v == last
+      if (head) { open = true; u = a; m = math.min(a, v) }
+      last = v
+      if (dup) None
+      else if (large) {
+        if (v < u) None
+        else { if (m < u) chg.add(1); Some((v, m)) }
+      } else if (head) Some((u, m))
+      else { chg.add(1); Some((v, m)) }
     }
-    require(converged,
-      s"minLabelComponents: not converged after $maxIters rounds — " +
-        "component diameter exceeds the cap; use the " +
-        "large-star/small-star variant")
-    edges.unpersist()
-    val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_n"))
-    labels.join(sizes, "label")
-      .select($"doc_id", $"label".as("keep_id"), $"cluster_n")
+  }
+
+  /** Partitions (u, v) edge keys by u alone, so all of a vertex's edges
+    * meet in one sorted partition. */
+  private final class ByFirst(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = Math.floorMod(
+      java.lang.Long.hashCode(key.asInstanceOf[(Long, Long)]._1),
+      numPartitions)
   }
 
   /** Plane component (table t, plane p, dim i) for the embedding near-dup

@@ -461,7 +461,7 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "test corpus produced no candidate pairs")
     // independent union-find (path-halving), nothing shared with the
-    // engine's label-propagation loop
+    // engine's large-star/small-star components routine
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x0: Long): Long = {
       var x = x0
@@ -564,7 +564,7 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "sf0.01 embeddings produced no near-dup pairs")
     // independent union-find (path-halving), nothing shared with the
-    // engine's label-propagation loop
+    // engine's large-star/small-star components routine
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x0: Long): Long = {
       var x = x0
