@@ -43,6 +43,21 @@ object PipelineOps {
   private def candParts(spark: SparkSession): Int =
     4 * spark.sparkContext.defaultParallelism
 
+  /** Hot-bucket fence of the pair ops: the posting rows of each bucket
+    * (`keys`) of at most `cap` rows, hash-partitioned on `keys` into
+    * [[candParts]] partitions (explicit: AQE would coalesce the CPU-heavy
+    * self-join that follows to a few tasks). The window count is the
+    * grouped count and needs no exchange of its own, nor does a self-join
+    * on `keys`; AQE gives each join side over a cached frame its own copy
+    * of the exchange. Null keys, kept here, find no equi-join partner. */
+  private def fenced(posts: DataFrame, keys: Seq[String],
+                     cap: Int): DataFrame = {
+    val ks = keys.map(col)
+    posts.repartition(candParts(posts.sparkSession), ks: _*)
+      .withColumn("bc", count(lit(1)).over(Window.partitionBy(ks: _*)))
+      .where(col("bc") <= cap).drop("bc")
+  }
+
   /** Corpus table for ops whose per-row map work dominates (hashing /
     * shingling / signature builds): sub-parallelism inputs are spread.
     * Cheap single-pass ops read [[documentsRaw]] instead — for them the
@@ -112,7 +127,8 @@ object PipelineOps {
     * density the docs are exact/near-exact duplicates that `dedupExact`
     * already groups, and every remaining band still gets its chance. The
     * cap is mirrored verbatim in the DuckDB oracles, so parity is exact
-    * at every scale, not just where the cap never binds. */
+    * at every scale, not just where the cap never binds. Inclusive:
+    * [[fenced]] keeps a bucket of exactly this many docs whole. */
   val MaxBucket = 256
 
   /** LSH band join: near-dup candidate pairs = any band signature equal.
@@ -120,25 +136,14 @@ object PipelineOps {
     * buckets larger than [[MaxBucket]] are dropped (documented cap). */
   def dedupMinhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // cache: the signature build is consumed three times below (bucket
-    // histogram + both self-join sides). The r5 shape got that reuse for
-    // free from ReuseExchange (its last op was a groupBy exchange); the
-    // r6 in-row [[dedupMinhash]] has NO exchange to reuse, so without
-    // the cache every consumer would re-run the md5 scan (measured: the
-    // op tripled). One row per (doc, band) — 4n narrow rows.
+    // cached: later calls over the same corpus, and [[dedupClusters]]
+    // (whose `sigs` is the same plan), reuse the signature build instead
+    // of re-running the md5 scan. One row per (doc, band) — 4n narrow rows.
     val sigs = dedupMinhash(spark, sfDir)
       .select($"doc_id", posexplode(array($"sig0", $"sig1", $"sig2",
         $"sig3")).as(Seq("band", "sig")))
       .cache()
-    val keep = sigs.groupBy($"band", $"sig")
-      .agg(count(lit(1)).as("bc"))
-      .where($"bc" <= MaxBucket)
-      .select($"band", $"sig")
-    // explicit width on the self-join exchange: the pair-explosion
-    // stage is CPU-heavy on tiny shuffle bytes — AQE would coalesce it
-    // to single-digit tasks (see candParts)
-    val f = sigs.join(keep, Seq("band", "sig"))
-      .repartition(candParts(spark), $"band", $"sig")
+    val f = fenced(sigs, Seq("band", "sig"), MaxBucket)
     val a = f.select($"doc_id".as("doc_a"), $"band", $"sig")
     val b = f.select($"doc_id".as("doc_b"), $"band", $"sig")
     a.join(b, Seq("band", "sig"))
@@ -232,21 +237,13 @@ object PipelineOps {
     import spark.implicits._
     val blk = dedupSimhashBlocks(spark, sfDir)
       .cache() // one fingerprint build shared by both posting sides
-    // r6: the posting rows carry the WHOLE 4-block fingerprint, so the
-    // hamming verify is computed inline in the candidate self-join and
-    // reduced with the per-pair block count in the SAME aggregation —
-    // the previous shape re-joined the fingerprint table twice onto the
-    // grouped pairs (two more shuffles of the pair set). Hamming is
-    // identical for every posting row of a pair, so min() in the
-    // aggregate recovers exactly the value the join-back computed.
+    // the posting rows carry the whole 4-block fingerprint, so hamming is
+    // computed in the candidate self-join and reduced with the per-pair
+    // block count in the same aggregation (equal on every posting row of
+    // a pair, so min() recovers it) — no join back to the fingerprints.
     val posts = blk.select($"doc_id", $"b0", $"b1", $"b2", $"b3",
       posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("blk", "v")))
-    val keep = posts.groupBy($"blk", $"v")
-      .agg(count(lit(1)).as("bc"))
-      .where($"bc" <= MaxBucket)
-      .select($"blk", $"v")
-    val f = posts.join(keep, Seq("blk", "v"))
-      .repartition(candParts(spark), $"blk", $"v") // see candParts
+    val f = fenced(posts, Seq("blk", "v"), MaxBucket)
     // hamming over ALL four blocks (the fence gates candidates only)
     val ham = (0 until 4).flatMap { k =>
       val x = col(s"a.b$k").bitwiseXOR(col(s"b.b$k"))
@@ -264,8 +261,18 @@ object PipelineOps {
     * the hamming-radius near-dup definition. One row per document;
     * unpaired documents keep themselves. */
   def dedupSimhashClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clusters(documents(spark, sfDir).select(col("doc_id")),
+    clusters(documentsRaw(spark, sfDir).select(col("doc_id")),
       dedupSimhashPairs(spark, sfDir).select(col("doc_a"), col("doc_b")))
+
+  /** Distinct 2-shingles per doc, stop-shingles (document frequency >
+    * [[MaxBucket]]) dropped, cached: the input of [[dedupNgramJaccard]]
+    * and [[decontaminate]]. The distinct runs in the fence's `sh`
+    * partitioning, which already clusters (doc_id, sh), and Spark plans
+    * the fence's repeat of that repartition away. */
+  private def keptShingles(d: DataFrame): DataFrame = fenced(
+    d.select(col("doc_id"), explode(shingles2(words(col("text")))).as("sh"))
+      .repartition(candParts(d.sparkSession), col("sh")).distinct(),
+    Seq("sh"), MaxBucket).cache()
 
   /** n-gram Jaccard near-dup pairs (2-shingles, τ = 0.5) via shingle join —
     * set sizes from per-doc distinct counts, no cross join. Shingles with
@@ -275,12 +282,7 @@ object PipelineOps {
     * oracle. */
   def dedupNgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val d = documents(spark, sfDir)
-    val sh0 = d.select($"doc_id",
-      explode(shingles2(words($"text"))).as("sh")).distinct()
-    val keepSh = sh0.groupBy($"sh").agg(count(lit(1)).as("df"))
-      .where($"df" <= MaxBucket).select($"sh")
-    val sh = sh0.join(keepSh, Seq("sh")).cache()
+    val sh = keptShingles(documents(spark, sfDir))
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.as("a").join(sh.as("b"), Seq("sh"))
       .where($"a.doc_id" < $"b.doc_id")
@@ -305,10 +307,9 @@ object PipelineOps {
     * production the holdout frame is simply a second table with the same
     * (doc_id, text) shape.
     *
-    * Mechanics reuse [[dedupNgramJaccard]]'s machinery: distinct
-    * 2-shingles per doc, stop-shingles (df > [[MaxBucket]]) dropped from
-    * both sides (an ultra-common phrase is not leakage evidence and is
-    * the hot join key at corpus scale), then one membership equi-join
+    * Mechanics: [[keptShingles]], as in [[dedupNgramJaccard]], on both
+    * sides (an ultra-common phrase is not leakage evidence and is the hot
+    * join key at corpus scale), then one membership equi-join
     * corpus-shingle → holdout-shingle-set. Per-shingle join fan-out is
     * bounded by the cap, so no key goes quadratic at 100 TB; the holdout
     * side is `distinct` shingles only (at real scale: the natural
@@ -321,11 +322,7 @@ object PipelineOps {
                     tau: Double = 0.8): DataFrame = {
     import spark.implicits._
     val d = documents(spark, sfDir)
-    val sh0 = d.select($"doc_id",
-      explode(shingles2(words($"text"))).as("sh")).distinct()
-    val keepSh = sh0.groupBy($"sh").agg(count(lit(1)).as("df"))
-      .where($"df" <= MaxBucket).select($"sh")
-    val sh = sh0.join(keepSh, Seq("sh")).cache()
+    val sh = keptShingles(d)
     val hold = sh.where($"doc_id" % 37 === 0).select($"sh").distinct()
     val corp = sh.where($"doc_id" % 37 =!= 0)
     val sizes = corp.groupBy($"doc_id").agg(count(lit(1)).as("n_ngrams"))
@@ -398,7 +395,7 @@ object PipelineOps {
         min($"doc_id").over(bucket).as("m"))
       .where($"bc" <= MaxBucket && $"doc_id" =!= $"m")
       .select($"doc_id", $"m")
-    clusters(documents(spark, sfDir).select($"doc_id"), star)
+    clusters(documentsRaw(spark, sfDir).select($"doc_id"), star)
   }
 
   /** [[dedupClusters]] over the n-gram Jaccard pairs — keep-one-per-
@@ -409,7 +406,7 @@ object PipelineOps {
     * themselves (cluster_n = 1). */
   def dedupNgramJaccardClusters(spark: SparkSession,
                                 sfDir: String): DataFrame =
-    clusters(documents(spark, sfDir).select(col("doc_id")),
+    clusters(documentsRaw(spark, sfDir).select(col("doc_id")),
       dedupNgramJaccard(spark, sfDir).select(col("doc_a"), col("doc_b")))
 
   /** [[dedupClusters]] over the EMBEDDING near-dup pairs — the same
@@ -418,12 +415,13 @@ object PipelineOps {
     * `(vec_id, keep_id)` instead of stopping at pairs. One row per
     * vector; unpaired vectors keep themselves (cluster_n = 1). */
   def dedupEmbeddingClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clusters(embeddings(spark, sfDir).select(col("vec_id")),
+    clusters(embeddingsRaw(spark, sfDir).select(col("vec_id")),
       dedupEmbedding(spark, sfDir).select(col("vec_a"), col("vec_b")))
 
   /** The keep-one-per-cluster tail of every `*Clusters` op: one row per
     * id of the one-column frame `ids` — its [[components]] keeper and
-    * size over `pairs`, or itself and 1 when it is on no pair. */
+    * size over `pairs`, or itself and 1 when it is on no pair. `ids` is
+    * a raw read: spreading one id column is an exchange for nothing. */
   private def clusters(ids: DataFrame, pairs: DataFrame): DataFrame = {
     val id = ids.columns.head
     val comp = components(ids.sparkSession, pairs)
@@ -599,12 +597,7 @@ object PipelineOps {
     val tb = eb.select($"vec_id",
       posexplode(array((0 until nTables).map(t => col(s"bkt$t")): _*))
         .as(Seq("table", "bkt")))
-    val keep = tb.groupBy($"table", $"bkt")
-      .agg(count(lit(1)).as("bc"))
-      .where($"bc" <= maxBucket)
-      .select($"table", $"bkt")
-    val kept = tb.join(keep, Seq("table", "bkt"))
-      .repartition(candParts(spark), $"table", $"bkt") // see candParts
+    val kept = fenced(tb, Seq("table", "bkt"), maxBucket)
     val cand = kept.as("a").join(kept.as("b"), Seq("table", "bkt"))
       .where($"a.vec_id" < $"b.vec_id")
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"))
@@ -758,7 +751,10 @@ object PipelineOps {
     * (LSH) / "other probes" fallback (IVF) applies to NEAR-duplicates of
     * a hot pile — an EXACT duplicate of the pile hashes into the same
     * over-cap bucket in every table and gets zero candidates by design
-    * (pinned by the hot-bucket test; dedupExact owns that regime). */
+    * (pinned by the hot-bucket test; dedupExact owns that regime).
+    * [[dedupEmbedding]] fences with [[fenced]]; the LSH and IVF ops join
+    * a broadcast grouped count instead, as a window would shuffle their
+    * embedding-carrying postings. */
   val AnnMaxBucket = 4 * AnnTargetBucket
 
   /** Target IVF inverted-list size (nClusters = ⌈n / target⌉). */

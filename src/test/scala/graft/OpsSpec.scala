@@ -259,34 +259,44 @@ class OpsSpec extends AnyFunSuite {
     assert(got == Set((1L, 1, 11L), (1L, 2, 10L)))
   }
 
-  test("hot-bucket cap: 1k identical docs produce no quadratic stage") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hot").toString
-    val docs = (0 until 1000).map(i =>
-      (f"d$i%04d", "the same exact words repeated in every document here",
-        "en"))
-    docs.toDF("doc_id", "text", "lang")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    val t0 = System.nanoTime()
-    // every band bucket has 1000 members > MaxBucket → dropped → 0 pairs
-    val pairs = graft.pipeline.PipelineOps.dedupMinhashPairs(spark, dir)
-      .count()
-    val jac = graft.pipeline.PipelineOps.dedupNgramJaccard(spark, dir)
-      .count()
-    // identical docs → identical simhash blocks → every (blk, v) bucket
-    // has 1000 members > MaxBucket → fenced → 0 candidate pairs
-    val sp = graft.pipeline.PipelineOps.dedupSimhashPairs(spark, dir)
-      .count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(pairs == 0L, s"pairs=$pairs")
-    assert(jac == 0L, s"jaccard pairs=$jac")
-    assert(sp == 0L, s"simhash pairs=$sp")
-    // 1000² = 1M-row pair explosions would take far longer than this
-    assert(sec < 60.0, s"took $sec s")
-    // the identical docs ARE still caught — by exact dedup
-    val ex = graft.pipeline.PipelineOps.dedupExact(spark, dir).collect()
-    assert(ex.length == 1 && ex.head.getLong(1) == 1000L)
+  // n identical docs share every bucket of every pair op: the 1k pile
+  // must be fenced without a quadratic stage, and the cap is inclusive —
+  // MaxBucket docs pair completely, one more pairs not at all
+  private val cap = graft.pipeline.PipelineOps.MaxBucket
+  for ((n, name) <- Seq(
+      1000 -> "1k identical docs produce no quadratic stage",
+      cap -> s"$cap identical docs (at the cap) pair completely",
+      cap + 1 -> s"${cap + 1} identical docs (one over) pair none")) {
+    test(s"hot-bucket cap: $name") {
+      import spark.implicits._
+      val dir =
+        java.nio.file.Files.createTempDirectory("graft_hot").toString
+      val docs = (0 until n).map(i =>
+        (f"d$i%04d", "the same exact words repeated in every document here",
+          "en"))
+      docs.toDF("doc_id", "text", "lang")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+      val want = if (n <= cap) n.toLong * (n - 1) / 2 else 0L
+      val t0 = System.nanoTime()
+      // every band bucket, (blk, v) block bucket and shingle holds all n
+      // docs: kept whole up to MaxBucket, dropped above it
+      val pairs = graft.pipeline.PipelineOps.dedupMinhashPairs(spark, dir)
+        .count()
+      val jac = graft.pipeline.PipelineOps.dedupNgramJaccard(spark, dir)
+        .count()
+      val sp = graft.pipeline.PipelineOps.dedupSimhashPairs(spark, dir)
+        .count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(pairs == want, s"pairs=$pairs")
+      assert(jac == want, s"jaccard pairs=$jac")
+      assert(sp == want, s"simhash pairs=$sp")
+      // 1000² = 1M-row pair explosions would take far longer than this
+      assert(sec < 60.0, s"took $sec s")
+      // the identical docs ARE still caught — by exact dedup
+      val ex = graft.pipeline.PipelineOps.dedupExact(spark, dir).collect()
+      assert(ex.length == 1 && ex.head.getLong(1) == n.toLong)
+    }
   }
 
   test("dedup_embedding: exact-cosine subset of brute force, recall floor") {
@@ -503,7 +513,6 @@ class OpsSpec extends AnyFunSuite {
     val bc = scala.collection.mutable.Map
       .empty[(Int, Int), Int].withDefaultValue(0)
     for ((_, bs) <- blocks; k <- 0 until 4) bc((k, bs(k))) += 1
-    val cap = graft.pipeline.PipelineOps.MaxBucket
     def ham(a: Array[Int], b: Array[Int]): Int =
       (0 until 4).map(k => Integer.bitCount(a(k) ^ b(k))).sum
     val ids = blocks.keys.toArray.sorted
