@@ -18,6 +18,12 @@ import org.apache.spark.sql.execution.ExplainMode
   *   runMain graft.BenchExtra time <reps> [name ...]
   *     — run each query through the noop sink `reps` times and print one
   *       JSON line with per-rep seconds.
+  *   runMain graft.BenchExtra stages <name>
+  *     — run one query twice (the first warms the JIT) and print the
+  *       second run's stages by task-seconds.
+  *   runMain graft.BenchExtra dig
+  *     — dig the bench corpus twice and print the second dig's stages by
+  *       task-seconds.
   *
   * Same session configuration as [[Bench]] (env-parameterised master,
   * shuffle partitions, AQE) so plans and timings match the gate record's
@@ -27,6 +33,14 @@ object BenchExtra {
 
   private def num(v: Double): String =
     String.format(Locale.ROOT, "%.3f", Double.box(v))
+
+  private def printStages(stats: StageStatsListener, limit: Int): Unit = {
+    println("  (id, name, tasks, wall s, task s, max task s)")
+    stats.stages.sortBy(-_.taskS).take(limit).foreach { st =>
+      println(f"  ${st.id}%5d ${st.name}%-60s ${st.tasks}%5d ${st.wallS}%7.2f" +
+        f" ${st.taskS}%8.2f ${st.maxTaskS}%8.2f")
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     Locale.setDefault(Locale.ROOT)
@@ -100,60 +114,25 @@ object BenchExtra {
         out.append("}")
         println("NOOP_TIMES " + out.result())
       case "stages" =>
-        // run one declared query twice (warm JIT) with a per-stage
-        // listener; print stages of the second run sorted by task-sec
-        import org.apache.spark.scheduler._
         val name = args(1)
-        val done = new scala.collection.mutable.ArrayBuffer[
-          (Int, String, Int, Double, Double)]()
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onStageCompleted(
-              s: SparkListenerStageCompleted): Unit = {
-            val i = s.stageInfo
-            val wall = (i.completionTime.getOrElse(0L) -
-              i.submissionTime.getOrElse(0L)) / 1e3
-            done.synchronized {
-              done += ((i.stageId, i.name.split("\n")(0).take(60),
-                i.numTasks, wall, i.taskMetrics.executorRunTime / 1e3))
-            }
-          }
-        })
+        val stats = new StageStatsListener
+        spark.sparkContext.addSparkListener(stats)
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         println(f"COLD ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        done.synchronized(done.clear())
+        Thread.sleep(500)
+        stats.clear()
         val t1 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t1) / 1e9
         Thread.sleep(500)
         println(f"WARM $name wall=$wall%.2f s; stages by task-sec:")
-        done.synchronized(done.toSeq).sortBy(-_._5).take(25).foreach {
-          case (id, nm, nt, w, ts) =>
-            println(f"  $id%5d $nm%-60s $nt%5d ${w}%7.2f ${ts}%8.2f")
-        }
+        printStages(stats, 25)
       case "dig" =>
-        // bench-corpus dig with a per-stage listener: where do the
-        // seconds go (stage name, task count, total task time, max task)
-        import org.apache.spark.scheduler._
         import spark.implicits._
-        val stages = new java.util.concurrent.ConcurrentHashMap[
-          Int, (String, Long)]()
-        val done = new scala.collection.mutable.ArrayBuffer[
-          (Int, String, Int, Double, Double)]()
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onStageCompleted(
-              s: SparkListenerStageCompleted): Unit = {
-            val i = s.stageInfo
-            val wall = (i.completionTime.getOrElse(0L) -
-              i.submissionTime.getOrElse(0L)) / 1e3
-            done.synchronized {
-              done += ((i.stageId, i.name.split("\n")(0).take(60),
-                i.numTasks, wall,
-                i.taskMetrics.executorRunTime / 1e3))
-            }
-          }
-        })
+        val stats = new StageStatsListener
+        spark.sparkContext.addSparkListener(stats)
         val cfg = graft.core.EngineCfg.default
         val p = graft.ingest.CorpusGen.bench
         val docs = spark.range(0,
@@ -165,18 +144,16 @@ object BenchExtra {
         entities.count()
         // warm rep (JIT) then the measured rep
         graft.dig.Dig.features(spark, entities, cfg).count()
-        done.synchronized(done.clear())
+        Thread.sleep(500)
+        stats.clear()
         val t0 = System.nanoTime()
         val n = graft.dig.Dig.features(spark, entities, cfg).count()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500)
-        println(f"DIG n=$n wall=$wall%.2f s; stages (id, name, tasks, wall s, task-sec):")
-        done.synchronized(done.toSeq).sortBy(-_._5).foreach {
-          case (id, nm, nt, w, ts) =>
-            println(f"  $id%5d $nm%-60s $nt%5d ${w}%7.2f ${ts}%8.2f")
-        }
+        println(f"DIG n=$n wall=$wall%.2f s; stages by task-sec:")
+        printStages(stats, Int.MaxValue)
       case other =>
-        System.err.println(s"unknown mode $other (plans|time|dig)")
+        System.err.println(s"unknown mode $other (plans|time|stages|dig)")
     }
     spark.stop()
   }

@@ -6,7 +6,9 @@
 #
 #   tools/spark_submit.sh graft.Bench
 #   tools/spark_submit.sh graft.Verify /root/testdata/sf0.01 /tmp/out
-#   tools/spark_submit.sh graft.ScalingBench
+#
+# graft.ScalingBench starts its own pinned sample JVMs from its classpath,
+# so run it with `sbt -batch "runMain graft.ScalingBench [outDir]"`.
 set -e
 cd "$(dirname "$0")/.."
 CLASS=${1:?usage: spark_submit.sh <mainClass> [args...]}; shift
