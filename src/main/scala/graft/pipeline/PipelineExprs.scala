@@ -33,7 +33,8 @@ object PipelineExprHelpers {
     * matrix(t)(p)(i): plane component; returns one int bucket per table
     * (bit p set iff dot(plane_tp, e) > 0). Width or null mismatches give
     * bucket 0, exactly like the Column form (`when(null > 0, …)
-    * .otherwise(0)` summed over planes). */
+    * .otherwise(0)` summed over planes); a NaN dot sets its bit, as SQL
+    * orders NaN above every number. */
   def lshBuckets(e: ArrayData, elemFloat: Boolean,
                  matrix: Array[Array[Array[Double]]]): ArrayData = {
     val nT = matrix.length
@@ -60,7 +61,7 @@ object PipelineExprHelpers {
             var s = 0.0
             var j = 0
             while (j < dim) { s += pl(j) * ev(j); j += 1 }
-            if (s > 0) bkt += (1 << p)
+            if (s > 0 || java.lang.Double.isNaN(s)) bkt += (1 << p)
             p += 1
           }
           out(t) = bkt
@@ -72,14 +73,18 @@ object PipelineExprHelpers {
   }
 
   /** Squared L2 distance of one (double-array) row against every row of
-    * a constant centroid matrix, in centroid order — the loop form of
-    * `transform(centroidLit, c => aggregate(zip_with(c, ne, (x,y) =>
-    * (x-y)²), 0.0, +))`, same subtraction and fold order. A null row, a
-    * null element or a width that differs from the centroid's gives a
-    * null distance, exactly like the Column form (`zip_with` pads the
-    * shorter side with nulls, and a null term nulls the fold). */
-  def centroidDists(e: ArrayData,
-                    matrix: Array[Array[Double]]): ArrayData = {
+    * the constant centroid matrix `matrices(cell)`, in centroid order —
+    * the loop form of `transform(get(matricesLit, cell), c =>
+    * aggregate(zip_with(c, ne, (x,y) => (x-y)²), 0.0, +))`, same
+    * subtraction and fold order. A null (passed as -1) or out-of-range
+    * cell gives a null array, as `get` does. A null row, a null element
+    * or a width that differs from the centroid's gives a null distance,
+    * exactly like the Column form (`zip_with` pads the shorter side with
+    * nulls, and a null term nulls the fold). */
+  def centroidDists(e: ArrayData, cell: Int,
+                    matrices: Array[Array[Array[Double]]]): ArrayData = {
+    if (cell < 0 || cell >= matrices.length) return null
+    val matrix = matrices(cell)
     val k = matrix.length
     val out = new Array[Any](k)
     var ok = e != null
@@ -145,37 +150,46 @@ case class LshBuckets(child: Expression,
       c: IndexedSeq[Expression]): Expression = copy(child = c(0))
 }
 
-/** `array<double>` of squared L2 distances to each constant centroid. */
-case class CentroidDists(child: Expression, matrix: Array[Array[Double]])
+/** `array<double>` of squared L2 distances to each centroid of the
+  * constant matrix `matrices(cell)`; `cell` is an int column. */
+case class CentroidDists(child: Expression, cell: Expression,
+                         matrices: Array[Array[Array[Double]]])
     extends Expression {
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = Seq(child, cell)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  // a null/mismatched row yields null distances, exactly like the Column
-  // encoding it replaces — never a null array
-  override def nullable: Boolean = false
+  // null for a null or out-of-range cell; a null/mismatched row yields
+  // null distances, exactly like the Column encoding it replaces
+  override def nullable: Boolean = true
   override def foldable: Boolean = false
 
-  override def eval(input: InternalRow): Any =
+  override def eval(input: InternalRow): Any = {
+    val k = cell.eval(input)
     PipelineExprHelpers.centroidDists(
-      child.eval(input).asInstanceOf[ArrayData], matrix)
+      child.eval(input).asInstanceOf[ArrayData],
+      if (k == null) -1 else k.asInstanceOf[Int], matrices)
+  }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
-    val m = ctx.addReferenceObj("centroidMatrix", matrix, "double[][]")
+    val k = cell.genCode(ctx)
+    val m = ctx.addReferenceObj("centroidMatrices", matrices, "double[][][]")
     val in = if (child.nullable)
       s"${c.isNull} ? null : ${c.value}" else c.value.code
+    val kc = if (cell.nullable)
+      s"${k.isNull} ? -1 : ${k.value}" else k.value.code
     ev.copy(code =
       code"""
         ${c.code}
-        boolean ${ev.isNull} = false;
+        ${k.code}
         org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.pipeline.PipelineExprHelpers.centroidDists(($in), $m);
+          graft.pipeline.PipelineExprHelpers.centroidDists(($in), ($kc), $m);
+        boolean ${ev.isNull} = ${ev.value} == null;
       """)
   }
 
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
+      c: IndexedSeq[Expression]): Expression = copy(child = c(0), cell = c(1))
 }
 
 object PipelineExprs {
@@ -185,6 +199,8 @@ object PipelineExprs {
                  matrix: Array[Array[Array[Double]]]): Column =
     column(LshBuckets(expression(emb), matrix))
 
-  def centroidDists(ne: Column, matrix: Array[Array[Double]]): Column =
-    column(CentroidDists(expression(ne), matrix))
+  def centroidDists(ne: Column, matrices: Array[Array[Array[Double]]],
+                    cell: Column): Column =
+    column(CentroidDists(expression(ne), expression(cell.cast("int")),
+      matrices))
 }

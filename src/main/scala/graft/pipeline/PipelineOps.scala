@@ -104,21 +104,24 @@ object PipelineOps {
     * mins with ZERO exchanges (the op is now one map-side scan).
     * Docs with < 2 words have no shingles and emit no row, exactly as
     * the explode dropped them. */
-  def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val d = documents(spark, sfDir)
-    d.where(size(words($"text")) >= 2)
-      .select($"doc_id", shingles2(words($"text")).as("shs"))
-      .select($"doc_id",
-        array_min(transform($"shs",
-          s => md5(concat(lit("0:"), s)))).as("sig0"),
-        array_min(transform($"shs",
-          s => md5(concat(lit("1:"), s)))).as("sig1"),
-        array_min(transform($"shs",
-          s => md5(concat(lit("2:"), s)))).as("sig2"),
-        array_min(transform($"shs",
-          s => md5(concat(lit("3:"), s)))).as("sig3"))
-  }
+  def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
+    minhash(documents(spark, sfDir))
+
+  private def minhash(d: DataFrame): DataFrame =
+    d.where(size(words(col("text"))) >= 2)
+      .select(col("doc_id"), shingles2(words(col("text"))).as("shs"))
+      .select(col("doc_id") +: (0 until 4).map(b =>
+        array_min(transform(col("shs"),
+          s => md5(concat(lit(s"$b:"), s)))).as(s"sig$b")): _*)
+
+  /** One row per (doc, band) of the [[dedupMinhash]] signatures of `d`,
+    * cached: later calls over the same corpus, from [[dedupMinhashPairs]]
+    * or [[dedupClusters]] (the same plan), reuse the signature build
+    * instead of re-running the md5 scan. 4n narrow rows. */
+  private def minhashPostings(d: DataFrame): DataFrame =
+    minhash(d).select(col("doc_id"), posexplode(array(
+      (0 until 4).map(b => col(s"sig$b")): _*)).as(Seq("band", "sig")))
+      .cache()
 
   /** Hot-bucket cap for pair generation (VERDICT r1 #8): an LSH band
     * bucket or a shingle shared by more than this many documents would go
@@ -136,14 +139,8 @@ object PipelineOps {
     * buckets larger than [[MaxBucket]] are dropped (documented cap). */
   def dedupMinhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // cached: later calls over the same corpus, and [[dedupClusters]]
-    // (whose `sigs` is the same plan), reuse the signature build instead
-    // of re-running the md5 scan. One row per (doc, band) — 4n narrow rows.
-    val sigs = dedupMinhash(spark, sfDir)
-      .select($"doc_id", posexplode(array($"sig0", $"sig1", $"sig2",
-        $"sig3")).as(Seq("band", "sig")))
-      .cache()
-    val f = fenced(sigs, Seq("band", "sig"), MaxBucket)
+    val f = fenced(minhashPostings(documents(spark, sfDir)),
+      Seq("band", "sig"), MaxBucket)
     val a = f.select($"doc_id".as("doc_a"), $"band", $"sig")
     val b = f.select($"doc_id".as("doc_b"), $"band", $"sig")
     a.join(b, Seq("band", "sig"))
@@ -384,18 +381,15 @@ object PipelineOps {
     * component (itself when unpaired), `cluster_n` = component size. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // cached: later calls over the same corpus reuse the signature build
-    val sigs = dedupMinhash(spark, sfDir)
-      .select($"doc_id", posexplode(array($"sig0", $"sig1", $"sig2",
-        $"sig3")).as(Seq("band", "sig")))
-      .cache()
+    // one read (one parquet schema job) for the signatures and the ids
+    val raw = documentsRaw(spark, sfDir)
     val bucket = Window.partitionBy($"band", $"sig")
-    val star = sigs
+    val star = minhashPostings(spread(spark, raw))
       .select($"doc_id", count(lit(1)).over(bucket).as("bc"),
         min($"doc_id").over(bucket).as("m"))
       .where($"bc" <= MaxBucket && $"doc_id" =!= $"m")
       .select($"doc_id", $"m")
-    clusters(documentsRaw(spark, sfDir).select($"doc_id"), star)
+    clusters(raw.select($"doc_id"), star)
   }
 
   /** [[dedupClusters]] over the n-gram Jaccard pairs — keep-one-per-
@@ -650,27 +644,6 @@ object PipelineOps {
         lit(0.0), (acc, v) => acc + v))
   }
 
-  /** Squared L2 distance, unrolled like [[dotU]] — bit-identical to the
-    * interpreted `aggregate(zip_with(a, b, (x,y) => (x-y)²))` fold it
-    * replaces (same subtraction order, same left fold from 0.0), with
-    * the same width-guarded fallback. */
-  private def l2SqU(a: Column, b: Column, dim: Int = EmbDim): Column = {
-    val unrolled = (0 until dim).foldLeft(lit(0.0)) { (acc, i) =>
-      val d = get(a, lit(i)).cast("double") - get(b, lit(i)).cast("double")
-      acc + d * d
-    }
-    when(size(a) === dim && size(b) === dim, unrolled)
-      .otherwise(l2Sq(a, b))
-  }
-
-  /** Squared L2 distance between two double-array columns — the
-    * interpreted HOF shape: the spec the unrolled kernel replicates, and
-    * the fallback branch for non-[[EmbDim]] widths. */
-  private def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), (acc, v) => acc + v)
-
   /** L2-normalized copy of the embedding column (cosine ranking ⇒ cluster
     * on the unit sphere, where L2 is monotone in cosine). r6: both the
     * norm and the normalized copy are unrolled codegen ([[dotU]]) — the
@@ -680,7 +653,7 @@ object PipelineOps {
     * 55×-interpreted-lambda trap [[wordRuns]] documents); the array
     * constructor over indexed gets is codegen'd and CSE shares one norm
     * per row. Same divisions in the same order ⇒ same doubles. */
-  private def withNormalized(emb: DataFrame): DataFrame =
+  private[pipeline] def withNormalized(emb: DataFrame): DataFrame =
     emb
       .withColumn("nrm", sqrt(dotU(col("embedding"), col("embedding"))))
       .withColumn("ne",
@@ -764,12 +737,14 @@ object PipelineOps {
     * LSH buckets by design so the cap scales with [[AnnTargetList]]). */
   val AnnMaxList = 4 * AnnTargetList
 
-  /** Hard ceiling on IVF centroid count: centroids are broadcast to every
-    * task (and inlined as plan literals below 64), so they must stay
-    * O(small). Past ~4096 a single-level quantizer stops being the right
-    * structure anyway — the documented scale-out is two-level IVF
-    * (coarse×fine = 16M effective lists), same assignment plan applied
-    * twice. */
+  /** Hard ceiling on a derived IVF centroid count per level: the
+    * centroid matrices ride in every task binary ([[IvfIndex]]: kCoarse
+    * coarse plus kCoarse·kFine fine rows of dim doubles), so they must
+    * stay O(small). Past ~4096 a single-level quantizer stops being the
+    * right structure anyway — the documented scale-out is two-level IVF
+    * (coarse×fine lists, the same in-row assignment at both levels),
+    * whose fine matrices are the bound: 4096×4096 lists of 64 doubles
+    * would be 8 GB per task. */
   val AnnMaxClusters = 4096
 
   def annPlanesFor(n: Long): Int =
@@ -783,9 +758,9 @@ object PipelineOps {
 
   /** Driver-side Lloyd iterations on a bounded sample — deterministic
     * (init = first k sample rows in md5-of-id order, fixed iteration
-    * count, empty cells keep their centroid). Shared by the one- and
-    * two-level IVF builds; the sample is constant-size at any corpus
-    * scale, so this is O(sample·k·dim) driver CPU, never data-scale. */
+    * count, empty cells keep their centroid). Run for each level of an
+    * [[ivfIndex]]; the sample is constant-size at any corpus scale, so
+    * this is O(sample·k·dim) driver CPU, never data-scale. */
   private[pipeline] def kmeansTrain(sample: Array[Array[Double]], kC: Int,
                                     iters: Int): Array[Array[Double]] = {
     var centroids = sample.take(kC).map(_.clone())
@@ -794,16 +769,7 @@ object PipelineOps {
       val sums = Array.fill(kC)(new Array[Double](dim))
       val counts = new Array[Long](kC)
       sample.foreach { v =>
-        var best = 0; var bd = Double.MaxValue
-        var c = 0
-        while (c < kC) {
-          var d = 0.0; var i = 0
-          while (i < dim) {
-            val t = v(i) - centroids(c)(i); d += t * t; i += 1
-          }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
+        val best = nearestIdx(centroids, v)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         counts(best) += 1
@@ -817,9 +783,9 @@ object PipelineOps {
   }
 
   /** Nearest centroid of `v` among `cents` (ties → lowest index), the
-    * driver-side mirror of the plan-side min_by assignment. */
-  private def nearestIdx(cents: Array[Array[Double]],
-                         v: Array[Double]): Int = {
+    * driver-side mirror of the in-row [[argmin]] assignment. */
+  private[pipeline] def nearestIdx(cents: Array[Array[Double]],
+                                   v: Array[Double]): Int = {
     var best = 0; var bd = Double.MaxValue
     var c = 0
     while (c < cents.length) {
@@ -829,6 +795,97 @@ object PipelineOps {
       c += 1
     }
     best
+  }
+
+  /** Index of the smallest of a row of [[PipelineExprs.centroidDists]]:
+    * its first position, so ties go to the lowest index as in
+    * [[nearestIdx]] and the oracles' `ORDER BY dist, c`. Null when the
+    * distances are (a malformed row, a null cell). */
+  private def argmin(d: Column): Column =
+    (array_position(d, array_min(d)) - 1).cast("int")
+
+  /** Indices of the `n` smallest distances of `d`, nearest first, ties
+    * to the lowest index — the probe order. */
+  private def nearestN(d: Column, n: Int): Column =
+    transform(slice(array_sort(zip_with(d, sequence(lit(0), size(d) - 1),
+      (x, i) => struct(x.as("d"), i.as("i")))), 1, n), _.getField("i"))
+
+  /** A two-level IVF quantizer over the L2-normalized `ne` column of
+    * [[withNormalized]]: `coarse` cell centroids and, per cell, its
+    * `fine` list centroids; one cell is the single-level index. Both
+    * levels are in-row [[PipelineExprs.centroidDists]] kernels whose
+    * matrices ride in the task binary — no join, no shuffle. */
+  private[pipeline] final class IvfIndex(
+      val coarse: Array[Array[Double]],
+      val fine: Array[Array[Array[Double]]]) {
+    private val cells = Array(coarse)
+    private def cellDists(ne: Column): Column =
+      PipelineExprs.centroidDists(ne, cells, lit(0))
+    private def listDists(ne: Column, c: Column): Column =
+      PipelineExprs.centroidDists(ne, fine, c)
+
+    /** `frame` plus the nearest cell `c` of its `ne` and the nearest
+      * list `f` within that cell; both null for a malformed `ne` (a
+      * width other than the index's, a null element), which so gets no
+      * list. */
+    def assign(frame: DataFrame): DataFrame =
+      frame.withColumn("c", argmin(cellDists(col("ne"))))
+        .withColumn("f", argmin(listDists(col("ne"), col("c"))))
+
+    /** One row per probed list of each row of `frame`: the `nCells`
+      * nearest cells `c` of its `ne`, then the `nLists` nearest lists
+      * `f` of each. */
+    def probes(frame: DataFrame, nCells: Int, nLists: Int): DataFrame =
+      frame.withColumn("c", explode(nearestN(cellDists(col("ne")), nCells)))
+        .withColumn("f",
+          explode(nearestN(listDists(col("ne"), col("c")), nLists)))
+  }
+
+  /** Derived IVF training-sample size: 32 rows per centroid of the level
+    * that sets it, clamped to [2048, 65536] — a constant-size driver
+    * collect at any corpus size. */
+  private[pipeline] def ivfSample(sampleSize: Int, perLevel: Int): Int =
+    if (sampleSize > 0) sampleSize
+    else math.min(65536, math.max(2048, 32 * perLevel))
+
+  /** Trains an [[IvfIndex]] of `nCells` cells × `nLists` lists per cell
+    * on a deterministic sample of `sampleSize` rows of `e0` in md5-of-id
+    * order — the one hash both engines share, so the DuckDB oracles
+    * re-derive the sample, and through it the whole index,
+    * bit-identically. Driver [[kmeansTrain]] runs once for the cells,
+    * then once on each cell's share of the sample; a cell with no
+    * sample vector keeps its coarse centroid as its only list. Both
+    * counts are clamped to the sample, so a corpus smaller than them
+    * never indexes past it. Sampled rows that are null, hold a null
+    * element or are of another width than the sample's commonest are
+    * left out: the index is of that width, and rows of any other get no
+    * list. (Filtered on the driver: a plan filter on `ne` would inline
+    * its normalizing expression into an interpreted lambda.) */
+  private[pipeline] def ivfIndex(e0: DataFrame, nCells: Int, nLists: Int,
+                                 sampleSize: Int, iters: Int): IvfIndex = {
+    val rows = e0
+      .orderBy(md5(col("vec_id").cast("string").cast("binary")),
+        col("vec_id"))
+      .limit(sampleSize)
+      .select(col("ne"))
+      .collect()
+      .map(_.getSeq[java.lang.Double](0))
+      .filter(v => v != null && !v.contains(null))
+      .map(_.map(_.doubleValue).toArray)
+    require(rows.nonEmpty,
+      "IVF index: no well-formed embedding — nothing to index")
+    val width = rows.groupBy(_.length)
+      .maxBy { case (w, vs) => (vs.length, -w) }._1
+    val sample = rows.filter(_.length == width)
+    val coarse = kmeansTrain(sample, math.min(nCells, sample.length), iters)
+    val byCell = sample.groupBy(nearestIdx(coarse, _))
+    new IvfIndex(coarse, Array.tabulate(coarse.length) { c =>
+      byCell.get(c) match {
+        case Some(cell) =>
+          kmeansTrain(cell, math.min(nLists, cell.length), iters)
+        case None => Array(coarse(c))
+      }
+    })
   }
 
   /** LSH-bucketed ANN (the 100 TB path): `nTables` independent hash
@@ -918,8 +975,8 @@ object PipelineOps {
     * train-on-sample pattern, so quantizer cost is constant in the corpus
     * size and fully deterministic), vectors assigned to their nearest
     * centroid (the inverted lists), queries probe the nProbe nearest
-    * lists only. Centroids are tiny (nClusters × dim) and live in the
-    * plan as literals — the assignment is a map-side expression, the
+    * lists only. Centroids are tiny (nClusters × dim) and ride in the
+    * task binary — the assignment is an in-row expression, the
     * inverted-list join a bucket equi-join; nothing driver-side grows
     * with the corpus. Approximate in ALGORITHM (recall < 1 vs brute
     * force, floor-gated by test) but exactly CHECKED: the md5-ordered
@@ -937,144 +994,34 @@ object PipelineOps {
     * corpus count; `sampleSize = 0` derives 32·nClusters (clamped to
     * [2048, 65536]) so training stays a constant-size driver collect at
     * any corpus size. Inverted lists over `maxList` are dropped — see
-    * [[AnnMaxList]]. Centroid assignment is a plan-literal expression up
-    * to 64 centroids (whole-stage codegen, zero extra shuffle) and a
-    * broadcast equi-free join + min_by above that (literal arrays of
-    * 4096×64 doubles would blow up the plan). */
+    * [[AnnMaxList]]. The op is the one-cell case of [[annIvf2TopKDf]]:
+    * one coarse cell holding `nClusters` lists, of which each query
+    * probes its `nProbe` nearest. */
   def annIvfTopKDf(spark: SparkSession, emb: DataFrame, k: Int,
                    nClusters: Int, nProbe: Int, iters: Int,
                    sampleSize: Int, maxList: Int): DataFrame = {
-    import spark.implicits._
-    // cluster on L2-NORMALIZED vectors: the final ranking is cosine, and
-    // L2 on the unit sphere is monotone in cosine — clustering raw
-    // magnitudes would split cosine-neighbors across lists
-    val e0 = withNormalized(emb)
-
-    val wantClusters =
-      if (nClusters > 0) nClusters else annClustersFor(emb.count())
-    val wantSample =
-      if (sampleSize > 0) sampleSize
-      else math.min(65536, math.max(2048, 32 * wantClusters))
-
-    // deterministic training sample, ordered by md5 of the id rendered
-    // as a string — the one hash both engines share, so the DuckDB
-    // oracle re-derives the sample (and through it the whole quantizer)
-    // bit-identically
-    val sample: Array[Array[Double]] = e0
-      .orderBy(md5($"vec_id".cast("string").cast("binary")), $"vec_id")
-      .limit(wantSample)
-      .select($"ne")
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty,
-      "annIvfTopK: embedding table is empty — nothing to index")
-    // a corpus smaller than the requested cluster count would index past
-    // the seed sample (ADVICE r2) — clamp, never crash
-    val kC = math.max(1, math.min(wantClusters, sample.length))
-    val centroids = kmeansTrain(sample, kC, iters)
-    val probeN = math.min(nProbe, kC)
-
-    // r6: the normalized copy `ne` is built by the unrolled codegen
-    // kernel in [[withNormalized]] (the old interpreted shape re-derived
-    // the norm per ELEMENT — the dominant cost of this op's index
-    // build); the per-centroid distance scan stays the interpreted
-    // transform-over-literal-centroids (a kC×dim unrolled projection
-    // costs more in one-time codegen compile than it saves — measured
-    // +4.4 s cold), and because `ne` is referenced from inside a lambda,
-    // CollapseProject keeps it materialized in its own Project, so the
-    // normalize work runs once per row. The exact-cosine verify norms
-    // ride from withNormalized (`nrm` ≡ √dot(embedding,embedding)) —
-    // computed once per vector / per query instead of once per pair.
-    val (buckets, probes) =
-      if (kC <= 64) {
-        // literal fast path: per-centroid distances from ONE custom
-        // codegen kernel ([[CentroidDists]], a generated loop over the
-        // centroid matrix — same IEEE folds as the interpreted
-        // transform-of-zip_with it replaces)
-        def dists(emb: Column): Column =
-          PipelineExprs.centroidDists(emb, centroids)
-        def nearest(emb: Column): Column = {
-          val d = dists(emb)
-          (array_position(d, array_min(d)) - 1).cast("int")
-        }
-        val b = e0.select($"vec_id", $"embedding", $"nrm".as("en"),
-          nearest($"ne").as("c"))
-        val p = e0.where($"vec_id" % 50 === 0)
-          .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-            $"nrm".as("qn"), dists($"ne").as("dists"))
-          .select($"query_id", $"qe", $"qn", posexplode(
-            slice(array_sort(zip_with($"dists",
-              sequence(lit(0), lit(kC - 1)),
-              (d, i) => struct(d.as("d"), i.as("i")))), 1, probeN))
-            .as(Seq("p", "pc")))
-          .select($"query_id", $"qe", $"qn", $"pc.i".as("c"))
-        (b, p)
-      } else {
-        // broadcast path: centroids as a broadcast table, nearest via
-        // min_by with a (distance, id) tie-break — deterministic
-        val cents = spark.createDataset(
-          centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
-          .toDF("c", "cent")
-        val b = e0.crossJoin(broadcast(cents))
-          .withColumn("d", l2SqU($"cent", $"ne"))
-          .groupBy($"vec_id")
-          .agg(min_by(struct($"c", $"embedding", $"nrm"),
-            struct($"d", $"c")).as("best"))
-          .select($"vec_id", $"best.embedding".as("embedding"),
-            $"best.nrm".as("en"), $"best.c".as("c"))
-        val pw = Window.partitionBy($"query_id").orderBy($"d", $"c")
-        val p = e0.where($"vec_id" % 50 === 0)
-          .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-            $"nrm".as("qn"), $"ne")
-          .crossJoin(broadcast(cents))
-          .withColumn("d", l2SqU($"cent", $"ne"))
-          .withColumn("pr", row_number().over(pw))
-          .where($"pr" <= probeN)
-          .select($"query_id", $"qe", $"qn", $"c")
-        (b, p)
-      }
-
-    // inverted-list cap (the MaxBucket fence): degenerate piles of
-    // near-identical vectors would make the probe join quadratic.
-    // The assignment is cached: the list-size aggregation and the probe
-    // join each scan it, and re-evaluating the nearest-centroid
-    // expression per scan doubled the op's cost. At scale this cache IS
-    // the inverted-file index build — one materialization pass over the
-    // corpus, exactly what building an IVF index means.
-    val bc = buckets.cache()
-    val keep = bc.groupBy($"c").agg(count(lit(1)).as("lc"))
-      .where($"lc" <= maxList).select($"c")
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id")
-    bc.join(keep, Seq("c")).join(probes, Seq("c"))
-      .where($"vec_id" =!= $"query_id")
-      .withColumn("cos", dotU($"qe", $"embedding") / ($"qn" * $"en"))
-      .withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"),
-        round($"cos", 6).as("cos_r"))
+    val n = if (nClusters > 0) nClusters else annClustersFor(emb.count())
+    annIvf2TopKDf(spark, emb, k, 1, n, 1, nProbe, iters,
+      ivfSample(sampleSize, n), maxList)
   }
 
   /** TWO-LEVEL IVF (coarse × fine) — the documented scale-out past
     * [[AnnMaxClusters]] single-level lists (VERDICT r3 #5). At 10¹²
-    * vectors a single-level quantizer needs ~10⁹ lists (impossible to
-    * broadcast) or carries ~244k-entry lists at 4096 clusters; the
-    * standard fix (FAISS-style IVF with a coarse quantizer) is a PRODUCT
-    * of two small quantizers: ⌈√L⌉ coarse cells × ⌈L/⌈√L⌉⌉ fine lists per
-    * cell ⇒ L effective lists while every centroid table stays ≤ 4096
-    * rows. Both levels train driver-side on the same constant-size sample
-    * (fine = per-coarse-cell k-means of the sample partition; an empty
-    * cell keeps its coarse centroid as its only fine list so no corpus
-    * vector is ever unindexable). Assignment is two broadcast min_by
-    * joins — the uniform scale path; plan-literal assignment stops
-    * paying at 64 centroids, and at 16M fine rows the fine join becomes
-    * a shuffle equi-join on the coarse cell, same plan shape. Queries
-    * probe `nProbeCoarse` cells then `nProbeFine` lists per probed cell.
-    * Approximate in algorithm — recall-floor-gated against brute force
-    * like LSH/IVF, plus probe-all ≡ brute-force and hot-list fence
-    * tests — and, like single-level IVF, exactly checked: the DuckDB
-    * oracle re-derives both quantizer levels bit-identically
-    * (SparkEntry.annIvf2Oracle). */
+    * vectors a single-level quantizer needs ~10⁹ lists or carries
+    * ~244k-entry lists at 4096 clusters; the standard fix (FAISS-style
+    * IVF with a coarse quantizer) is a PRODUCT of two small quantizers:
+    * ⌈√L⌉ coarse cells × ⌈L/⌈√L⌉⌉ fine lists per cell ⇒ L effective
+    * lists. Both levels train driver-side on the same constant-size
+    * sample ([[ivfIndex]]). Assignment is in-row at both levels (the
+    * cell's, then within it the list's [[PipelineExprs.centroidDists]]
+    * kernel), so the index build is one map-side pass; its bound is the
+    * centroid matrices in the task binary, kCoarse·kFine·dim doubles.
+    * Queries probe `nProbeCoarse` cells then `nProbeFine` lists per
+    * probed cell, also in-row. Approximate in algorithm —
+    * recall-floor-gated against brute force like LSH/IVF, plus probe-all
+    * ≡ brute-force and hot-list fence tests — and, like single-level
+    * IVF, exactly checked: the DuckDB oracle re-derives both quantizer
+    * levels bit-identically (SparkEntry.annIvf2Oracle). */
   def annIvf2TopK(spark: SparkSession, sfDir: String, k: Int = 5,
                   nCoarse: Int = 0, nFine: Int = 0,
                   nProbeCoarse: Int = 3, nProbeFine: Int = 3,
@@ -1088,6 +1035,9 @@ object PipelineOps {
                     nProbeFine: Int, iters: Int, sampleSize: Int,
                     maxList: Int): DataFrame = {
     import spark.implicits._
+    // cluster on L2-NORMALIZED vectors: the final ranking is cosine, and
+    // L2 on the unit sphere is monotone in cosine — clustering raw
+    // magnitudes would split cosine-neighbors across lists
     val e0 = withNormalized(emb)
 
     // effective-list target is deliberately NOT clamped at AnnMaxClusters
@@ -1104,76 +1054,23 @@ object PipelineOps {
       if (nFine > 0) nFine
       else math.min(AnnMaxClusters, math.max(1L,
         math.ceil(totalLists.toDouble / wantCoarse).toLong)).toInt
-    val wantSample =
-      if (sampleSize > 0) sampleSize
-      else math.min(65536, math.max(2048, 32 * wantCoarse))
+    val idx = ivfIndex(e0, wantCoarse, wantFine,
+      ivfSample(sampleSize, wantCoarse), iters)
 
-    val sample: Array[Array[Double]] = e0
-      .orderBy(md5($"vec_id".cast("string").cast("binary")), $"vec_id")
-      .limit(wantSample)
-      .select($"ne")
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty,
-      "annIvf2TopK: embedding table is empty — nothing to index")
-    val kCoarse = math.max(1, math.min(wantCoarse, sample.length))
-    val coarseCents = kmeansTrain(sample, kCoarse, iters)
-    val byCell = sample.groupBy(v => nearestIdx(coarseCents, v))
-    val fineCents: Array[Array[Array[Double]]] = Array.tabulate(kCoarse) {
-      c =>
-        byCell.get(c) match {
-          case Some(cell) =>
-            kmeansTrain(cell, math.max(1, math.min(wantFine, cell.length)),
-              iters)
-          case None => Array(coarseCents(c))
-        }
-    }
-    val coarseT = spark.createDataset(
-      coarseCents.toSeq.zipWithIndex.map { case (v, i) => (i, v.toSeq) })
-      .toDF("c", "cent")
-    val fineT = spark.createDataset(for {
-      c <- 0 until kCoarse
-      f <- fineCents(c).indices
-    } yield (c, f, fineCents(c)(f).toSeq)).toDF("c", "f", "fcent")
-
-    // index build = two broadcast nearest-centroid passes, cached once
-    // (the cache IS the materialized two-level inverted file). r6: the
-    // distance kernels are [[l2SqU]]-unrolled (same IEEE folds as the
-    // interpreted zip_with they replace) and the verify norms ride from
-    // withNormalized's `nrm` — per vector / per query, not per pair.
-    val coarseAssign = e0.crossJoin(broadcast(coarseT))
-      .withColumn("d", l2SqU($"cent", $"ne"))
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"c", $"ne", $"embedding", $"nrm"),
-        struct($"d", $"c")).as("b"))
-      .select($"vec_id", $"b.c".as("c"), $"b.ne".as("ne"),
-        $"b.embedding".as("embedding"), $"b.nrm".as("nrm"))
-    val assign = coarseAssign.join(broadcast(fineT), Seq("c"))
-      .withColumn("d", l2SqU($"fcent", $"ne"))
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"c", $"f", $"embedding", $"nrm"),
-        struct($"d", $"f")).as("b"))
-      .select($"vec_id", $"b.embedding".as("embedding"),
-        $"b.nrm".as("en"), $"b.c".as("c"), $"b.f".as("f"))
+    // the cached assignment IS the materialized two-level inverted file
+    // (the list-size count and the probe join each scan it); the verify
+    // norms ride from withNormalized's `nrm` — per vector / per query,
+    // not per pair
+    val assign = idx.assign(e0)
+      .select($"vec_id", $"embedding", $"nrm".as("en"), $"c", $"f")
       .cache()
-
-    val pq = e0.where($"vec_id" % 50 === 0)
+    val probes = idx.probes(e0.where($"vec_id" % 50 === 0), nProbeCoarse,
+        nProbeFine)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-        $"nrm".as("qn"), $"ne")
-    val pcw = Window.partitionBy($"query_id").orderBy($"d", $"c")
-    val pcells = pq.crossJoin(broadcast(coarseT))
-      .withColumn("d", l2SqU($"cent", $"ne"))
-      .withColumn("pr", row_number().over(pcw))
-      .where($"pr" <= math.min(nProbeCoarse, kCoarse))
-      .select($"query_id", $"qe", $"qn", $"ne", $"c")
-    val pfw = Window.partitionBy($"query_id", $"c").orderBy($"d", $"f")
-    val probes = pcells.join(broadcast(fineT), Seq("c"))
-      .withColumn("d", l2SqU($"fcent", $"ne"))
-      .withColumn("pr", row_number().over(pfw))
-      .where($"pr" <= nProbeFine)
-      .select($"query_id", $"qe", $"qn", $"c", $"f")
+        $"nrm".as("qn"), $"c", $"f")
 
-    // per-(cell, list) cap — the same hot-list fence as single-level
+    // per-(cell, list) cap — the MaxBucket fence: degenerate piles of
+    // near-identical vectors would make the probe join quadratic
     val keep = assign.groupBy($"c", $"f").agg(count(lit(1)).as("lc"))
       .where($"lc" <= maxList).select($"c", $"f")
     val w = Window.partitionBy($"query_id")
@@ -1234,17 +1131,18 @@ object PipelineOps {
     * cos ≈ 0.4–0.51, the same regime [[dedupEmbedding]] targets); real
     * web corpora run τ ≈ 0.95+.
     *
-    * The quantizer is the [[annIvfTopKDf]] build verbatim — the same
-    * md5-ordered deterministic sample, the same driver [[kmeansTrain]],
-    * the same (distance, cluster) argmin tie order — so the whole
-    * cluster assignment re-derives bit-identically in the DuckDB oracle
-    * with the CTEs the IVF ops already use. Drop rule `∃ u < v same
-    * cluster, cos(u,v) ≥ τ` is the published greedy keep-one (no
-    * transitive closure: u itself may also be dropped by a still-smaller
-    * id — that is SemDeDup's semantics, unlike [[dedupEmbeddingClusters]]
-    * which closes over components).
+    * The clusters are the lists of a one-cell [[ivfIndex]], the index
+    * [[annIvfTopKDf]] builds — the same md5-ordered deterministic sample,
+    * the same driver [[kmeansTrain]], the same (distance, cluster) argmin
+    * tie order — so the whole cluster assignment re-derives
+    * bit-identically in the DuckDB oracle with the CTEs the IVF ops
+    * already use; a malformed embedding gets no cluster, and so no row.
+    * Drop rule `∃ u < v same cluster, cos(u,v) ≥ τ` is the published
+    * greedy keep-one (no transitive closure: u itself may also be
+    * dropped by a still-smaller id — that is SemDeDup's semantics,
+    * unlike [[dedupEmbeddingClusters]] which closes over components).
     *
-    * Scale shape: assignment = one broadcast nearest-centroid pass
+    * Scale shape: assignment = one in-row nearest-centroid pass
     * (cached — it IS the index); the pair join is per-cluster with list
     * sizes ≈ [[AnnTargetList]] by construction of the derived cluster
     * count, and clusters over `maxCluster` are FENCED (kept whole,
@@ -1259,29 +1157,10 @@ object PipelineOps {
     import spark.implicits._
     val emb = embeddings(spark, sfDir)
     val e0 = withNormalized(emb)
-    val wantClusters =
-      if (nClusters > 0) nClusters else annClustersFor(emb.count())
-    val wantSample =
-      if (sampleSize > 0) sampleSize
-      else math.min(65536, math.max(2048, 32 * wantClusters))
-    val sample: Array[Array[Double]] = e0
-      .orderBy(md5($"vec_id".cast("string").cast("binary")), $"vec_id")
-      .limit(wantSample)
-      .select($"ne")
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty,
-      "semDedup: embedding table is empty — nothing to dedup")
-    val kC = math.max(1, math.min(wantClusters, sample.length))
-    val centroids = kmeansTrain(sample, kC, iters)
-    val cents = spark.createDataset(
-      centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
-      .toDF("c", "cent")
-    val asg = e0.crossJoin(broadcast(cents))
-      .withColumn("d", l2SqU($"cent", $"ne"))
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"c", $"ne"), struct($"d", $"c")).as("b"))
-      .select($"vec_id", $"b.c".as("c"), $"b.ne".as("ne"))
+    val n = if (nClusters > 0) nClusters else annClustersFor(emb.count())
+    val asg = ivfIndex(e0, 1, n, ivfSample(sampleSize, n), iters)
+      .assign(e0)
+      .select($"vec_id", $"f".as("c"), $"ne")
       .cache()
     val csz = asg.groupBy($"c").agg(count(lit(1)).as("cn"))
     // dot of pre-normalized vectors, accumulated in index order (the

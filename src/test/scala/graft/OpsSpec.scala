@@ -368,7 +368,7 @@ class OpsSpec extends AnyFunSuite {
     assert(annPlanesFor(1L << 30) == 21) // 2^21 buckets → ~512/bucket
     assert(annClustersFor(5000) == 16)
     assert(annClustersFor(1000000) == 977)
-    assert(annClustersFor(100000000000L) == 4096) // broadcast-path cap
+    assert(annClustersFor(100000000000L) == 4096) // AnnMaxClusters cap
   }
 
   test("hot-bucket ANN: 3k identical vectors are fenced, no quadratic join") {
@@ -398,14 +398,14 @@ class OpsSpec extends AnyFunSuite {
     assert(sec < 60.0, s"took $sec s")
   }
 
-  test("IVF broadcast path (kC>64), probe-all == brute force exactly") {
+  test("IVF at 80 clusters, probe-all == brute force exactly") {
     val sf = "/root/testdata/sf0.001"
     val exact = graft.pipeline.PipelineOps.annCosineTopK(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
-    // 80 clusters forces the broadcast-join assignment; probing every
-    // list with no cap makes IVF candidate set = the whole corpus, so
-    // the result must EQUAL the brute-force baseline row-for-row
+    // probing all 80 lists with no cap makes IVF candidate set = the
+    // whole corpus, so the result must EQUAL the brute-force baseline
+    // row-for-row
     val ivf = graft.pipeline.PipelineOps.annIvfTopKDf(spark,
       graft.pipeline.PipelineOps.embeddings(spark, sf), 5,
       nClusters = 80, nProbe = 80, iters = 2, sampleSize = 512,

@@ -2,13 +2,18 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+  CartesianProductExec}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.pipeline.PipelineOps
 
 /** Shape of the pair ops' plans: each fences its hot buckets with a
   * window count over the partitioning its self-join reads, so no
@@ -16,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Counts are of the final plan after one `collect()` from a cold cache,
   * each cached frame's plan counted once; a join side that scans a
   * cached frame is its own AQE stage, so its copy of the fence exchange
-  * counts too. */
+  * counts too. The IVF ops' plans are pinned the same way: their vectors
+  * meet the centroids in-row, so no nested-loop join pairs them and no
+  * aggregate picks a vector's nearest centroid. */
 class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
@@ -50,6 +57,33 @@ class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(counted.isEmpty, s"$op counts its buckets with an aggregate")
       assert(got == ((shuffles, broadcasts)),
         df.queryExecution.executedPlan.toString)
+    }
+  }
+
+  for ((name, op, shuffles) <- Seq[(String,
+      (SparkSession, String) => DataFrame, Int)](
+      ("ann_ivf_topk", SparkEntry.queries("ann_ivf_topk"), 4),
+      ("ann_ivf_topk at 80 clusters",
+        (s, d) => PipelineOps.annIvfTopK(s, d, nClusters = 80), 4),
+      ("ann_ivf2_topk", SparkEntry.queries("ann_ivf2_topk"), 4),
+      ("sem_dedup", SparkEntry.queries("sem_dedup"), 5))) {
+    test(s"$name assigns in-row: no nested-loop join or per-vector " +
+      "aggregate") {
+      spark.catalog.clearCache()
+      val df = op(spark, "/root/testdata/sf0.001")
+      df.collect()
+      val plan = nodes(df.queryExecution.executedPlan)
+      val text = df.queryExecution.executedPlan.toString
+      assert(!plan.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[CartesianProductExec]), text)
+      // a distinct over vec_id aggregates nothing and picks no nearest
+      assert(!plan.exists {
+        case a: BaseAggregateExec => a.aggregateExpressions.nonEmpty &&
+          a.groupingExpressions.map(_.name) == Seq("vec_id")
+        case _ => false
+      }, text)
+      assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) == shuffles,
+        text)
     }
   }
 }

@@ -1,9 +1,17 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{PipelineExprs, PipelineOps}
+import graft.pipeline.{CentroidDists, LshBuckets, PipelineExprs, PipelineOps}
 
 /** Focused specs for the r6 optimization internals: the custom codegen
   * kernels (LshBuckets / CentroidDists) must be bit-identical to the
@@ -92,7 +100,7 @@ class PipelineExprsSpec extends AnyFunSuite {
     val df = embFrame(200)
       .select($"vec_id", ne.as("ne"))
       .select($"vec_id",
-        PipelineExprs.centroidDists($"ne", cents).as("got"),
+        PipelineExprs.centroidDists($"ne", Array(cents), lit(0)).as("got"),
         transform(centLit, c => l2(c, $"ne")).as("want"))
     df.collect().foreach { r =>
       val got = r.getSeq[Double](1)
@@ -118,7 +126,7 @@ class PipelineExprsSpec extends AnyFunSuite {
       // production
       .repartition(2)
       .select($"id",
-        PipelineExprs.centroidDists($"ne", cents).as("got"),
+        PipelineExprs.centroidDists($"ne", Array(cents), lit(0)).as("got"),
         transform(centLit, c => l2(c, $"ne")).as("want"))
     def bits(r: org.apache.spark.sql.Row, i: Int) =
       Option(r.getSeq[java.lang.Double](i)).map(_.map(d =>
@@ -128,6 +136,119 @@ class PipelineExprsSpec extends AnyFunSuite {
     val bad = edgeRows.filter(r => bits(r, 1) != bits(r, 2))
       .map(r => s"row ${r.getLong(0)}: got ${r.get(1)}, want ${r.get(2)}")
     assert(bad.isEmpty, bad.mkString("dist mismatch on edge rows\n", "\n", ""))
+  }
+
+  // ---- property fuzz: each kernel against its interpreted Column form,
+  //      bit for bit, through codegen (a kernel-only projection over a
+  //      shuffled frame) and through `eval` on literal children ----
+
+  private def check(p: Prop): Unit = {
+    val r = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(25), p)
+    assert(r.passed, r.status.toString)
+  }
+
+  /** A double that is often NaN or ±Inf. */
+  private val genVal: Gen[Double] = Gen.frequency(
+    6 -> Gen.chooseNum(-3.0, 3.0), 1 -> Gen.const(Double.NaN),
+    1 -> Gen.const(Double.PositiveInfinity),
+    1 -> Gen.const(Double.NegativeInfinity))
+
+  /** A row, mostly of width `w` but of any width up to w + 2 (0
+    * included), sometimes null, its elements sometimes null. */
+  private def genRow(w: Int): Gen[Seq[java.lang.Double]] = Gen.frequency(
+    1 -> Gen.const(null),
+    8 -> (for {
+      n <- Gen.frequency(4 -> Gen.const(w), 1 -> Gen.chooseNum(0, w + 2))
+      xs <- Gen.listOfN(n, Gen.frequency(
+        12 -> genVal.map(java.lang.Double.valueOf),
+        1 -> Gen.const(null: java.lang.Double)))
+    } yield xs))
+
+  /** Comparable form of a result: doubles as their bits (NaN folded). */
+  private def bits(v: Any): Any = v match {
+    case null => null
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case a: ArrayData => bits(a.toObjectArray(NullType).toSeq)
+    case s: scala.collection.Seq[_] => s.map(bits)
+    case x => x
+  }
+
+  /** One row per `rows` element (id = position), behind a shuffle so a
+    * projection over it is not folded into the local relation. */
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).repartition(1)
+
+  /** (id → result) of `c` over `df`. */
+  private def results(df: DataFrame, c: Column): Map[Long, Any] =
+    df.select(col("id"), c).collect()
+      .map(r => r.getLong(0) -> bits(r.get(1))).toMap
+
+  test("CentroidDists ≡ Column form on fuzzed rows, cells, widths") {
+    val genCase = for {
+      w <- Gen.chooseNum(0, 5)
+      nCells <- Gen.chooseNum(1, 3)
+      mats <- Gen.listOfN(nCells, Gen.chooseNum(0, 3)
+        .flatMap(k => Gen.listOfN(k, Gen.listOfN(w, genVal))))
+      rows <- Gen.listOfN(8, Gen.zip(genRow(w), Gen.frequency(
+        6 -> Gen.chooseNum(0, nCells - 1).map(Integer.valueOf),
+        1 -> Gen.const(null: Integer),
+        1 -> Gen.oneOf(-1, nCells, nCells + 3).map(Integer.valueOf))))
+    } yield (mats, rows)
+    check(Prop.forAllNoShrink(genCase) { case (mats, rows) =>
+      val m = mats.map(_.map(_.toArray).toArray).toArray
+      val df = frame(rows.zipWithIndex.map { case ((ne, cell), i) =>
+        Row(i.toLong, ne, cell) }, StructType(Seq(
+        StructField("id", LongType), StructField("ne",
+          ArrayType(DoubleType)), StructField("cell", IntegerType))))
+      val want = results(df, transform(get(typedLit(mats), col("cell")),
+        c => aggregate(zip_with(c, col("ne"), (x, y) => {
+          val d = x - y; d * d }), lit(0.0), (acc, v) => acc + v)))
+      val got = results(df,
+        PipelineExprs.centroidDists(col("ne"), m, col("cell")))
+      val evald = rows.zipWithIndex.map { case ((ne, cell), i) =>
+        i.toLong -> bits(CentroidDists(
+          Literal.create(ne, ArrayType(DoubleType)),
+          Literal.create(cell, IntegerType), m).eval()) }.toMap
+      (got == want && evald == want) :|
+        s"want $want\ncodegen $got\neval $evald"
+    })
+  }
+
+  test("LshBuckets ≡ Column form on fuzzed rows and widths") {
+    // tables × planes × width is rectangular, as every caller builds it
+    val genCase = for {
+      w <- Gen.chooseNum(0, 5)
+      nT <- Gen.chooseNum(0, 3)
+      nP <- Gen.chooseNum(0, 4)
+      mat <- Gen.listOfN(nT, Gen.listOfN(nP, Gen.listOfN(w, genVal)))
+      float <- Gen.oneOf(false, true)
+      rows <- Gen.listOfN(8, genRow(w))
+    } yield (mat, float, rows)
+    check(Prop.forAllNoShrink(genCase) { case (mat, float, rows) =>
+      val m = mat.map(_.map(_.toArray).toArray).toArray
+      val elem = ArrayType(if (float) FloatType else DoubleType)
+      val df = frame(rows.zipWithIndex.map { case (e, i) =>
+        Row(i.toLong, e) }, StructType(Seq(StructField("id", LongType),
+        StructField("e", ArrayType(DoubleType)))))
+        .select(col("id"), col("e").cast(elem).as("e"))
+      def bucket(planes: Seq[Seq[Double]]): Column =
+        planes.zipWithIndex.foldLeft(lit(0)) { case (acc, (pl, p)) =>
+          acc + when(aggregate(zip_with(typedLit(pl), col("e"),
+            (x, v) => x * v.cast("double")), lit(0.0),
+            (a, v) => a + v) > 0, lit(1 << p)).otherwise(lit(0))
+        }
+      val want = results(df,
+        if (mat.isEmpty) array().cast("array<int>")
+        else array(mat.map(bucket): _*))
+      val got = results(df, PipelineExprs.lshBuckets(col("e"), m))
+      val evald = rows.zipWithIndex.map { case (e, i) =>
+        val in: Expression = Cast(Literal.create(e, ArrayType(DoubleType)),
+          elem)
+        i.toLong -> bits(LshBuckets(in, m).eval()) }.toMap
+      (got == want && evald == want) :|
+        s"want $want\ncodegen $got\neval $evald"
+    })
   }
 
   test("in-row dedupMinhash == r5 explode+distinct+groupBy shape") {

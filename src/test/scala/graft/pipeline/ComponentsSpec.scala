@@ -84,15 +84,19 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("dedup_clusters job budget on sf0.001; a second call agrees") {
     val sf = "/root/testdata/sf0.001"
-    def rows(group: String) = SparkJobs.counted(spark, group) {
+    def rows(group: String) = SparkJobs.named(spark, group) {
       PipelineOps.dedupClusters(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
+    // one read of documents.parquet per call: one schema-read job
+    def reads(jobs: Seq[String]) = jobs.count(_.startsWith("parquet at "))
     val (first, jobs) = rows("dedup-clusters-1")
-    assert(jobs <= 20, s"dedup_clusters took $jobs jobs")
+    assert(jobs.length <= 20, s"dedup_clusters took ${jobs.length} jobs")
+    assert(reads(jobs) == 1, jobs.mkString("\n"))
     assert(first.exists(r => r._1 != r._2), "no doc joined a cluster")
     val (second, jobs2) = rows("dedup-clusters-2")
+    assert(reads(jobs2) == 1, jobs2.mkString("\n"))
     assert(second == first)
-    info(s"$jobs jobs, then $jobs2")
+    info(s"${jobs.length} jobs, then ${jobs2.length}")
   }
 }
