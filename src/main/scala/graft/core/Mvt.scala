@@ -64,12 +64,6 @@ final class ProtoWriter {
   def stringField(field: Int, s: String): Unit =
     bytesField(field, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  def packedField(field: Int, vals: Iterable[Long]): Unit = {
-    val p = new ProtoWriter
-    vals.foreach(p.writeVarint)
-    bytesField(field, p.toBytes)
-  }
-
   /** Raw concatenation of another writer's content (no framing). */
   def append(o: ProtoWriter): Unit = {
     ensure(o.len)

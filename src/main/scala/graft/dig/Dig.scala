@@ -199,8 +199,6 @@ object Dig {
       .unionByName(depMemberNodes)
       .dropDuplicates("layer", "id")
 
-    val layerMeta = layers.map(l =>
-      (l.name, l.geomTp.rank)).toDF("layer", "geom_rank")
     def vals(id: Column, tags: Column) =
       valuesColumn(layers, $"layer", id, tags)
 

@@ -1,8 +1,7 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.model.{Doc, OsmEntity}
 
 /** docs → entities (SURVEY.md §2.1 S2 first half).
   *
@@ -47,12 +46,5 @@ object Extract {
             get(p, lit(1)).as("ref_kind"),
             get(p, lit(2)).cast("long").as("ref_id"))
         }).as("members"))
-  }
-
-  /** Typed view. */
-  def entitiesDS(spark: SparkSession, docs: Dataset[Doc])
-      : Dataset[OsmEntity] = {
-    import spark.implicits._
-    entities(docs.toDF()).as[OsmEntity]
   }
 }

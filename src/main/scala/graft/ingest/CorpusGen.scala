@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.model.{Doc, Member, OsmEntity, Span}
+import graft.model.{Doc, Member, OsmEntity}
 import scala.collection.mutable
 
 /** Deterministic synthetic corpus generator (FIXTURES.md §3). Generation is

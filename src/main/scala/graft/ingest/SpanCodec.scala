@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.model.{Doc, Member, OsmEntity, Span}
+import graft.model.{Member, OsmEntity, Span}
 import scala.collection.mutable
 
 /** Entity ↔ span-sequence codec for the interleaved document table

@@ -598,8 +598,9 @@ object PipelineOps {
       .repartition(candParts(spark), $"vec_a", $"vec_b")
       .dropDuplicates("vec_a", "vec_b")
     // exact-cosine verify with hoisted norms: dot/(na·nb) is the same
-    // IEEE quotient as dotCos (identical sub-expressions, evaluated per
-    // VECTOR in the cached frame instead of per PAIR)
+    // IEEE quotient as dot(a,b)/(√dot(a,a)·√dot(b,b)) (identical
+    // sub-expressions, evaluated per VECTOR in the cached frame instead
+    // of per PAIR)
     cand
       .join(eb.select($"vec_id".as("vec_a"), $"embedding".as("ea"),
         $"nr".as("na")), Seq("vec_a"))
@@ -614,7 +615,9 @@ object PipelineOps {
 
   /** Embedding dimensionality of the corpus tables (fixed by TESTDATA.md;
     * the DuckDB oracles hardcode the same 64). The r6 unrolled vector
-    * kernels below are generated at this width. */
+    * kernels below are generated at this width; [[embedQuantize]] asserts
+    * it at runtime, so a corpus change fails loudly there instead of
+    * silently quantizing a prefix. */
   private[pipeline] val EmbDim = 64
 
   /** Dot product of two float/double array columns, UNROLLED to `dim`
@@ -662,15 +665,6 @@ object PipelineOps {
             get(col("embedding"), lit(i)).cast("double") / col("nrm")): _*))
         .otherwise(transform(col("embedding"),
           v => v.cast("double") / col("nrm"))))
-
-  /** Exact cosine between two raw embedding columns:
-    * dot(a,b) / (√dot(a,a) · √dot(b,b)), all three dots [[dotU]]-unrolled
-    * (bit-identical to the interpreted original). Call sites that verify
-    * MANY pairs per vector hoist the two norm factors to the per-vector
-    * frames instead (same expression, evaluated once per vector rather
-    * than once per pair) — see [[annCosineTopK]]. */
-  private def dotCos(a: Column, b: Column): Column =
-    dotU(a, b) / (sqrt(dotU(a, a)) * sqrt(dotU(b, b)))
 
   /** Brute-force cosine top-k (the exactness baseline). Queries = every
     * 50th vector. Scale path: broadcast the (small) query set, one pass
@@ -1359,6 +1353,29 @@ object PipelineOps {
         explode(sequence(lit(1L), $"n_copies")).as("copy_n"))
   }
 
+  /** The Gopher repetition columns of a doc's words `ws` and their
+    * 2-shingles `sh`, shared by [[textRepetition]] and
+    * [[pipelineFunnel]]: (top-word count, top-word fraction,
+    * duplicated-bigram fraction). The top-word count is the longest run
+    * of the sorted word array, one `aggregate` pass. */
+  private def repetition(ws: Column, sh: Column)
+      : (Column, Column, Column) = {
+    val top = aggregate(array_sort(ws),
+      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
+      (acc, w) => {
+        val run = when(w === acc.getField("prev"),
+          acc.getField("run") + 1L).otherwise(lit(1L))
+        struct(w.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      },
+      acc => acc.getField("best"))
+    val dupFrac =
+      when(size(sh) > 0,
+        (size(sh) - size(array_distinct(sh))).cast("double") / size(sh))
+        .otherwise(lit(0.0))
+    (top, top.cast("double") / size(ws), dupFrac)
+  }
+
   /** Intra-document REPETITION scoring (Gopher-style quality rule): the
     * fraction of words taken by the single most frequent word and the
     * fraction of duplicate consecutive 2-grams; `repetitive` flags docs
@@ -1378,20 +1395,7 @@ object PipelineOps {
     val d = documentsRaw(spark, sfDir)
     val ws = words($"text")
     val sh = shingles2(ws)
-    val top = aggregate(array_sort(ws),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, w) => {
-        val run = when(w === acc.getField("prev"),
-          acc.getField("run") + 1L).otherwise(lit(1L))
-        struct(w.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    val dupFrac =
-      when(size(sh) > 0,
-        (size(sh) - size(array_distinct(sh))).cast("double") / size(sh))
-        .otherwise(lit(0.0))
-    val topFrac = top.cast("double") / size(ws)
+    val (top, topFrac, dupFrac) = repetition(ws, sh)
     d.select(
       $"doc_id",
       size(ws).as("n_words"),
@@ -1653,11 +1657,6 @@ object PipelineOps {
       .select($"doc_id", $"shuffle_key", $"shuffle_rank", $"split")
   }
 
-  /** Embedding dimensionality of the test tables (fixed by TESTDATA.md;
-    * asserted at runtime so a corpus change fails loudly instead of
-    * silently quantizing a prefix). */
-  private val EmbDims = 64
-
   /** Scalar QUANTIZATION of the embedding corpus to int8 codes — the
     * compression stage a 10^12-vector ANN index needs (raw float32 at
     * 64 dims is 256 B/vector; SQ8 is 64 B plus a 2-row codebook).
@@ -1676,7 +1675,7 @@ object PipelineOps {
   def embedQuantize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = embeddings(spark, sfDir)
-    val dims = EmbDims
+    val dims = EmbDim
     val aggs = (0 until dims).flatMap { i =>
       val v = element_at($"embedding", i + 1).cast("double")
       Seq(min(v).as(s"mn_$i"), max(v).as(s"mx_$i"))
@@ -1729,20 +1728,7 @@ object PipelineOps {
     import spark.implicits._
     val d = documentsRaw(spark, sfDir)
     val ws = words($"text")
-    val sh = shingles2(ws)
-    val top = aggregate(array_sort(ws),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, w) => {
-        val run = when(w === acc.getField("prev"),
-          acc.getField("run") + 1L).otherwise(lit(1L))
-        struct(w.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    val dupFrac = when(size(sh) > 0,
-      (size(sh) - size(array_distinct(sh))).cast("double") / size(sh))
-      .otherwise(lit(0.0))
-    val topFrac = top.cast("double") / size(ws)
+    val (_, topFrac, dupFrac) = repetition(ws, shingles2(ws))
     val passLang = $"lang" === "en"
     val passLen = size(ws) >= 25
     val passQuality =

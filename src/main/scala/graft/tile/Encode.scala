@@ -37,40 +37,14 @@ object Encode {
       else Some((tag, Left(v)))
     }
 
-  /** Same selection as [[mvtTags]], but as parallel (include-pattern
-    * index, value) arrays — the minimal shuffle form for
-    * [[PayloadCodec.pack]]; tag names and sint flags are re-derived from
-    * the layer config at assembly. Imperative: this runs once per
-    * (feature, zoom, tile) exploded row. */
-  def mvtTagArrays(layer: LayerDef, values: Array[String])
-      : (Array[Int], Array[String]) = {
-    val inc = layer.includeTags
-    val lim = math.min(inc.length, values.length)
-    val ti = new Array[Int](lim)
-    val tv = new Array[String](lim)
-    var n = 0
-    var i = 0
-    while (i < lim) {
-      val v = values(i)
-      // sint values that don't parse are warned-and-dropped upstream
-      // semantics (mvtenc.rs:33-40): drop here, parse again at assembly
-      if (v != null && (!inc(i)._2 || isParsableLong(v))) {
-        ti(n) = i; tv(n) = v; n += 1
-      }
-      i += 1
-    }
-    if (n == lim) (ti, tv)
-    else (java.util.Arrays.copyOf(ti, n),
-      java.util.Arrays.copyOfRange(tv, 0, n))
-  }
-
-  /** Same selection as [[mvtTagArrays]], but over the RAW value byte
-    * slices of a [[RingCodec.packFeat]] blob ([[RingCodec.unpackFeatRaw]]
+  /** Same selection as [[mvtTags]], but over the RAW value byte slices
+    * of a [[RingCodec.packFeat]] blob ([[RingCodec.unpackFeatRaw]]
     * offsets) — the engine hot path never materializes value Strings
     * (the UTF-8 → String → UTF-8 round trip per exploded row was ~8% of
     * serial pyramid CPU in a pv6 JFR profile). Returns (include-pattern
     * indices, value-record offsets) trimmed to the kept count; value
-    * record i is [len:i32-LE][utf8] at offset o(i) in the blob. */
+    * record i is [len:i32-LE][utf8] at offset o(i) in the blob. Tag names
+    * and sint flags are re-derived from the layer config at assembly. */
   def mvtTagSlices(layer: LayerDef, blob: Array[Byte], valOff: Array[Int])
       : (Array[Int], Array[Int]) = {
     val inc = layer.includeTags
@@ -233,7 +207,7 @@ object Encode {
   // ----------------------------------------------------------------- Wyrm
 
   /** Wyrm point feature: an inner <g> with tag attrs + a <use> per in-bbox
-    * point (point.rs:20-91). Always "found" once the feature is a bbox
+    * point (point.rs:20-91). Never elided once the feature is a bbox
     * candidate. */
   def wyrmPoint(layer: LayerDef, values: Seq[String], rings: Seq[Ring],
                 cfg: TileCfg): String = {
@@ -273,63 +247,34 @@ object Encode {
       else path.cls(layer.className(Some(value)))
     }
 
-  /** Wyrm linestring feature; None when no line's bbox intersects
-    * (linestring.rs:40-58, 81-84). */
-  def wyrmLinestring(layer: LayerDef, osm: Boolean, values: Seq[String],
-                     rings: Seq[Ring], cfg: TileCfg): Option[String] = {
-    if (!rings.exists(r => r.xs.nonEmpty && ringBBox(r).intersects(cfg.bbox)))
-      return None
+  /** Wyrm linestring (`closed = false`, linestring.rs:40-58, 81-84) or
+    * polygon (`closed = true`, polygon.rs:82-116) feature: one path over
+    * the rings whose bbox meets the tile; a polygon ring is connected back
+    * to its start and closed. None when no ring's bbox meets the tile. */
+  def wyrmPath(layer: LayerDef, osm: Boolean, values: Seq[String],
+               rings: Seq[Ring], cfg: TileCfg,
+               closed: Boolean): Option[String] = {
+    val hit =
+      rings.filter(r => r.xs.nonEmpty && ringBBox(r).intersects(cfg.bbox))
+    if (hit.isEmpty) return None
     val b = new SvgPathBuilder
-    rings.foreach { r =>
-      if (r.xs.nonEmpty && ringBBox(r).intersects(cfg.bbox)) {
-        var start = true
-        val chain = cfg.pointChain()
-        def drainTo(n: Int): Unit =
-          while (chain.len > n) chain.popFront().foreach { p =>
-            val (x, y) = cfg.xform(p)
-            if (start) { b.moveTo(x, y); start = false } else b.lineTo(x, y)
-          }
-        var i = 0
-        while (i < r.xs.length) {
-          chain.pushBack(Pt(r.xs(i), r.ys(i)))
-          drainTo(2)
-          i += 1
+    hit.foreach { r =>
+      var start = true
+      val chain = cfg.pointChain()
+      def drainTo(n: Int): Unit =
+        while (chain.len > n) chain.popFront().foreach { p =>
+          val (x, y) = cfg.xform(p)
+          if (start) { b.moveTo(x, y); start = false } else b.lineTo(x, y)
         }
-        drainTo(0)
+      var i = 0
+      while (i < r.xs.length) {
+        chain.pushBack(Pt(r.xs(i), r.ys(i)))
+        drainTo(2)
+        i += 1
       }
-    }
-    val path = new SvgElem("path")
-    pathAttrs(path, layer, osm, values)
-    path.attr("d", b.result())
-    Some(path.render())
-  }
-
-  /** Wyrm polygon feature; per-ring bbox gate + connect + close
-    * (polygon.rs:82-116). */
-  def wyrmPolygon(layer: LayerDef, osm: Boolean, values: Seq[String],
-                  rings: Seq[Ring], cfg: TileCfg): Option[String] = {
-    if (!rings.exists(r => r.xs.nonEmpty && ringBBox(r).intersects(cfg.bbox)))
-      return None
-    val b = new SvgPathBuilder
-    rings.foreach { r =>
-      if (r.xs.nonEmpty && ringBBox(r).intersects(cfg.bbox)) {
-        var start = true
-        val chain = cfg.pointChain()
-        def drainTo(n: Int): Unit =
-          while (chain.len > n) chain.popFront().foreach { p =>
-            val (x, y) = cfg.xform(p)
-            if (start) { b.moveTo(x, y); start = false } else b.lineTo(x, y)
-          }
-        var i = 0
-        while (i < r.xs.length) {
-          chain.pushBack(Pt(r.xs(i), r.ys(i)))
-          drainTo(2)
-          i += 1
-        }
-        chain.connect()
-        drainTo(0)
-        if (!start) b.close()
-      }
+      if (closed) chain.connect()
+      drainTo(0)
+      if (closed && !start) b.close()
     }
     val path = new SvgElem("path")
     pathAttrs(path, layer, osm, values)

@@ -22,8 +22,8 @@ final case class TileFeatRow(tile_id: Long, layer_rank: Int,
   * encode work into one task. The shuffle representation is minimal: the
   * sort key rides as three primitives and EVERYTHING else —
   * pre-varinted geometry commands (~1-2 B per command vs 8 B of Long),
-  * tag include-pattern indices + value strings, wyrm content + found —
-  * is one [[PayloadCodec]] blob, so Catalyst (de)serializes the row as
+  * tag include-pattern indices + value strings, wyrm content — is one
+  * [[PayloadCodec]] blob, so Catalyst (de)serializes the row as
   * primitives plus a byte copy on both sides of the pyramid's one
   * exchange. Key names and sint flags are re-derived from the layer
   * config at assembly. */
@@ -36,7 +36,8 @@ final case class FeatPayload(
   *   features ⨝ broadcast(layer meta)  — zoom gate P4, plan-time pruned
   *     → explode zooms (sequence)      — one pass over the feature table
   *     → explode tileCover(z, bbox)    — batched cell cover (J4, exact)
-  *     → per-feature encode (map)      — clip+simplify+commands, parallel
+  *     → per-feature encode (map)      — clip+simplify+commands, parallel;
+  *                                        elided features leave no payload
   *     → groupByKey(tile_id)           — ONE shuffle: layer aggregation
   *                                        (A3) + tile assembly (A4/A5),
   *                                        feature order (kind_rank, id),
@@ -91,68 +92,52 @@ object Pyramid extends Serializable {
       .as[TileFeatRow]
   }
 
-  /** Per-feature encode (map-side, pre-shuffle). Returns None when the
-    * feature is elided for this tile (empty MVT geometry / wyrm not
-    * contained). Kept as the one-shot API for tests; the engine plan uses
-    * a per-partition [[FeatureEncoder]] (same logic, reused buffers). */
-  def encodeFeature(cfgE: EngineCfg, group: LayerGroup, fmt: String)
-                   (r: TileFeatRow): Option[FeatPayload] =
-    new FeatureEncoder(cfgE, group, fmt).encode(r)
-
   /** Assemble one tile from its pre-encoded features, STREAMING over an
     * iterator already sorted by (layer_rank, kind_rank, id) — no
     * materialization of the feature set (A3 + A4/A5). Memory is bounded by
     * the output tile bytes (one layer buffer + the assembled blob), not by
-    * the feature count. */
-  def assembleSorted(cfgE: EngineCfg, group: LayerGroup, fmt: String,
-                     groupName: String, tileId: Long,
-                     sorted: Iterator[FeatPayload],
-                     pool: MvtLayer = null): Iterator[TileRow] = {
+    * the feature count. [[FeatureEncoder]] already elided every feature
+    * that has nothing to draw in this tile, so each payload is one
+    * feature, and a tile is emitted iff it has a payload. MVT layers
+    * encode into `pool`, the task's reused [[MvtLayer]]; wyrm passes
+    * null. */
+  def assembleSorted(group: LayerGroup, fmt: String, groupName: String,
+                     tileId: Long, sorted: Iterator[FeatPayload],
+                     pool: MvtLayer): Iterator[TileRow] = {
+    if (!sorted.hasNext) return Iterator.empty
     val tid = TileId.unpack(tileId)
-    if (fmt == "mvt") {
+    val bytes = if (fmt == "mvt") {
       val layerBytes = scala.collection.mutable.ArrayBuffer
         .empty[Array[Byte]]
-      var ml: MvtLayer = null
       var curRank = -1
       sorted.foreach { p =>
         if (p.layer_rank != curRank) {
-          if (ml != null && ml.numFeatures > 0) layerBytes += ml.encode()
+          if (curRank >= 0) layerBytes += pool.encode()
           curRank = p.layer_rank
-          // a reused pool (resetFor ≡ fresh dictionaries) amortizes the
-          // per-(tile, layer) builder allocation across the whole task
-          if (pool != null) { pool.resetFor(group.layers(curRank).name)
-            ml = pool }
-          else ml = new MvtLayer(group.layers(curRank).name, cfgE.tileExtent)
+          // resetFor ≡ fresh dictionaries, so reusing the pool across
+          // every (tile, layer) of the task keeps the bytes
+          pool.resetFor(group.layers(curRank).name)
         }
         val layer = group.layers(curRank)
         val v = new PayloadCodec.View(p.blob)
-        // empty geometry is elided at encode time; the guard mirrors
-        // addFeatureRaw's (tags of an elided feature must not intern)
-        if (v.geomLen > 0) {
-          ml.beginTags()
-          var j = 0
-          while (j < v.nTags) {
-            val (tag, sint) = layer.includeTags(v.tagIdx(j))
-            val s = v.tagVal(j)
-            ml.addTag(tag,
-              if (sint) java.lang.Long.valueOf(s.toLong) else s)
-            j += 1
-          }
-          ml.endFeature(layer.geomTp, p.blob, v.geomOff, v.geomLen)
+        pool.beginTags()
+        var j = 0
+        while (j < v.nTags) {
+          val (tag, sint) = layer.includeTags(v.tagIdx(j))
+          val s = v.tagVal(j)
+          pool.addTag(tag,
+            if (sint) java.lang.Long.valueOf(s.toLong) else s)
+          j += 1
         }
+        pool.endFeature(layer.geomTp, p.blob, v.geomOff, v.geomLen)
       }
-      if (ml != null && ml.numFeatures > 0) layerBytes += ml.encode()
-      if (layerBytes.nonEmpty)
-        Iterator(TileRow(groupName, tid.z, tid.x, tid.y, fmt,
-          MvtTile.assemble(layerBytes.toSeq)))
-      else Iterator.empty
+      layerBytes += pool.encode()
+      MvtTile.assemble(layerBytes.toSeq)
     } else {
       // every zoom-active layer gets a <g>, present or not
-      // (wyrmenc.rs:62-87); tile emitted iff any feature found
-      var anyFound = false
+      // (wyrmenc.rs:62-87)
       val sb = new StringBuilder
       var nextLayer = 0 // first layer whose <g> has not been emitted yet
-      var open = false
       def emitEmptyUpTo(rank: Int): Unit = while (nextLayer < rank) {
         val l = group.layers(nextLayer)
         if (l.checkZoom(tid.z))
@@ -162,25 +147,21 @@ object Pyramid extends Serializable {
       }
       sorted.foreach { p =>
         if (p.layer_rank >= nextLayer) {
-          if (open) { sb.append("</g>"); open = false }
+          if (nextLayer > 0) sb.append("</g>")
           emitEmptyUpTo(p.layer_rank)
           // payloads only exist for zoom-active layers (coverJoin gates)
           sb.append("<g class=\"")
             .append(group.layers(p.layer_rank).className(None))
             .append("\">")
-          open = true
           nextLayer = p.layer_rank + 1
         }
-        val v = new PayloadCodec.View(p.blob)
-        sb.append(v.content)
-        if (v.found) anyFound = true
+        sb.append(new PayloadCodec.View(p.blob).content)
       }
-      if (open) sb.append("</g>")
+      sb.append("</g>")
       emitEmptyUpTo(group.layers.length)
-      if (!anyFound) Iterator.empty
-      else Iterator(TileRow(groupName, tid.z, tid.x, tid.y, fmt,
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     }
+    Iterator(TileRow(groupName, tid.z, tid.x, tid.y, fmt, bytes))
   }
 
   /** Allocation-free (layer_rank, kind_rank, id) ordering — sortBy/
@@ -284,7 +265,7 @@ object Pyramid extends Serializable {
       }
     }.collect()
     val pool = if (fmt == "mvt") new MvtLayer("", extent) else null
-    spark.createDataset(assembleSorted(cfgE, group, fmt, groupName, tid,
+    spark.createDataset(assembleSorted(group, fmt, groupName, tid,
       sortPayloads(payloads).iterator, pool).toSeq)
   }
 
@@ -301,23 +282,26 @@ object Pyramid extends Serializable {
     @transient private lazy val pool =
       if (fmt == "mvt") new MvtLayer("", cfgE.tileExtent) else null
     def apply(tid: Long, rows: Iterator[FeatPayload]): Iterator[TileRow] =
-      assembleSorted(cfgE, group, fmt, groupName, tid,
+      assembleSorted(group, fmt, groupName, tid,
         sortPayloads(rows.toArray).iterator, pool)
   }
 
 }
 
 /** Reusable per-partition feature encoder — the engine's map-side hot
-  * path, one instance per `mapPartitions` closure. A pv6 JFR profile put
+  * path, one instance per `mapPartitions` closure, and the one place
+  * that decides whether a feature appears in a tile: `encode` returns
+  * None when it is elided (empty MVT geometry; no wyrm ring bbox meets the
+  * tile), as the reference's encoders skip it. A pv6 JFR profile put
   * ~15% of serial pyramid CPU in per-row overhead this class removes:
   * a fresh ProtoWriter + MvtGeomEncoder per (feature, zoom, tile) row
   * (allocation + GC), the boxed command buffer, and the UTF-8 → String →
-  * UTF-8 round trip for tag values. MVT tag values now travel as raw
+  * UTF-8 round trip for tag values. MVT tag values travel as raw
   * byte slices from the [[RingCodec.packFeat]] blob straight into the
   * payload ([[RingCodec.unpackFeatRaw]] → [[Encode.mvtTagSlices]] →
-  * [[PayloadCodec.packRaw]]); the wyrm branch still decodes Strings (its
-  * SVG rendering consumes them). Byte parity with the one-shot path is
-  * pinned by the sbt Oracle suite (old buffered API, z0-16 byte-exact). */
+  * [[PayloadCodec.packRaw]]); the wyrm branch decodes Strings (its
+  * SVG rendering consumes them). Byte parity with the reference shape is
+  * pinned by the sbt Oracle suite (z0-16 byte-exact). */
 final class FeatureEncoder(cfgE: EngineCfg, group: LayerGroup, fmt: String)
     extends Serializable {
   @transient private lazy val gw = new ProtoWriter
@@ -325,12 +309,11 @@ final class FeatureEncoder(cfgE: EngineCfg, group: LayerGroup, fmt: String)
     new MvtGeomEncoder(GeomTp.Point, BBox(0, 0, 0, 0), Affine())
 
   def encode(r: TileFeatRow): Option[FeatPayload] = {
-    val rank = r.layer_rank
-    val layer = group.layers(rank)
+    val layer = group.layers(r.layer_rank)
     val tid = TileId.unpack(r.tile_id)
     val tcfg = TileCfg(tid, cfgE.tileExtent,
       Pyramid.marginFor(fmt, tid.z))
-    if (fmt == "mvt") {
+    val blob = if (fmt == "mvt") {
       val (valOff, rings) = RingCodec.unpackFeatRaw(r.packed)
       ge.reset(layer.geomTp, tcfg.bbox, tcfg.transform)
       Encode.mvtAddRings(ge, layer.geomTp, rings, tcfg)
@@ -341,26 +324,20 @@ final class FeatureEncoder(cfgE: EngineCfg, group: LayerGroup, fmt: String)
         var ci = 0
         while (ci < cmds.length) { gw.writeVarint(cmds(ci)); ci += 1 }
         val (tagIdx, tagOff) = Encode.mvtTagSlices(layer, r.packed, valOff)
-        Some(FeatPayload(r.tile_id, rank, r.kind_rank, r.id,
-          PayloadCodec.packRaw(found = true, gw.buffer, gw.size,
-            tagIdx, tagOff, r.packed)))
+        Some(PayloadCodec.packRaw(gw.buffer, gw.size, tagIdx, tagOff,
+          r.packed))
       }
     } else {
       val (values, rings) = RingCodec.unpackFeat(r.packed)
-      val rendered: Option[(String, Boolean)] = layer.geomTp match {
+      val content = layer.geomTp match {
         case GeomTp.Point =>
-          Some((Encode.wyrmPoint(layer, values, rings, tcfg), true))
-        case GeomTp.Linestring =>
-          Encode.wyrmLinestring(layer, group.osm, values, rings, tcfg)
-            .map((_, true))
-        case GeomTp.Polygon =>
-          Encode.wyrmPolygon(layer, group.osm, values, rings, tcfg)
-            .map((_, true))
+          Some(Encode.wyrmPoint(layer, values, rings, tcfg))
+        case tp =>
+          Encode.wyrmPath(layer, group.osm, values, rings, tcfg,
+            closed = tp == GeomTp.Polygon)
       }
-      rendered.map { case (content, found) =>
-        FeatPayload(r.tile_id, rank, r.kind_rank, r.id,
-          PayloadCodec.packWyrm(found, content))
-      }
+      content.map(PayloadCodec.packWyrm)
     }
+    blob.map(FeatPayload(r.tile_id, r.layer_rank, r.kind_rank, r.id, _))
   }
 }

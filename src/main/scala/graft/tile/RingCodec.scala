@@ -22,55 +22,14 @@ import graft.model.Ring
   * explode) turns the per-row cost into a byte-array copy plus a
   * primitive-array decode: zero boxing, two primitive arrays per ring.
   *
-  * Layout: [nRings:i32] then per ring [outer:u8][n:i32][xs:f64×n]
-  * [ys:f64×n]. */
+  * The tag values ride in the same blob: the per-row `values: Seq[String]`
+  * deserialization was the next UTF8String.getBytes/fromBytes hotspot
+  * after the rings (same MapObjects-per-row shape), so the exploded row
+  * carries primitives only.
+  *
+  * Layout: [nVals:i32][per val: len:i32 (-1 = null) + utf8 bytes]
+  * [nRings:i32] then per ring [outer:u8][n:i32][xs:f64×n][ys:f64×n]. */
 object RingCodec {
-
-  def pack(rings: Seq[Ring]): Array[Byte] = {
-    var bytes = 4
-    rings.foreach(r => bytes += 5 + 16 * r.xs.length)
-    val bb = ByteBuffer.allocate(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(rings.length)
-    rings.foreach { r =>
-      bb.put(if (r.outer) 1.toByte else 0.toByte)
-      bb.putInt(r.xs.length)
-      var i = 0
-      while (i < r.xs.length) { bb.putDouble(r.xs(i)); i += 1 }
-      i = 0
-      while (i < r.ys.length) { bb.putDouble(r.ys(i)); i += 1 }
-    }
-    bb.array()
-  }
-
-  def unpack(b: Array[Byte]): Array[Ring] = unpackRings(
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN))
-
-  private def unpackRings(bb: ByteBuffer): Array[Ring] = {
-    val nr = bb.getInt
-    val out = new Array[Ring](nr)
-    var r = 0
-    while (r < nr) {
-      val outer = bb.get() == 1
-      val n = bb.getInt
-      val xs = new Array[Double](n)
-      val ys = new Array[Double](n)
-      var i = 0
-      while (i < n) { xs(i) = bb.getDouble; i += 1 }
-      i = 0
-      while (i < n) { ys(i) = bb.getDouble; i += 1 }
-      out(r) = Ring(outer, xs, ys)
-      r += 1
-    }
-    out
-  }
-
-  // ---- whole-feature payload: tag values + rings in ONE blob ----
-  // The per-row `values: Seq[String]` deserialization was the next
-  // UTF8String.getBytes/fromBytes hotspot after the rings (same
-  // MapObjects-per-row shape); packing both sides into a single byte
-  // column leaves the exploded row with primitives only.
-  // Layout: [nVals:i32][per val: len:i32 (-1 = null) + utf8 bytes]
-  // then the ring block of [[pack]].
 
   def packFeat(values: Seq[String], rings: Seq[Ring]): Array[Byte] = {
     val utf = values.map(v => if (v == null) null else v.getBytes(UTF_8))
@@ -118,24 +77,30 @@ object RingCodec {
     }
     val bb = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
     bb.position(p)
-    (offs, unpackRings(bb))
+    val nr = bb.getInt
+    val rings = new Array[Ring](nr)
+    var r = 0
+    while (r < nr) {
+      val outer = bb.get() == 1
+      val n = bb.getInt
+      val xs = new Array[Double](n)
+      val ys = new Array[Double](n)
+      i = 0
+      while (i < n) { xs(i) = bb.getDouble; i += 1 }
+      i = 0
+      while (i < n) { ys(i) = bb.getDouble; i += 1 }
+      rings(r) = Ring(outer, xs, ys)
+      r += 1
+    }
+    (offs, rings)
   }
 
-  /** (tag values with nulls, rings) from a [[packFeat]] blob. */
+  /** (tag values with nulls, rings) from a [[packFeat]] blob: the String
+    * view over [[unpackFeatRaw]]'s value offsets. */
   def unpackFeat(b: Array[Byte]): (Array[String], Array[Ring]) = {
-    val bb = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-    val nv = bb.getInt
-    val vals = new Array[String](nv)
-    var i = 0
-    while (i < nv) {
-      val len = bb.getInt
-      if (len >= 0) {
-        val u = new Array[Byte](len)
-        bb.get(u)
-        vals(i) = new String(u, UTF_8)
-      }
-      i += 1
-    }
-    (vals, unpackRings(bb))
+    val (offs, rings) = unpackFeatRaw(b)
+    (offs.map(o =>
+      if (o < 0) null else new String(b, o + 4, readIntLE(b, o), UTF_8)),
+      rings)
   }
 }

@@ -236,12 +236,10 @@ object Oracle {
                 case GeomTp.Point =>
                   sb.append(Encode.wyrmPoint(l, f.values, f.rings, tcfg))
                   anyFound = true
-                case GeomTp.Linestring =>
-                  Encode.wyrmLinestring(l, group.osm, f.values, f.rings,
-                    tcfg).foreach { s => sb.append(s); anyFound = true }
-                case GeomTp.Polygon =>
-                  Encode.wyrmPolygon(l, group.osm, f.values, f.rings,
-                    tcfg).foreach { s => sb.append(s); anyFound = true }
+                case tp =>
+                  Encode.wyrmPath(l, group.osm, f.values, f.rings, tcfg,
+                    closed = tp == GeomTp.Polygon)
+                    .foreach { s => sb.append(s); anyFound = true }
               }
             }
           sb.append("</g>")

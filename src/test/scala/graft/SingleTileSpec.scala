@@ -6,7 +6,7 @@ import graft.core.{BBox, EngineCfg, TileGrid, TileId}
 import graft.dig.Dig
 import graft.extract.Extract
 import graft.ingest.CorpusGen
-import graft.model.Feature
+import graft.model.{Feature, Ring}
 import graft.tile.Pyramid
 
 /** Byte parity of the single-tile render (`Pyramid.tile`) with the
@@ -71,6 +71,63 @@ class SingleTileSpec extends AnyFunSuite {
       assert(gatedOnly.nonEmpty, s"no gated-only tile at $fmt z15-17")
       gatedOnly.get.toSeq.sortBy(_.packed).take(3).foreach { t =>
         assert(render(fmt, t).isEmpty, s"$fmt $t")
+      }
+    }
+  }
+
+  // Synthetic features on a 3×3 block of z12 tiles whose bboxes cover
+  // the whole block while their rings and segments reach only some of
+  // it: a lake with one rectangle ring in the block's top-left tile and
+  // one in its bottom-right tile, and a motorway drawn as an L of two
+  // lines, along the top row and down the right column. Each ring keeps
+  // 30% of a tile clear of its tile's edges, beyond either format's
+  // margin, so the other four tiles hold no drawable geometry.
+  private val z0 = 12
+  private val (x0, y0) = (1000, 1500)
+  private def at(i: Int, j: Int, fx: Double, fy: Double): (Double, Double) = {
+    val b = TileGrid.tileBBox(z0, x0 + i, y0 + j)
+    (b.xmin + fx * (b.xmax - b.xmin), b.ymax - fy * (b.ymax - b.ymin))
+  }
+  private def ring(pts: Seq[(Double, Double)]) =
+    Ring(outer = true, pts.map(_._1).toArray, pts.map(_._2).toArray)
+  private def rect(i: Int, j: Int) = {
+    val c = Seq((0.3, 0.3), (0.7, 0.3), (0.7, 0.7), (0.3, 0.7), (0.3, 0.3))
+    ring(c.map { case (fx, fy) => at(i, j, fx, fy) })
+  }
+  private def feature(layer: String, id: Long, values: Seq[String],
+                      rings: Seq[Ring]) = {
+    val xs = rings.flatMap(_.xs); val ys = rings.flatMap(_.ys)
+    Feature(layer, 0, id, values, rings, xs.min, ys.min, xs.max, ys.max)
+  }
+  private val synthetic = Seq(
+    feature("lake", 1L, Seq("1", "Two Pools"), Seq(rect(0, 0), rect(2, 2))),
+    feature("motorway", 2L, Seq("2", "Ell", "I 1"), Seq(
+      ring(Seq(at(0, 0, 0.5, 0.5), at(2, 0, 0.5, 0.5))),
+      ring(Seq(at(2, 0, 0.5, 0.5), at(2, 2, 0.5, 0.5))))))
+  private val unreached =
+    Seq((0, 1), (0, 2), (1, 1), (1, 2)).map { case (i, j) =>
+      TileId(z0, x0 + i, y0 + j) }
+
+  for (fmt <- Seq("mvt", "wyrm")) {
+    test(s"covered tiles that no ring or segment reaches are not emitted ($fmt)") {
+      import spark.implicits._
+      val ds = spark.createDataset(synthetic)
+      val covered = synthetic.flatMap(cover(_, fmt, z0)).toSet
+      assert(unreached.forall(covered.contains))
+      val pyramid = Pyramid.tiles(spark, ds, cfg, "tile", fmt, z0, z0)
+        .collect()
+      val emitted = pyramid.map(r => TileId(r.z, r.x, r.y)).toSet
+      assert(emitted == covered -- unreached)
+      unreached.foreach { t =>
+        assert(!emitted.contains(t), s"$fmt $t")
+        assert(Pyramid.tile(spark, ds, cfg, "tile", fmt, t.z, t.x, t.y)
+          .collect().isEmpty, s"$fmt $t")
+        assert(Oracle.tileBytes(synthetic, cfg, group, fmt, t).isEmpty)
+      }
+      pyramid.foreach { r =>
+        val t = TileId(r.z, r.x, r.y)
+        val want = Oracle.tileBytes(synthetic, cfg, group, fmt, t)
+        assert(want.exists(_.sameElements(r.bytes)), s"$fmt $t")
       }
     }
   }

@@ -17,16 +17,16 @@ class WyrmAttrSpec extends AnyFunSuite {
     Array(b.xmin / 2, b.xmax / 2), Array(0.0, 0.0))
 
   test("osm group: osm_id class + data-name") {
-    val s = Encode.wyrmLinestring(layer, osm = true,
-      Seq("1795848", "Main St"), Seq(ring), tcfg).get
+    val s = Encode.wyrmPath(layer, osm = true,
+      Seq("1795848", "Main St"), Seq(ring), tcfg, closed = false).get
     assert(s.contains("class=\"osm-1795848\""))
     assert(s.contains("data-name=\"Main St\""))
     assert(s.startsWith("<path ") && s.contains(" d=\"m"))
   }
 
   test("non-osm group: values become mangled class names") {
-    val s = Encode.wyrmLinestring(layer, osm = false,
-      Seq("1795848", "Main St"), Seq(ring), tcfg).get
+    val s = Encode.wyrmPath(layer, osm = false,
+      Seq("1795848", "Main St"), Seq(ring), tcfg, closed = false).get
     // osm_id+sint still → osm- class; name → segment-MainSt class
     assert(s.contains("osm-1795848"))
     assert(s.contains("segment-MainSt"))
@@ -45,5 +45,26 @@ class WyrmAttrSpec extends AnyFunSuite {
     assert(s2.contains("rotate: 45deg"))
     assert(s2.contains("data-big=\"v\"") &&
       s2.contains("class=\"city_poi-X\""))
+  }
+
+  test("one path builder: a polygon ring closes, a linestring does not") {
+    val lake = LayerDef("lake", "polygon", "0+", Seq("$osm_id"))
+    // an outer triangle and a hole, neither repeating its first point
+    def tri(s: Double) = Ring(outer = s > 0.2,
+      Array(-s * b.xmax, s * b.xmax, 0.0), Array(-s * b.ymax, -s * b.ymax,
+        s * b.ymax))
+    val rings = Seq(tri(0.5), tri(0.1))
+    def d(s: String) = """ d="([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
+    val poly = d(Encode.wyrmPath(lake, osm = true, Seq("7"), rings, tcfg,
+      closed = true).get)
+    val line = d(Encode.wyrmPath(lake, osm = true, Seq("7"), rings, tcfg,
+      closed = false).get)
+    assert(poly.count(_ == 'm') == 2 && line.count(_ == 'm') == 2)
+    assert(poly.count(_ == 'z') == 2 && poly.endsWith("z"))
+    assert(!line.contains('z'))
+    // closing adds the segment back to each ring's first point
+    assert(poly.length > line.length + 2)
+    assert(Encode.wyrmPath(lake, osm = true, Seq("7"), Seq.empty, tcfg,
+      closed = true).isEmpty)
   }
 }
