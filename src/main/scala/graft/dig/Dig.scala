@@ -112,6 +112,12 @@ object Dig {
         graft.expr.GeoFunctions.mercY($"lat").as("y"))
     val allRels = entities.where($"entity_kind" === "relation")
       .select($"id", $"members")
+    // (layer, id) of the members of kind `kind` of the relations `rels`
+    def memberIds(rels: DataFrame, kind: String): DataFrame =
+      rels.select($"layer", explode($"members").as("mm"))
+        .where($"mm.ref_kind" === kind)
+        .select($"layer", $"mm.ref_id".as("id"))
+        .distinct()
 
     // transitive relation-member closure (per layer). r6: the seed frame
     // is NOT checkpointed — it is one cheap filter over the cached `m`
@@ -123,12 +129,7 @@ object Dig {
     var frontier = mapRels
     var closed = false
     while (!closed) {
-      val memberRelIds = frontier
-        .select($"layer", explode($"members").as("mm"))
-        .where($"mm.ref_kind" === "relation")
-        .select($"layer", $"mm.ref_id".as("id"))
-        .distinct()
-      val newRels = memberRelIds.join(allRels, "id")
+      val newRels = memberIds(frontier, "relation").join(allRels, "id")
         .join(mapRels.select($"layer", $"id"), Seq("layer", "id"),
           "left_anti")
         .select($"layer", $"id", $"members")
@@ -140,22 +141,12 @@ object Dig {
       }
     }
 
-    val memberWayIds = mapRels
-      .select($"layer", explode($"members").as("mm"))
-      .where($"mm.ref_kind" === "way")
-      .select($"layer", $"mm.ref_id".as("id"))
-      .distinct()
-    val depWays = memberWayIds.join(allWays, "id")
+    val depWays = memberIds(mapRels, "way").join(allWays, "id")
       .select($"layer", $"id", $"tags", $"node_refs")
 
     // node members of map relations join the map too (they feed point
     // layers via "EVERY node in the map", osm.rs:226-231)
-    val memberNodeIds = mapRels
-      .select($"layer", explode($"members").as("mm"))
-      .where($"mm.ref_kind" === "node")
-      .select($"layer", $"mm.ref_id".as("id"))
-      .distinct()
-    val depMemberNodes = memberNodeIds.join(allNodes, Seq("id"))
+    val depMemberNodes = memberIds(mapRels, "node").join(allNodes, Seq("id"))
       .select($"layer", $"id", $"tags", $"x", $"y")
 
     // ObjMap ways per layer (a way may be both matched and a dependency)

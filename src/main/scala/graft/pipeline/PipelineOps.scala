@@ -149,32 +149,43 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** 16-bit SimHash over distinct words; hash bits from the first 4 hex
-    * chars of md5(word) — portable across engines (hex-digit arithmetic,
-    * no binary casts). */
-  def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
+  /** 16-bit SimHash over distinct words: block `b0` of
+    * [[simhashBlocks]], the first 4 hex chars of md5(word). */
+  def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame =
     // raw read: this 16-bit variant's build is small enough that the
     // spreading exchange measured slower than the serial scan
-    val d = documentsRaw(spark, sfDir)
-    // r6: the 4 hex chars are parsed ONCE per word into a 16-bit int
-    // (was: one substring+conv per BIT, 16× the parse work); each bit
-    // then falls out of one shift+mask. Bit values are unchanged:
-    // ((v >> 4(3-c)) & 15) >> (3-b%4) & 1 ≡ (v >> (4(3-c)+3-b%4)) & 1.
-    val w = d.select($"doc_id", explode(array_distinct(words($"text")))
-      .as("w"))
-      .withColumn("hv", conv(substring(md5($"w"), 1, 4), 16, 10)
-        .cast("int"))
-    val bitCols = (0 until 16).map { b =>
-      val bit = shiftright($"hv", 4 * (3 - b / 4) + 3 - b % 4)
-        .bitwiseAND(lit(1))
-      sum(bit * 2 - 1).as(s"s$b")
+    simhashBlocks(documentsRaw(spark, sfDir), 1)
+      .select(col("doc_id"), col("b0").as("simhash16"))
+
+  /** SimHash per doc of `d` over its distinct words, as `nBlocks` 16-bit
+    * block values b0.. (each 0..65535 — int-safe in every engine, no
+    * sign-bit games): block k takes its bits from hex chars 4k+1..4k+4
+    * of md5(word) — portable across engines (hex-digit arithmetic, no
+    * binary casts). r6: each block's 4 hex chars are parsed ONCE per word
+    * into a 16-bit int (was: one substring+conv per BIT, 16× the parse
+    * work); each bit then falls out of one shift+mask. Bit values are
+    * unchanged: ((v >> 4(3-c)) & 15) >> (3-j%4) & 1 ≡
+    * (v >> (4(3-c)+3-j%4)) & 1 for bit j of char c = j/4. */
+  private def simhashBlocks(d: DataFrame, nBlocks: Int): DataFrame = {
+    val w = (0 until nBlocks).foldLeft(
+      d.select(col("doc_id"), explode(array_distinct(words(col("text"))))
+        .as("w"))
+        .withColumn("h", substring(md5(col("w")), 1, 4 * nBlocks))) {
+      (f, k) => f.withColumn(s"hv$k",
+        conv(substring(col("h"), 4 * k + 1, 4), 16, 10).cast("int"))
     }
-    val agg = w.groupBy($"doc_id").agg(bitCols.head, bitCols.tail: _*)
-    val sim = (0 until 16).map { b =>
-      when(col(s"s$b") > 0, lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
-    agg.select($"doc_id", sim.as("simhash16"))
+    val bitCols = for (k <- 0 until nBlocks; j <- 0 until 16) yield {
+      val bit = shiftright(col(s"hv$k"), 4 * (3 - j / 4) + 3 - j % 4)
+        .bitwiseAND(lit(1))
+      sum(bit * 2 - 1).as(s"s${16 * k + j}")
+    }
+    val agg = w.groupBy(col("doc_id")).agg(bitCols.head, bitCols.tail: _*)
+    val blocks = (0 until nBlocks).map { k =>
+      (0 until 16).map { j =>
+        when(col(s"s${16 * k + j}") > 0, lit(1 << j)).otherwise(lit(0))
+      }.reduce(_ + _).cast("int").as(s"b$k")
+    }
+    agg.select(col("doc_id") +: blocks: _*)
   }
 
   /** Max hamming distance for [[dedupSimhashPairs]]. With a 64-bit
@@ -186,38 +197,10 @@ object PipelineOps {
     * bind. */
   val SimhashHammingMax = 3
 
-  /** 64-bit SimHash per doc, materialized as four 16-bit block values
-    * (b0..b3, each 0..65535 — int-safe in every engine, no sign-bit
-    * games). Same bit convention as [[dedupSimhash]], taken over the
-    * first 16 hex chars of md5(word). */
-  def dedupSimhashBlocks(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val d = documents(spark, sfDir)
-    // r6: one conv per 16-bit block (4 total) instead of one
-    // substring+conv per BIT (64) — same shift/mask identity as
-    // [[dedupSimhash]], identical bit values, 16× less hex parsing per
-    // word in the hot aggregation input.
-    val w = d.select($"doc_id", explode(array_distinct(words($"text")))
-      .as("w"))
-      .withColumn("h16", substring(md5($"w"), 1, 16))
-      .withColumn("hv0", conv(substring($"h16", 1, 4), 16, 10).cast("int"))
-      .withColumn("hv1", conv(substring($"h16", 5, 4), 16, 10).cast("int"))
-      .withColumn("hv2", conv(substring($"h16", 9, 4), 16, 10).cast("int"))
-      .withColumn("hv3", conv(substring($"h16", 13, 4), 16, 10).cast("int"))
-    val bitCols = (0 until 64).map { b =>
-      val j = b / 4 - 4 * (b / 16) // char index within the 4-char block
-      val bit = shiftright(col(s"hv${b / 16}"), 4 * (3 - j) + 3 - b % 4)
-        .bitwiseAND(lit(1))
-      sum(bit * 2 - 1).as(s"s$b")
-    }
-    val agg = w.groupBy($"doc_id").agg(bitCols.head, bitCols.tail: _*)
-    val blocks = (0 until 4).map { k =>
-      (0 until 16).map { j =>
-        when(col(s"s${k * 16 + j}") > 0, lit(1 << j)).otherwise(lit(0))
-      }.reduce(_ + _).cast("int").as(s"b$k")
-    }
-    agg.select(($"doc_id" +: blocks): _*)
-  }
+  /** 64-bit SimHash per doc: the four 16-bit blocks b0..b3 of
+    * [[simhashBlocks]], over the first 16 hex chars of md5(word). */
+  def dedupSimhashBlocks(spark: SparkSession, sfDir: String): DataFrame =
+    simhashBlocks(documents(spark, sfDir), 4)
 
   /** SimHash near-dup pairs: block-equality LSH over the 64-bit
     * fingerprint (4 tables of 16 bits), [[MaxBucket]] hot fence, then an
@@ -535,6 +518,45 @@ object PipelineOps {
     java.lang.Long.parseLong(hex, 16).toDouble / 2147483648.0 - 1.0
   }
 
+  /** The random-hyperplane LSH index of [[dedupEmbeddingDf]] and
+    * [[annLshTopKDf]]: `vecs` is one cached row per vector — `vec_id`,
+    * `embedding`, its hoisted norm `en` (an exact-cosine verify divides
+    * by norms computed once per vector here, not once per candidate
+    * pair) and one bucket id per table, `bkt0`…; [[postings]] explodes
+    * those into one `(table, bkt)` posting row per table. */
+  private final class LshIndex(val vecs: DataFrame, nTables: Int) {
+    /** `carry` plus the `(table, bkt)` posting of each table. */
+    def postings(carry: Column*): DataFrame =
+      vecs.select(carry :+ posexplode(array((0 until nTables).map(t =>
+        col(s"bkt$t")): _*)).as(Seq("table", "bkt")): _*)
+  }
+
+  /** Buckets `e0` by the sign of its dot with each of `nTables` ×
+    * `planesPerTable` md5-derived [[embPlane]] hyperplanes
+    * (`planesPerTable = 0` derives [[annPlanesFor]] from the row count, a
+    * parquet footer count, no data scan). The dot accumulates in INDEX
+    * ORDER, mirrored by the oracles' list_sum(list_transform) — identical
+    * fold, identical IEEE doubles on both engines. r6: all tables'
+    * buckets come from ONE custom codegen kernel ([[LshBuckets]] — a
+    * generated loop over the plane matrix), replacing nTables × planes
+    * interpreted aggregate(zip_with) lambdas; a fully unrolled Column
+    * encoding was tried first and reverted (Janino compile tax, see
+    * OPTIMIZATION_r06.md). */
+  private def lshIndex(e0: DataFrame, nTables: Int, planesPerTable: Int,
+                       dim: Int): LshIndex = {
+    val planes =
+      if (planesPerTable > 0) planesPerTable else annPlanesFor(e0.count())
+    val matrix = Array.tabulate(nTables)(t => Array.tabulate(planes)(p =>
+      Array.tabulate(dim)(i => embPlane(t, p, i))))
+    val e = col("embedding")
+    new LshIndex(e0.select(col("vec_id"), e,
+        sqrt(dotU(e, e, dim)).as("en"),
+        PipelineExprs.lshBuckets(e, matrix).as("bkts"))
+      .select(col("vec_id") +: e +: col("en") +: (0 until nTables).map(t =>
+        get(col("bkts"), lit(t)).as(s"bkt$t")): _*)
+      .cache(), nTables)
+  }
+
   /** Embedding-cosine near-dup pairs: random-hyperplane LSH candidate
     * generation + EXACT cosine verify — the embedding-space sibling of
     * [[dedupMinhashPairs]] (same op shape: deterministic bucketing defines
@@ -566,32 +588,15 @@ object PipelineOps {
                        planesPerTable: Int, dim: Int,
                        maxBucket: Int): DataFrame = {
     import spark.implicits._
-    val planes =
-      if (planesPerTable > 0) planesPerTable else annPlanesFor(e0.count())
-    // sign-of-dot bucket bits; dot accumulates in INDEX ORDER, mirrored
-    // by the oracle's list_sum(list_transform). r6: one [[LshBuckets]]
-    // codegen kernel for all tables (see annLshTopKDf's note).
-    val matrix = Array.tabulate(nTables)(t => Array.tabulate(planes)(p =>
-      Array.tabulate(dim)(i => embPlane(t, p, i))))
     // r6 cache/shuffle restructure (guide §2.3 "shuffle keys, not
-    // payloads" and §8): the fingerprint frame is cached ONE row per
-    // vector (bucket ids as columns + the hoisted norm) instead of the
-    // previous nTables×-exploded copy that carried the embedding array
-    // in every posting row; candidate generation (explode → fence →
+    // payloads" and §8): candidate generation (explode → fence →
     // self-join → dropDuplicates) moves ONLY (vec_id, table, bkt) — the
-    // 64-dim payloads are re-attached by two joins against the cached
-    // frame AFTER the pair set is deduped, so each surviving pair moves
-    // its two embeddings exactly once into the exact-cosine verify.
-    val eb = e0.select($"vec_id", $"embedding",
-        sqrt(dotU($"embedding", $"embedding", dim)).as("nr"),
-        PipelineExprs.lshBuckets($"embedding", matrix).as("bkts"))
-      .select(($"vec_id" +: $"embedding" +: $"nr" +:
-        (0 until nTables).map(t => get($"bkts", lit(t)).as(s"bkt$t"))): _*)
-      .cache()
-    val tb = eb.select($"vec_id",
-      posexplode(array((0 until nTables).map(t => col(s"bkt$t")): _*))
-        .as(Seq("table", "bkt")))
-    val kept = fenced(tb, Seq("table", "bkt"), maxBucket)
+    // 64-dim payloads are re-attached by two joins against the index's
+    // cached frame AFTER the pair set is deduped, so each surviving pair
+    // moves its two embeddings exactly once into the exact-cosine verify.
+    val idx = lshIndex(e0, nTables, planesPerTable, dim)
+    val kept = fenced(idx.postings($"vec_id"), Seq("table", "bkt"),
+      maxBucket)
     val cand = kept.as("a").join(kept.as("b"), Seq("table", "bkt"))
       .where($"a.vec_id" < $"b.vec_id")
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"))
@@ -602,10 +607,10 @@ object PipelineOps {
     // sub-expressions, evaluated per VECTOR in the cached frame instead
     // of per PAIR)
     cand
-      .join(eb.select($"vec_id".as("vec_a"), $"embedding".as("ea"),
-        $"nr".as("na")), Seq("vec_a"))
-      .join(eb.select($"vec_id".as("vec_b"), $"embedding".as("eb"),
-        $"nr".as("nb")), Seq("vec_b"))
+      .join(idx.vecs.select($"vec_id".as("vec_a"), $"embedding".as("ea"),
+        $"en".as("na")), Seq("vec_a"))
+      .join(idx.vecs.select($"vec_id".as("vec_b"), $"embedding".as("eb"),
+        $"en".as("nb")), Seq("vec_b"))
       .withColumn("cos", dotU($"ea", $"eb", dim) / ($"na" * $"nb"))
       .where($"cos" >= threshold)
       .select($"vec_a", $"vec_b", round($"cos", 6).as("cos_r"))
@@ -634,7 +639,8 @@ object PipelineOps {
     * Measured on `ann_cosine_topk` (12.5M pair dots at sf0.1): the
     * kernel swap is the difference between an interpreted ~3·64-eval
     * loop and a flat multiply-add chain. */
-  private def dotU(a: Column, b: Column, dim: Int = EmbDim): Column = {
+  private[pipeline] def dotU(a: Column, b: Column,
+                               dim: Int = EmbDim): Column = {
     val unrolled = (0 until dim).foldLeft(lit(0.0)) { (acc, i) =>
       acc + get(a, lit(i)).cast("double") * get(b, lit(i)).cast("double")
     }
@@ -689,14 +695,27 @@ object PipelineOps {
     val q = embeddings(spark, sfDir).where($"vec_id" % 50 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"),
         sqrt(dotU($"embedding", $"embedding")).as("qn"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id")
-    e.join(broadcast(q), $"vec_id" =!= $"query_id")
-      .withColumn("cos", dotU($"qe", $"embedding") / ($"qn" * $"en"))
+    cosineTopK(e.join(broadcast(q), $"vec_id" =!= $"query_id"), k)
+  }
+
+  /** The exact-cosine rank of the ANN ops, after their candidate stage
+    * (the "candidates, then exact rank" split of Distributed Stream KNN
+    * Join, SIGMOD 2021): over candidate rows (`query_id`, `qe`, `qn`,
+    * `vec_id`, `embedding`, `en`), the cosine dot(qe, embedding)/(qn·en)
+    * with both norms hoisted per vector, the `k` best per query (cosine
+    * descending, ties to the lower `vec_id`) as
+    * (`query_id`, `rank`, `neighbor_id`, `cos_r`). */
+  private def cosineTopK(cand: DataFrame, k: Int,
+                         dim: Int = EmbDim): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    cand
+      .withColumn("cos",
+        dotU(col("qe"), col("embedding"), dim) / (col("qn") * col("en")))
       .withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"),
-        round($"cos", 6).as("cos_r"))
+      .where(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
+        round(col("cos"), 6).as("cos_r"))
   }
 
   // ---- ANN scale parameters (VERDICT r2 #3): the bucket/cluster counts
@@ -719,10 +738,22 @@ object PipelineOps {
     * a hot pile — an EXACT duplicate of the pile hashes into the same
     * over-cap bucket in every table and gets zero candidates by design
     * (pinned by the hot-bucket test; dedupExact owns that regime).
-    * [[dedupEmbedding]] fences with [[fenced]]; the LSH and IVF ops join
-    * a broadcast grouped count instead, as a window would shuffle their
-    * embedding-carrying postings. */
+    * [[dedupEmbedding]] fences its id-only postings with [[fenced]]; the
+    * LSH and IVF top-k ops cap theirs with [[withinCap]], a grouped count
+    * joined back, as a window would shuffle their embedding-carrying
+    * postings. */
   val AnnMaxBucket = 4 * AnnTargetBucket
+
+  /** The rows of `posts` in lists (`keys`) of at most `cap` rows — the
+    * ANN top-k ops' hot-list fence: a grouped count over the keys alone
+    * (so the embedding-carrying posting rows are not shuffled for it),
+    * whose kept keys join back. */
+  private def withinCap(posts: DataFrame, keys: Seq[String],
+                        cap: Int): DataFrame = {
+    val ks = keys.map(col)
+    posts.join(posts.groupBy(ks: _*).agg(count(lit(1)).as("bc"))
+      .where(col("bc") <= cap).select(ks: _*), keys)
+  }
 
   /** Target IVF inverted-list size (nClusters = ⌈n / target⌉). */
   val AnnTargetList = 1024
@@ -908,59 +939,27 @@ object PipelineOps {
                    nTables: Int, planesPerTable: Int, dim: Int,
                    maxBucket: Int): DataFrame = {
     import spark.implicits._
-    val planes =
-      if (planesPerTable > 0) planesPerTable else annPlanesFor(e0.count())
-    // sign-of-dot bucket bits over the md5-derived planes; the dot
-    // accumulates in INDEX ORDER, mirrored by the oracle's
-    // list_sum(list_transform) — identical fold, identical IEEE doubles
-    // on both engines. r6: all tables' buckets come from ONE custom
-    // codegen kernel ([[LshBuckets]] — a generated loop over the plane
-    // matrix), replacing nTables × planes interpreted
-    // aggregate(zip_with) lambdas; a fully unrolled Column encoding was
-    // tried first and reverted (Janino compile tax, see
-    // OPTIMIZATION_r06.md).
-    val matrix = Array.tabulate(nTables)(t => Array.tabulate(planes)(p =>
-      Array.tabulate(dim)(i => embPlane(t, p, i))))
-    // one cached row per vector: bucket ids + the hoisted norm (the
-    // exact-cosine verify is dot/(qn·en) with both factors computed once
-    // per vector here, not once per candidate pair). The candidate
-    // pipeline keeps r5's join structure — an id-only restructure with
-    // join-back was tried and measured SLOWER here (the extra attach
-    // joins cost more than the arrays-through-dedup shuffle at these
-    // posting-list sizes; see OPTIMIZATION_r06.md).
-    val e = e0.select($"vec_id", $"embedding",
-        sqrt(dotU($"embedding", $"embedding", dim)).as("en"),
-        PipelineExprs.lshBuckets($"embedding", matrix).as("bkts"))
-      .select($"vec_id" +: $"embedding" +: $"en" +:
-        (0 until nTables).map(t => get($"bkts", lit(t)).as(s"bkt$t")): _*)
-      .cache()
-    // (table, bucket) posting lists, hot buckets dropped (cand side only:
-    // a query whose bucket was dropped simply gets no candidates from
-    // that table — its other tables still vote)
-    val tb = e.select($"vec_id", $"embedding", $"en",
-      posexplode(array((0 until nTables).map(t => col(s"bkt$t")): _*))
-        .as(Seq("table", "bkt")))
-    val keep = tb.groupBy($"table", $"bkt")
-      .agg(count(lit(1)).as("bc"))
-      .where($"bc" <= maxBucket)
-      .select($"table", $"bkt")
+    // the candidate pipeline keeps r5's join structure — an id-only
+    // restructure with join-back (as in dedupEmbeddingDf) was tried and
+    // measured SLOWER here (the extra attach joins cost more than the
+    // arrays-through-dedup shuffle at these posting-list sizes; see
+    // OPTIMIZATION_r06.md)
+    val tb = lshIndex(e0, nTables, planesPerTable, dim)
+      .postings($"vec_id", $"embedding", $"en")
     val q = tb.join(e0.where($"vec_id" % 50 === 0)
         .select($"vec_id".as("query_id")),
       tb("vec_id") === col("query_id"))
       .select($"query_id", $"embedding".as("qe"), $"en".as("qn"),
         $"table", $"bkt")
-    val cand = tb.join(keep, Seq("table", "bkt")).join(q, Seq("table", "bkt"))
+    // hot buckets dropped on the cand side only: a query whose bucket was
+    // dropped simply gets no candidates from that table — its other
+    // tables still vote
+    val cand = withinCap(tb, Seq("table", "bkt"), maxBucket)
+      .join(q, Seq("table", "bkt"))
       .where($"vec_id" =!= $"query_id")
       .select($"query_id", $"qe", $"qn", $"vec_id", $"embedding", $"en")
       .dropDuplicates("query_id", "vec_id")
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id")
-    cand
-      .withColumn("cos", dotU($"qe", $"embedding", dim) / ($"qn" * $"en"))
-      .withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"),
-        round($"cos", 6).as("cos_r"))
+    cosineTopK(cand, k, dim)
   }
 
   /** IVF (inverted-file) ANN — the second scale path beside LSH: a small
@@ -1058,24 +1057,20 @@ object PipelineOps {
     val assign = idx.assign(e0)
       .select($"vec_id", $"embedding", $"nrm".as("en"), $"c", $"f")
       .cache()
-    val probes = idx.probes(e0.where($"vec_id" % 50 === 0), nProbeCoarse,
-        nProbeFine)
+    // the queries come from the cached assignment, not a second read of
+    // `emb`; `ne` is re-derived from their embedding by the same
+    // expression, so the probes see the same doubles
+    val probes = idx.probes(withNormalized(
+        assign.where($"vec_id" % 50 === 0).select($"vec_id", $"embedding")),
+        nProbeCoarse, nProbeFine)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"),
         $"nrm".as("qn"), $"c", $"f")
 
     // per-(cell, list) cap — the MaxBucket fence: degenerate piles of
     // near-identical vectors would make the probe join quadratic
-    val keep = assign.groupBy($"c", $"f").agg(count(lit(1)).as("lc"))
-      .where($"lc" <= maxList).select($"c", $"f")
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id")
-    assign.join(keep, Seq("c", "f")).join(probes, Seq("c", "f"))
-      .where($"vec_id" =!= $"query_id")
-      .withColumn("cos", dotU($"qe", $"embedding") / ($"qn" * $"en"))
-      .withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"),
-        round($"cos", 6).as("cos_r"))
+    cosineTopK(withinCap(assign, Seq("c", "f"), maxList)
+      .join(probes, Seq("c", "f"))
+      .where($"vec_id" =!= $"query_id"), k)
   }
 
   /** k-NN label classification over the embedding corpus — the

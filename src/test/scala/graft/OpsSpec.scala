@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
-import graft.expr.{ExprHelpers, GeoFunctions}
+import graft.expr.GeoFunctions
 import graft.query.{Query, Raster}
 
 /** Specs for the extension operators (kNN, PIP, tile-cover expression,
@@ -541,6 +541,18 @@ class OpsSpec extends AnyFunSuite {
         graft.pipeline.PipelineOps.SimhashHammingMax
     } yield (ids(i), ids(j))).toSet
     assert(got.map(t => (t._1, t._2)) == all3)
+  }
+
+  test("16-bit simhash == block b0 of the 64-bit fingerprint, every doc") {
+    val sf = "/root/testdata/sf0.001"
+    def byDoc(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", df.columns(1)).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val s16 = byDoc(graft.pipeline.PipelineOps.dedupSimhash(spark, sf))
+    val b0 = byDoc(graft.pipeline.PipelineOps.dedupSimhashBlocks(spark, sf))
+    val docs = graft.pipeline.PipelineOps.documentsRaw(spark, sf)
+      .where(col("text").isNotNull).count()
+    assert(s16.size == docs && s16 == b0)
   }
 
   test("simhash clusters: identical-doc groups keep one per cluster") {

@@ -23,7 +23,10 @@ import graft.pipeline.PipelineOps
   * cached frame is its own AQE stage, so its copy of the fence exchange
   * counts too. The IVF ops' plans are pinned the same way: their vectors
   * meet the centroids in-row, so no nested-loop join pairs them and no
-  * aggregate picks a vector's nearest centroid. */
+  * aggregate picks a vector's nearest centroid, and their queries come
+  * from the cached assignment, not a second spread read. `ann_lsh_topk`,
+  * timed in every benchmark rep, is pinned to its shuffle and broadcast
+  * counts. */
 class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
@@ -60,12 +63,23 @@ class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("ann_lsh_topk keeps its plan: 3 shuffles, 3 broadcasts") {
+    spark.catalog.clearCache()
+    val df = SparkEntry.queries("ann_lsh_topk")(spark,
+      "/root/testdata/sf0.001")
+    df.collect()
+    val plan = nodes(df.queryExecution.executedPlan)
+    assert((plan.count(_.isInstanceOf[ShuffleExchangeLike]),
+      plan.count(_.isInstanceOf[BroadcastExchangeLike])) == ((3, 3)),
+      df.queryExecution.executedPlan.toString)
+  }
+
   for ((name, op, shuffles) <- Seq[(String,
       (SparkSession, String) => DataFrame, Int)](
-      ("ann_ivf_topk", SparkEntry.queries("ann_ivf_topk"), 4),
+      ("ann_ivf_topk", SparkEntry.queries("ann_ivf_topk"), 3),
       ("ann_ivf_topk at 80 clusters",
-        (s, d) => PipelineOps.annIvfTopK(s, d, nClusters = 80), 4),
-      ("ann_ivf2_topk", SparkEntry.queries("ann_ivf2_topk"), 4),
+        (s, d) => PipelineOps.annIvfTopK(s, d, nClusters = 80), 3),
+      ("ann_ivf2_topk", SparkEntry.queries("ann_ivf2_topk"), 3),
       ("sem_dedup", SparkEntry.queries("sem_dedup"), 5))) {
     test(s"$name assigns in-row: no nested-loop join or per-vector " +
       "aggregate") {

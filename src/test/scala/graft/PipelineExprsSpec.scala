@@ -11,13 +11,15 @@ import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.expr.{GeoFunctions, PointInPolygon, TileCover}
 import graft.pipeline.{CentroidDists, LshBuckets, PipelineExprs, PipelineOps}
 
 /** Focused specs for the r6 optimization internals: the custom codegen
-  * kernels (LshBuckets / CentroidDists) must be bit-identical to the
-  * interpreted Column folds they replaced, and the restructured
-  * dedup_minhash / dedup_clusters must reproduce the r5 shapes'
-  * results exactly. */
+  * kernels (LshBuckets / CentroidDists, the unrolled dotU) must be
+  * bit-identical to the interpreted Column folds they replaced, the geo
+  * kernels (TileCover / PointInPolygon) must give the same result through
+  * codegen as through `eval`, and the restructured dedup_minhash /
+  * dedup_clusters must reproduce the r5 shapes' results exactly. */
 class PipelineExprsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -251,6 +253,128 @@ class PipelineExprsSpec extends AnyFunSuite {
     })
   }
 
+  /** A row of finite elements (a 64-wide dot over [[genRow]] rows is
+    * nearly always NaN), mostly of width `w` but of any width up to
+    * w + 2, sometimes null; a quarter of the rows hold one NaN, ±Inf or
+    * null element. */
+  private def genDotRow(w: Int): Gen[Seq[java.lang.Double]] =
+    Gen.frequency(
+      1 -> Gen.const(null),
+      8 -> (for {
+        n <- Gen.frequency(4 -> Gen.const(w), 1 -> Gen.chooseNum(0, w + 2))
+        xs <- Gen.listOfN(n,
+          Gen.chooseNum(-3.0, 3.0).map(java.lang.Double.valueOf))
+        at <- Gen.chooseNum(0, 4 * n)
+        odd <- Gen.oneOf(Seq[java.lang.Double](Double.NaN,
+          Double.PositiveInfinity, Double.NegativeInfinity, null))
+      } yield if (at < n) xs.updated(at, odd) else xs))
+
+  test("dotU ≡ aggregate(zip_with) fold on fuzzed rows and widths") {
+    // rows of width `w` take the unrolled branch, any other width the fold
+    val genCase = for {
+      w <- Gen.frequency(1 -> Gen.const(64), 1 -> Gen.chooseNum(0, 5))
+      float <- Gen.oneOf(false, true)
+      rows <- Gen.listOfN(8, Gen.zip(genDotRow(w), genDotRow(w)))
+    } yield (w, float, rows)
+    check(Prop.forAllNoShrink(genCase) { case (w, float, rows) =>
+      val elem = ArrayType(if (float) FloatType else DoubleType)
+      val df = frame(rows.zipWithIndex.map { case ((a, b), i) =>
+        Row(i.toLong, a, b) }, StructType(Seq(StructField("id", LongType),
+        StructField("a", ArrayType(DoubleType)),
+        StructField("b", ArrayType(DoubleType)))))
+        .select(col("id"), col("a").cast(elem).as("a"),
+          col("b").cast(elem).as("b"))
+      val want = results(df, aggregate(zip_with(col("a"), col("b"),
+        (p, q) => p.cast("double") * q.cast("double")),
+        lit(0.0), (acc, v) => acc + v))
+      val got = results(df, pipeline.DotU(col("a"), col("b"), w))
+      (got == want) :| s"want $want\ngot $got"
+    })
+  }
+
+  /** (id → result) of the kernel `k` over `df` through codegen, and the
+    * same kernel's `eval` on each row's literals. */
+  private def codegenAndEval(df: DataFrame,
+                             k: Seq[Column] => Column,
+                             e: Seq[Expression] => Expression)
+      : (Map[Long, Any], Map[Long, Any]) = {
+    val cols = df.columns.toSeq.tail
+    val schema = df.schema.fields.tail
+    val got = results(df, k(cols.map(col)))
+    val evald = df.collect().map { r =>
+      r.getLong(0) -> bits(e(schema.indices.map(i =>
+        Literal.create(r.get(i + 1), schema(i).dataType))).eval())
+    }.toMap
+    (got, evald)
+  }
+
+  /** A double that is often NaN, ±Inf or null, over about the Mercator
+    * range. */
+  private val genCoord: Gen[java.lang.Double] = Gen.frequency(
+    8 -> Gen.chooseNum(-2.2e7, 2.2e7).map(java.lang.Double.valueOf),
+    1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity).map(java.lang.Double.valueOf),
+    1 -> Gen.const(null: java.lang.Double))
+
+  test("TileCover codegen ≡ eval on fuzzed, inverted and NaN boxes") {
+    def nullable[T](g: Gen[T]): Gen[T] =
+      Gen.frequency(12 -> g, 1 -> Gen.const(null.asInstanceOf[T]))
+    // often inverted: each axis's ends come in either order
+    val genBox = Gen.zip(nullable(Gen.chooseNum(0, 6).map(Integer.valueOf)),
+      genCoord, genCoord, genCoord, genCoord,
+      nullable(Gen.oneOf(0, 8, 64).map(Integer.valueOf)),
+      nullable(Gen.oneOf(256, 4096).map(Integer.valueOf)))
+    check(Prop.forAllNoShrink(Gen.listOfN(8, genBox)) { boxes =>
+      val df = frame(boxes.zipWithIndex.map {
+        case ((z, x0, y0, x1, y1, m, ext), i) =>
+          Row(i.toLong, z, x0, y0, x1, y1, m, ext) },
+        StructType(StructField("id", LongType) +: Seq(
+          "z" -> IntegerType, "xmin" -> DoubleType, "ymin" -> DoubleType,
+          "xmax" -> DoubleType, "ymax" -> DoubleType,
+          "margin" -> IntegerType, "extent" -> IntegerType).map {
+          case (n, t) => StructField(n, t) }))
+      val (got, evald) = codegenAndEval(df,
+        c => GeoFunctions.tileCover(c(0), c(1), c(2), c(3), c(4), c(5), c(6)),
+        e => TileCover(e(0), e(1), e(2), e(3), e(4), e(5), e(6)))
+      (got == evald) :| s"codegen $got\neval $evald"
+    })
+  }
+
+  test("PointInPolygon codegen ≡ eval on fuzzed, empty, unclosed rings") {
+    val ringType = ArrayType(StructType(Seq(
+      StructField("outer", BooleanType), StructField("xs",
+        ArrayType(DoubleType, containsNull = false)), StructField("ys",
+        ArrayType(DoubleType, containsNull = false)))))
+    val genPt = Gen.chooseNum(-4.0, 4.0)
+    // a ring of 0 to 6 points, closed about half the time
+    val genRing = for {
+      n <- Gen.chooseNum(0, 6)
+      pts <- Gen.listOfN(n, Gen.zip(genPt, genPt))
+      closed <- Gen.oneOf(false, true)
+      outer <- Gen.oneOf(false, true)
+    } yield {
+      val ps = if (closed && pts.nonEmpty) pts :+ pts.head else pts
+      Row(outer, ps.map(_._1), ps.map(_._2))
+    }
+    val genCase = Gen.zip(
+      Gen.frequency(1 -> Gen.const(null: Seq[Row]),
+        8 -> Gen.chooseNum(0, 3).flatMap(Gen.listOfN(_, genRing))),
+      Gen.frequency(8 -> genPt.map(java.lang.Double.valueOf),
+        1 -> genCoord),
+      Gen.frequency(8 -> genPt.map(java.lang.Double.valueOf),
+        1 -> genCoord))
+    check(Prop.forAllNoShrink(Gen.listOfN(8, genCase)) { cases =>
+      val df = frame(cases.zipWithIndex.map { case ((rings, x, y), i) =>
+        Row(i.toLong, rings, x, y) }, StructType(Seq(
+        StructField("id", LongType), StructField("rings", ringType),
+        StructField("x", DoubleType), StructField("y", DoubleType))))
+      val (got, evald) = codegenAndEval(df,
+        c => GeoFunctions.pointInPolygon(c(0), c(1), c(2)),
+        e => PointInPolygon(e(0), e(1), e(2)))
+      (got == evald) :| s"codegen $got\neval $evald"
+    })
+  }
+
   test("in-row dedupMinhash == r5 explode+distinct+groupBy shape") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
@@ -305,5 +429,13 @@ class PipelineExprsSpec extends AnyFunSuite {
       assert(keep == keepOf(doc), s"keep_id mismatch for doc $doc")
       assert(n == sizeOf(keepOf(doc)), s"cluster_n mismatch for doc $doc")
     }
+  }
+}
+
+package pipeline {
+  /** [[PipelineOps.dotU]], package-private, for the kernel fuzz above. */
+  object DotU {
+    def apply(a: Column, b: Column, dim: Int): Column =
+      PipelineOps.dotU(a, b, dim)
   }
 }

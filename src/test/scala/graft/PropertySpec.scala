@@ -111,7 +111,7 @@ class PropertySpec extends AnyFunSuite {
     * two-tile neighbourhood (clipped to the grid) plus `extra` tiles; for
     * an empty cover the neighbourhood is taken around the box centre. */
   private def coversAgrees(z: Int, m: Int, fb: BBox,
-                           extra: Seq[(Int, Int)] = Nil): Boolean = {
+                           extra: Seq[(Int, Int)]): Boolean = {
     val got = TileGrid.cover(z, fb, 256, m)
     val want = got.toSet
     val n = 1 << z
