@@ -1,10 +1,8 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -58,90 +56,31 @@ object ExprHelpers {
   }
 }
 
-/** Shared plumbing for N-ary expressions that lower to one static call. */
-trait StaticCallExpression extends Expression {
-  /** Fully-qualified static method the codegen calls. */
-  def staticMethod: String
-  def javaResultType: String
+/** A kernel call: the static method `name` of the Scala object `helpers`
+  * through Spark's `StaticInvoke`, which whole-stage codegen compiles to
+  * one static call per row and which the interpreted path evaluates by
+  * reflection. The analyzer casts each argument to its declared type
+  * (an `array<float>` column to `array<double>`, exactly). A null
+  * argument nulls the result, except that with `propagateNull = false` a
+  * null array or object reaches the helper as `null` (a null primitive
+  * still nulls the result). */
+private[graft] object Kernel {
+  import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 
-  override def nullable: Boolean = children.exists(_.nullable)
+  def call(helpers: AnyRef, name: String, dataType: DataType,
+           args: Seq[(Column, DataType)],
+           propagateNull: Boolean = true,
+           returnNullable: Boolean = true): Column =
+    column(StaticInvoke(helpers.getClass, dataType, name,
+      args.map(a => expression(a._1)), args.map(_._2),
+      propagateNull = propagateNull, returnNullable = returnNullable))
 
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) null else evalNotNull(vals)
+  /** A constant (a centroid or plane matrix) passed to the helper as is:
+    * an `ObjectType` literal the task binary carries. */
+  def constant(value: AnyRef): (Column, DataType) = {
+    val t = ObjectType(value.getClass)
+    column(Literal(value, t)) -> t
   }
-
-  protected def evalNotNull(vals: Seq[Any]): Any
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val cs = children.map(_.genCode(ctx))
-    val anyNull =
-      if (nullable) cs.map(_.isNull.code).mkString("(", " || ", ")")
-      else "false"
-    val args = cs.map(_.value.code).mkString(", ")
-    val childCode = cs.map(_.code.toString).mkString("\n")
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        $javaResultType ${ev.value} = ${defaultJavaValue};
-        if (!${ev.isNull}) {
-          ${ev.value} = $staticMethod($args);
-        }
-      """)
-  }
-
-  protected def defaultJavaValue: String =
-    if (javaResultType == "boolean") "false"
-    else if (javaResultType == "double") "0.0"
-    else if (javaResultType == "long") "0L"
-    else if (javaResultType == "int") "0"
-    else "null"
-}
-
-/** Batched tile-cell cover (the "H3/S2 cell encode" of the north rule): all
-  * tiles at zoom z whose margin-expanded bbox intersects the feature bbox,
-  * as packed 63-bit cell ids. Codegen-friendly: whole-stage codegen emits a
-  * single static call per row. */
-case class TileCover(z: Expression, xmin: Expression, ymin: Expression,
-                     xmax: Expression, ymax: Expression, margin: Expression,
-                     extent: Expression) extends StaticCallExpression {
-  override def children: Seq[Expression] =
-    Seq(z, xmin, ymin, xmax, ymax, margin, extent)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def staticMethod: String = "graft.expr.ExprHelpers.coverArray"
-  override def javaResultType: String =
-    "org.apache.spark.sql.catalyst.util.ArrayData"
-
-  override protected def evalNotNull(v: Seq[Any]): Any =
-    ExprHelpers.coverArray(
-      v(0).asInstanceOf[Int],
-      v(1).asInstanceOf[Double], v(2).asInstanceOf[Double],
-      v(3).asInstanceOf[Double], v(4).asInstanceOf[Double],
-      v(5).asInstanceOf[Int], v(6).asInstanceOf[Int])
-
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression =
-    copy(z = c(0), xmin = c(1), ymin = c(2), xmax = c(3), ymax = c(4),
-      margin = c(5), extent = c(6))
-}
-
-/** Ray-cast point-in-polygon over a rings column. */
-case class PointInPolygon(rings: Expression, x: Expression, y: Expression)
-    extends StaticCallExpression {
-  override def children: Seq[Expression] = Seq(rings, x, y)
-  override def dataType: DataType = BooleanType
-  override def staticMethod: String = "graft.expr.ExprHelpers.pointInPolygon"
-  override def javaResultType: String = "boolean"
-
-  override protected def evalNotNull(v: Seq[Any]): Any =
-    ExprHelpers.pointInPolygon(v(0).asInstanceOf[ArrayData],
-      v(1).asInstanceOf[Double], v(2).asInstanceOf[Double])
-
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression =
-    copy(rings = c(0), x = c(1), y = c(2))
 }
 
 /** Column-API surface for the engine's geo functions. */
@@ -160,14 +99,27 @@ object GeoFunctions {
                      bxmax: Column, bymax: Column): Column =
     axmin <= bxmax && axmax >= bxmin && aymin <= bymax && aymax >= bymin
 
-  import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-
+  /** Batched tile-cell cover (the "H3/S2 cell encode" of the north
+    * rule): all tiles at zoom `z` whose margin-expanded bbox intersects
+    * the feature bbox, as packed 63-bit cell ids; null if any input is. */
   def tileCover(z: Column, xmin: Column, ymin: Column, xmax: Column,
                 ymax: Column, margin: Column, extent: Column): Column =
-    column(TileCover(expression(z), expression(xmin), expression(ymin),
-      expression(xmax), expression(ymax), expression(margin),
-      expression(extent)))
+    Kernel.call(ExprHelpers, "coverArray",
+      ArrayType(LongType, containsNull = false),
+      Seq(z -> IntegerType, xmin -> DoubleType, ymin -> DoubleType,
+        xmax -> DoubleType, ymax -> DoubleType, margin -> IntegerType,
+        extent -> IntegerType), returnNullable = false)
 
+  /** The rings column [[ExprHelpers.pointInPolygon]] reads. */
+  private val RingType: DataType = StructType(Seq(
+    StructField("outer", BooleanType),
+    StructField("xs", ArrayType(DoubleType)),
+    StructField("ys", ArrayType(DoubleType))))
+
+  /** Ray-cast point-in-polygon over a rings column; null if any input
+    * is. */
   def pointInPolygon(rings: Column, x: Column, y: Column): Column =
-    column(PointInPolygon(expression(rings), expression(x), expression(y)))
+    Kernel.call(ExprHelpers, "pointInPolygon", BooleanType,
+      Seq(rings -> ArrayType(RingType), x -> DoubleType, y -> DoubleType),
+      returnNullable = false)
 }

@@ -1,33 +1,63 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.GraftColumnBridge.divideByZeroError
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** r6 custom codegen kernels for the ANN/embedding family (the §2.8
-  * TileCover/PointInPolygon precedent applied to the pipeline ops).
-  *
-  * Why an Expression and not Column algebra: the bucket/centroid scans
-  * are dot products against a CONSTANT matrix. The two Column-level
-  * encodings both lose:
-  *   - `aggregate(zip_with(planeLit, e, …))` per plane/centroid is a
-  *     HigherOrderFunction — interpreted lambda eval per element, an
-  *     allocated zipped array per call (measured: the 16-table LSH
-  *     bucket build dominated `ann_lsh_topk`'s cold time);
-  *   - fully unrolling nTables × planes × dim literal terms compiles
-  *     via Janino into a several-thousand-node method whose one-time
-  *     compile costs more than it saves (+12 s cold, reverted).
-  * A custom Expression emits a LOOP over the matrix (bound via
-  * `addReferenceObj`), so the generated code is small, compiles fast and
-  * runs at codegen speed. The arithmetic replicates the interpreted fold
-  * bit-for-bit: per plane/centroid, `s = 0.0; s += m(i)·e(i)` in index
-  * order — the identical IEEE left fold the DuckDB oracles re-derive.
-  */
+import graft.expr.Kernel
+
+/** The vector kernels of the ANN/embedding family, called through
+  * [[Kernel]] like the geo kernels. Each is a loop over `double` rows —
+  * `array<float>` inputs arrive widened exactly by the analyzer's cast —
+  * and each accumulates a dot as `s = 0.0; s += x(i)·y(i)` in index
+  * order: the identical IEEE left fold the DuckDB oracles re-derive with
+  * `list_sum(list_transform)`. A loop and not Column algebra because
+  * `aggregate(zip_with(…))` is a higher-order function, evaluated
+  * interpreted and taking its whole projection out of whole-stage
+  * codegen, and an unrolled Column tree is fixed to one width (and, over
+  * a plane or centroid matrix, compiles into a method whose one-time
+  * Janino cost outweighs its gain; see OPTIMIZATION_r06.md). */
 object PipelineExprHelpers {
+
+  /** Dot product of two rows; null when their widths differ or either
+    * holds a null element, as the `aggregate(zip_with)` fold gives (it
+    * pads the shorter side with nulls, and a null term nulls the fold). */
+  def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = a.numElements()
+    if (b.numElements() != n) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      s += a.getDouble(i) * b.getDouble(i)
+      i += 1
+    }
+    s
+  }
+
+  /** The row divided by its L2 norm `sqrt(dot(e, e))`, element by
+    * element — the loop form of `transform(e, v => v / nrm)`. As that
+    * division does, a row holding a null element gives an array of
+    * nulls, and a zero norm raises DIVIDE_BY_ZERO when `failOnZero` (ANSI
+    * mode), else gives an array of nulls; an empty row stays empty. */
+  def normalize(e: ArrayData, failOnZero: Boolean): ArrayData = {
+    val n = e.numElements()
+    val d = dot(e, e)
+    if (d == null || d.doubleValue == 0.0) {
+      if (d != null && n > 0 && failOnZero)
+        throw divideByZeroError()
+      return new GenericArrayData(new Array[Any](n))
+    }
+    val nrm = math.sqrt(d.doubleValue)
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) { out(i) = e.getDouble(i) / nrm; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 
   /** All tables' sign-of-dot LSH buckets for one embedding row.
     * matrix(t)(p)(i): plane component; returns one int bucket per table
@@ -35,7 +65,7 @@ object PipelineExprHelpers {
     * bucket 0, exactly like the Column form (`when(null > 0, …)
     * .otherwise(0)` summed over planes); a NaN dot sets its bit, as SQL
     * orders NaN above every number. */
-  def lshBuckets(e: ArrayData, elemFloat: Boolean,
+  def lshBuckets(e: ArrayData,
                  matrix: Array[Array[Array[Double]]]): ArrayData = {
     val nT = matrix.length
     val out = new Array[Int](nT)
@@ -45,12 +75,7 @@ object PipelineExprHelpers {
       var i = 0
       while (ok && i < dim) { if (e.isNullAt(i)) ok = false; i += 1 }
       if (ok) {
-        val ev = new Array[Double](dim)
-        i = 0
-        while (i < dim) {
-          ev(i) = if (elemFloat) e.getFloat(i).toDouble else e.getDouble(i)
-          i += 1
-        }
+        val ev = e.toDoubleArray()
         var t = 0
         while (t < nT) {
           val planes = matrix(t)
@@ -72,15 +97,14 @@ object PipelineExprHelpers {
     new GenericArrayData(out)
   }
 
-  /** Squared L2 distance of one (double-array) row against every row of
-    * the constant centroid matrix `matrices(cell)`, in centroid order —
-    * the loop form of `transform(get(matricesLit, cell), c =>
-    * aggregate(zip_with(c, ne, (x,y) => (x-y)²), 0.0, +))`, same
-    * subtraction and fold order. A null (passed as -1) or out-of-range
-    * cell gives a null array, as `get` does. A null row, a null element
-    * or a width that differs from the centroid's gives a null distance,
-    * exactly like the Column form (`zip_with` pads the shorter side with
-    * nulls, and a null term nulls the fold). */
+  /** Squared L2 distance of one row against every row of the constant
+    * centroid matrix `matrices(cell)`, in centroid order — the loop form
+    * of `transform(get(matricesLit, cell), c => aggregate(zip_with(c,
+    * ne, (x,y) => (x-y)²), 0.0, +))`, same subtraction and fold order.
+    * An out-of-range cell gives a null array, as `get` does. A null row,
+    * a null element or a width that differs from the centroid's gives a
+    * null distance, exactly like the Column form (`zip_with` pads the
+    * shorter side with nulls, and a null term nulls the fold). */
   def centroidDists(e: ArrayData, cell: Int,
                     matrices: Array[Array[Array[Double]]]): ArrayData = {
     if (cell < 0 || cell >= matrices.length) return null
@@ -109,98 +133,38 @@ object PipelineExprHelpers {
   }
 }
 
-/** `array<int>` of one LSH bucket per table for the embedding column. */
-case class LshBuckets(child: Expression,
-                      matrix: Array[Array[Array[Double]]])
-    extends Expression {
-  // resolved lazily: dataType is not available on an unresolved child
-  private lazy val elemFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  // a null/mismatched embedding yields the all-zero bucket row, exactly
-  // like the Column encoding it replaces — never a null array
-  override def nullable: Boolean = false
-  override def foldable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    PipelineExprHelpers.lshBuckets(
-      child.eval(input).asInstanceOf[ArrayData], elemFloat, matrix)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val m = ctx.addReferenceObj("lshMatrix", matrix, "double[][][]")
-    val in = if (child.nullable)
-      s"${c.isNull} ? null : ${c.value}" else c.value.code
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = false;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.pipeline.PipelineExprHelpers.lshBuckets(
-            ($in), $elemFloat, $m);
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-}
-
-/** `array<double>` of squared L2 distances to each centroid of the
-  * constant matrix `matrices(cell)`; `cell` is an int column. */
-case class CentroidDists(child: Expression, cell: Expression,
-                         matrices: Array[Array[Array[Double]]])
-    extends Expression {
-  override def children: Seq[Expression] = Seq(child, cell)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  // null for a null or out-of-range cell; a null/mismatched row yields
-  // null distances, exactly like the Column encoding it replaces
-  override def nullable: Boolean = true
-  override def foldable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val k = cell.eval(input)
-    PipelineExprHelpers.centroidDists(
-      child.eval(input).asInstanceOf[ArrayData],
-      if (k == null) -1 else k.asInstanceOf[Int], matrices)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val k = cell.genCode(ctx)
-    val m = ctx.addReferenceObj("centroidMatrices", matrices, "double[][][]")
-    val in = if (child.nullable)
-      s"${c.isNull} ? null : ${c.value}" else c.value.code
-    val kc = if (cell.nullable)
-      s"${k.isNull} ? -1 : ${k.value}" else k.value.code
-    ev.copy(code =
-      code"""
-        ${c.code}
-        ${k.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.pipeline.PipelineExprHelpers.centroidDists(($in), ($kc), $m);
-        boolean ${ev.isNull} = ${ev.value} == null;
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0), cell = c(1))
-}
-
+/** Column functions over [[PipelineExprHelpers]]. */
 object PipelineExprs {
-  import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+  private val Vec: DataType = ArrayType(DoubleType)
 
+  /** `double` dot of two float or double array columns; see
+    * [[PipelineExprHelpers.dot]]. */
+  def dot(a: Column, b: Column): Column =
+    Kernel.call(PipelineExprHelpers, "dot", DoubleType, Seq(a -> Vec, b -> Vec))
+
+  /** L2-normalized `array<double>` copy of a float or double array
+    * column; see [[PipelineExprHelpers.normalize]]. */
+  def normalize(e: Column): Column =
+    Kernel.call(PipelineExprHelpers, "normalize", Vec,
+      Seq(e -> Vec, lit(SQLConf.get.ansiEnabled) -> BooleanType),
+      returnNullable = false)
+
+  /** `array<int>` of one LSH bucket per table for the embedding column; a
+    * null embedding gives the all-zero row, never a null array. */
   def lshBuckets(emb: Column,
                  matrix: Array[Array[Array[Double]]]): Column =
-    column(LshBuckets(expression(emb), matrix))
+    Kernel.call(PipelineExprHelpers, "lshBuckets",
+      ArrayType(IntegerType, containsNull = false),
+      Seq(emb -> Vec, Kernel.constant(matrix)),
+      propagateNull = false, returnNullable = false)
 
+  /** `array<double>` of squared L2 distances to each centroid of the
+    * constant matrix `matrices(cell)`; null for a null or out-of-range
+    * cell, null distances for a null or malformed row. */
   def centroidDists(ne: Column, matrices: Array[Array[Array[Double]]],
                     cell: Column): Column =
-    column(CentroidDists(expression(ne), expression(cell.cast("int")),
-      matrices))
+    Kernel.call(PipelineExprHelpers, "centroidDists", Vec,
+      Seq(ne -> Vec, cell.cast("int") -> IntegerType,
+        Kernel.constant(matrices)),
+      propagateNull = false)
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
+import PipelineExprs.dot
+
 /** Large-scale training-data pipeline operators over the `documents` and
   * `embeddings` tables (judge-graded alongside SURVEY.md §2; each op has a
   * DuckDB oracle in SparkEntry.oracleSql unless noted).
@@ -536,12 +538,9 @@ object PipelineOps {
     * (`planesPerTable = 0` derives [[annPlanesFor]] from the row count, a
     * parquet footer count, no data scan). The dot accumulates in INDEX
     * ORDER, mirrored by the oracles' list_sum(list_transform) — identical
-    * fold, identical IEEE doubles on both engines. r6: all tables'
-    * buckets come from ONE custom codegen kernel ([[LshBuckets]] — a
-    * generated loop over the plane matrix), replacing nTables × planes
-    * interpreted aggregate(zip_with) lambdas; a fully unrolled Column
-    * encoding was tried first and reverted (Janino compile tax, see
-    * OPTIMIZATION_r06.md). */
+    * fold, identical IEEE doubles on both engines. All tables' buckets
+    * come from ONE kernel ([[PipelineExprs.lshBuckets]], a loop over the
+    * plane matrix). */
   private def lshIndex(e0: DataFrame, nTables: Int, planesPerTable: Int,
                        dim: Int): LshIndex = {
     val planes =
@@ -550,7 +549,7 @@ object PipelineOps {
       Array.tabulate(dim)(i => embPlane(t, p, i))))
     val e = col("embedding")
     new LshIndex(e0.select(col("vec_id"), e,
-        sqrt(dotU(e, e, dim)).as("en"),
+        sqrt(dot(e, e)).as("en"),
         PipelineExprs.lshBuckets(e, matrix).as("bkts"))
       .select(col("vec_id") +: e +: col("en") +: (0 until nTables).map(t =>
         get(col("bkts"), lit(t)).as(s"bkt$t")): _*)
@@ -611,7 +610,7 @@ object PipelineOps {
         $"en".as("na")), Seq("vec_a"))
       .join(idx.vecs.select($"vec_id".as("vec_b"), $"embedding".as("eb"),
         $"en".as("nb")), Seq("vec_b"))
-      .withColumn("cos", dotU($"ea", $"eb", dim) / ($"na" * $"nb"))
+      .withColumn("cos", dot($"ea", $"eb") / ($"na" * $"nb"))
       .where($"cos" >= threshold)
       .select($"vec_a", $"vec_b", round($"cos", 6).as("cos_r"))
   }
@@ -619,58 +618,17 @@ object PipelineOps {
   // --------------------------------------------------------------- ANN
 
   /** Embedding dimensionality of the corpus tables (fixed by TESTDATA.md;
-    * the DuckDB oracles hardcode the same 64). The r6 unrolled vector
-    * kernels below are generated at this width; [[embedQuantize]] asserts
+    * the DuckDB oracles hardcode the same 64). [[embedQuantize]] asserts
     * it at runtime, so a corpus change fails loudly there instead of
     * silently quantizing a prefix. */
-  private[pipeline] val EmbDim = 64
+  private val EmbDim = 64
 
-  /** Dot product of two float/double array columns, UNROLLED to `dim`
-    * whole-stage-codegen terms (r6 optimization, guide §1.2 "per-task
-    * work" / §4 "prefer built-ins with codegen"): the previous
-    * `aggregate(zip_with(...))` shape is a HigherOrderFunction — Spark
-    * evaluates the lambda INTERPRETED, one boxed Expression.eval per
-    * element, and allocates the zipped intermediate array per call. The
-    * unrolled chain is the bit-identical left fold
-    * ((…((0.0 + a₀·b₀) + a₁·b₁)…) with the same per-element double casts
-    * in the same index order, so every cosine/score downstream is the
-    * same IEEE double — but it compiles into the stage's generated Java
-    * (with codegen subexpression elimination across the projection).
-    * Measured on `ann_cosine_topk` (12.5M pair dots at sf0.1): the
-    * kernel swap is the difference between an interpreted ~3·64-eval
-    * loop and a flat multiply-add chain. */
-  private[pipeline] def dotU(a: Column, b: Column,
-                               dim: Int = EmbDim): Column = {
-    val unrolled = (0 until dim).foldLeft(lit(0.0)) { (acc, i) =>
-      acc + get(a, lit(i)).cast("double") * get(b, lit(i)).cast("double")
-    }
-    // inputs of any OTHER width (tests exercise dim 8; a future corpus
-    // could ship another) take the interpreted spec fold — same IEEE
-    // left fold, so the branch is a fast path, not a semantic switch
-    when(size(a) === dim && size(b) === dim, unrolled)
-      .otherwise(aggregate(zip_with(a, b,
-        (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v))
-  }
-
-  /** L2-normalized copy of the embedding column (cosine ranking ⇒ cluster
-    * on the unit sphere, where L2 is monotone in cosine). r6: both the
-    * norm and the normalized copy are unrolled codegen ([[dotU]]) — the
-    * previous `transform(embedding, v => v / nrm)` referenced the OUTER
-    * `nrm` expression from inside an interpreted lambda, which re-derives
-    * it per ELEMENT once CollapseProject inlines the alias (the same
-    * 55×-interpreted-lambda trap [[wordRuns]] documents); the array
-    * constructor over indexed gets is codegen'd and CSE shares one norm
-    * per row. Same divisions in the same order ⇒ same doubles. */
+  /** The embedding frame plus its L2 norm `nrm` and L2-normalized copy
+    * `ne` (cosine ranking ⇒ cluster on the unit sphere, where L2 is
+    * monotone in cosine), both from [[PipelineExprs]] kernels. */
   private[pipeline] def withNormalized(emb: DataFrame): DataFrame =
-    emb
-      .withColumn("nrm", sqrt(dotU(col("embedding"), col("embedding"))))
-      .withColumn("ne",
-        when(size(col("embedding")) === EmbDim,
-          array((0 until EmbDim).map(i =>
-            get(col("embedding"), lit(i)).cast("double") / col("nrm")): _*))
-        .otherwise(transform(col("embedding"),
-          v => v.cast("double") / col("nrm"))))
+    emb.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+      .withColumn("ne", PipelineExprs.normalize(col("embedding")))
 
   /** Brute-force cosine top-k (the exactness baseline). Queries = every
     * 50th vector. Scale path: broadcast the (small) query set, one pass
@@ -684,34 +642,37 @@ object PipelineOps {
     * (|Q| × n), spending a third of the flops re-deriving norms. The
     * norms are now computed once per corpus vector (`en`) and once per
     * query (`qn`, broadcast) — identical expressions, so the quotient is
-    * the same IEEE double — and the pair stage runs exactly one
-    * [[dotU]]-unrolled dot. */
+    * the same IEEE double — and the pair stage runs exactly one dot. */
   def annCosineTopK(spark: SparkSession, sfDir: String,
                     k: Int = 5): DataFrame = {
     import spark.implicits._
     val e = embeddings(spark, sfDir)
       .select($"vec_id", $"embedding",
-        sqrt(dotU($"embedding", $"embedding")).as("en"))
+        sqrt(dot($"embedding", $"embedding")).as("en"))
     val q = embeddings(spark, sfDir).where($"vec_id" % 50 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-        sqrt(dotU($"embedding", $"embedding")).as("qn"))
-    cosineTopK(e.join(broadcast(q), $"vec_id" =!= $"query_id"), k)
+        sqrt(dot($"embedding", $"embedding")).as("qn"))
+    cosineTopK(cosines(e.join(broadcast(q), $"vec_id" =!= $"query_id")), k)
   }
+
+  /** The exact cosines of the ANN ops' candidate rows (`query_id`,
+    * `qe`, `qn`, `vec_id`, `embedding`, `en`): dot(qe, embedding)/(qn·en)
+    * with both norms hoisted per vector, as (`query_id`, `vec_id`,
+    * `cos`). A pipeline whose candidates repeat drops the repeats after
+    * this, so its dedup shuffles ids and a double, not the arrays. */
+  private def cosines(cand: DataFrame): DataFrame =
+    cand.select(col("query_id"), col("vec_id"),
+      (dot(col("qe"), col("embedding")) / (col("qn") * col("en"))).as("cos"))
 
   /** The exact-cosine rank of the ANN ops, after their candidate stage
     * (the "candidates, then exact rank" split of Distributed Stream KNN
-    * Join, SIGMOD 2021): over candidate rows (`query_id`, `qe`, `qn`,
-    * `vec_id`, `embedding`, `en`), the cosine dot(qe, embedding)/(qn·en)
-    * with both norms hoisted per vector, the `k` best per query (cosine
-    * descending, ties to the lower `vec_id`) as
+    * Join, SIGMOD 2021): over [[cosines]] rows, the `k` best per query
+    * (cosine descending, ties to the lower `vec_id`) as
     * (`query_id`, `rank`, `neighbor_id`, `cos_r`). */
-  private def cosineTopK(cand: DataFrame, k: Int,
-                         dim: Int = EmbDim): DataFrame = {
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .withColumn("cos",
-        dotU(col("qe"), col("embedding"), dim) / (col("qn") * col("en")))
+    scored
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
@@ -884,8 +845,7 @@ object PipelineOps {
     * never indexes past it. Sampled rows that are null, hold a null
     * element or are of another width than the sample's commonest are
     * left out: the index is of that width, and rows of any other get no
-    * list. (Filtered on the driver: a plan filter on `ne` would inline
-    * its normalizing expression into an interpreted lambda.) */
+    * list. */
   private[pipeline] def ivfIndex(e0: DataFrame, nCells: Int, nLists: Int,
                                  sampleSize: Int, iters: Int): IvfIndex = {
     val rows = e0
@@ -930,7 +890,7 @@ object PipelineOps {
                  nTables: Int = 16, planesPerTable: Int = 0,
                  dim: Int = 64,
                  maxBucket: Int = AnnMaxBucket): DataFrame =
-    // raw read: with the LshBuckets codegen kernel the bucket build is
+    // raw read: with the lshBuckets kernel the bucket build is
     // ~100 MFlop — the spreading exchange measured as pure latency here
     annLshTopKDf(spark, embeddingsRaw(spark, sfDir), k, nTables,
       planesPerTable, dim, maxBucket)
@@ -939,27 +899,25 @@ object PipelineOps {
                    nTables: Int, planesPerTable: Int, dim: Int,
                    maxBucket: Int): DataFrame = {
     import spark.implicits._
-    // the candidate pipeline keeps r5's join structure — an id-only
-    // restructure with join-back (as in dedupEmbeddingDf) was tried and
-    // measured SLOWER here (the extra attach joins cost more than the
-    // arrays-through-dedup shuffle at these posting-list sizes; see
-    // OPTIMIZATION_r06.md)
+    // the candidates carry their arrays to the cosine, which runs before
+    // the dedup — an id-only candidate stage with re-attach joins (as in
+    // dedupEmbeddingDf) measured SLOWER here (OPTIMIZATION_r06.md)
     val tb = lshIndex(e0, nTables, planesPerTable, dim)
       .postings($"vec_id", $"embedding", $"en")
-    val q = tb.join(e0.where($"vec_id" % 50 === 0)
-        .select($"vec_id".as("query_id")),
-      tb("vec_id") === col("query_id"))
-      .select($"query_id", $"embedding".as("qe"), $"en".as("qn"),
-        $"table", $"bkt")
+    // the queries (every 50th vector) are read off the postings, which
+    // already carry their embedding, norm and buckets
+    val q = tb.where($"vec_id" % 50 === 0)
+      .select($"vec_id".as("query_id"), $"embedding".as("qe"),
+        $"en".as("qn"), $"table", $"bkt")
     // hot buckets dropped on the cand side only: a query whose bucket was
     // dropped simply gets no candidates from that table — its other
     // tables still vote
     val cand = withinCap(tb, Seq("table", "bkt"), maxBucket)
       .join(q, Seq("table", "bkt"))
       .where($"vec_id" =!= $"query_id")
-      .select($"query_id", $"qe", $"qn", $"vec_id", $"embedding", $"en")
-      .dropDuplicates("query_id", "vec_id")
-    cosineTopK(cand, k, dim)
+    // a vector that shares a query's bucket in several tables is a
+    // candidate once per table
+    cosineTopK(cosines(cand).dropDuplicates("query_id", "vec_id"), k)
   }
 
   /** IVF (inverted-file) ANN — the second scale path beside LSH: a small
@@ -1068,9 +1026,9 @@ object PipelineOps {
 
     // per-(cell, list) cap — the MaxBucket fence: degenerate piles of
     // near-identical vectors would make the probe join quadratic
-    cosineTopK(withinCap(assign, Seq("c", "f"), maxList)
+    cosineTopK(cosines(withinCap(assign, Seq("c", "f"), maxList)
       .join(probes, Seq("c", "f"))
-      .where($"vec_id" =!= $"query_id"), k)
+      .where($"vec_id" =!= $"query_id")), k)
   }
 
   /** k-NN label classification over the embedding corpus — the
@@ -1153,14 +1111,13 @@ object PipelineOps {
       .cache()
     val csz = asg.groupBy($"c").agg(count(lit(1)).as("cn"))
     // dot of pre-normalized vectors, accumulated in index order (the
-    // oracle's list_sum(list_transform) is the same left fold; [[dotU]]
-    // unrolls it — double→double casts are erased by SimplifyCasts)
+    // oracle's list_sum(list_transform) is the same left fold)
     val okc = csz.where($"cn" <= maxCluster).select($"c".as("okc"))
     val dups = asg.as("a")
       .join(asg.as("b"),
         $"a.c" === $"b.c" && $"a.vec_id" < $"b.vec_id")
       .join(broadcast(okc), $"a.c" === $"okc")
-      .where(dotU($"a.ne", $"b.ne") >= tau)
+      .where(dot($"a.ne", $"b.ne") >= tau)
       .select($"b.vec_id".as("vec_id")).distinct()
     asg.join(broadcast(csz), Seq("c"))
       .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")

@@ -3,7 +3,10 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -26,7 +29,10 @@ import graft.pipeline.PipelineOps
   * aggregate picks a vector's nearest centroid, and their queries come
   * from the cached assignment, not a second spread read. `ann_lsh_topk`,
   * timed in every benchmark rep, is pinned to its shuffle and broadcast
-  * counts. */
+  * counts. Every node of the embedding ops that calls the `dot` or
+  * `normalize` kernel (the cosines, norms and normalized copies) runs in
+  * a whole-stage-codegen stage, with no higher-order function beside
+  * it. */
 class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
@@ -63,14 +69,14 @@ class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("ann_lsh_topk keeps its plan: 3 shuffles, 3 broadcasts") {
+  test("ann_lsh_topk keeps its plan: 3 shuffles, 2 broadcasts") {
     spark.catalog.clearCache()
     val df = SparkEntry.queries("ann_lsh_topk")(spark,
       "/root/testdata/sf0.001")
     df.collect()
     val plan = nodes(df.queryExecution.executedPlan)
     assert((plan.count(_.isInstanceOf[ShuffleExchangeLike]),
-      plan.count(_.isInstanceOf[BroadcastExchangeLike])) == ((3, 3)),
+      plan.count(_.isInstanceOf[BroadcastExchangeLike])) == ((3, 2)),
       df.queryExecution.executedPlan.toString)
   }
 
@@ -98,6 +104,45 @@ class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }, text)
       assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) == shuffles,
         text)
+    }
+  }
+
+  /** The nodes of the whole-stage-codegen stage rooted at `p`. */
+  private def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case _: InputAdapter => Nil
+    case _ => p.children.flatMap(stage)
+  })
+
+  /** The vector kernels (`dot`, `normalize`) the expressions of `n`
+    * call. */
+  private def kernels(n: SparkPlan): Set[String] =
+    n.expressions.flatMap(_.collect {
+      case k: StaticInvoke if Set("dot", "normalize")(k.functionName) =>
+        k.functionName
+    }).toSet
+
+  for ((op, want) <- Seq(
+      ("ann_lsh_topk", Set("dot")),
+      ("dedup_embedding", Set("dot")),
+      ("ann_ivf2_topk", Set("dot", "normalize")),
+      ("sem_dedup", Set("dot", "normalize")))) {
+    test(s"$op computes its cosines and norms in whole-stage codegen") {
+      spark.catalog.clearCache()
+      val df = SparkEntry.queries(op)(spark, "/root/testdata/sf0.001")
+      df.collect()
+      val plan = nodes(df.queryExecution.executedPlan)
+      val text = df.queryExecution.executedPlan.toString
+      val fused = plan.collect { case w: WholeStageCodegenExec =>
+        stage(w.child) }.flatten
+      val calling = plan.filter(kernels(_).nonEmpty)
+      assert(calling.flatMap(kernels).toSet == want, text)
+      calling.foreach { n =>
+        val node = n.simpleString(400)
+        assert(fused.exists(_ eq n), s"$op: outside codegen: $node")
+        assert(!n.expressions.exists(_.exists(
+          _.isInstanceOf[HigherOrderFunction])),
+          s"$op: with a higher-order function: $node")
+      }
     }
   }
 }

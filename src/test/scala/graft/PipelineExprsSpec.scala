@@ -2,24 +2,24 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.expr.{GeoFunctions, PointInPolygon, TileCover}
-import graft.pipeline.{CentroidDists, LshBuckets, PipelineExprs, PipelineOps}
+import graft.expr.GeoFunctions
+import graft.pipeline.{PipelineExprs, PipelineOps}
 
-/** Focused specs for the r6 optimization internals: the custom codegen
-  * kernels (LshBuckets / CentroidDists, the unrolled dotU) must be
-  * bit-identical to the interpreted Column folds they replaced, the geo
-  * kernels (TileCover / PointInPolygon) must give the same result through
-  * codegen as through `eval`, and the restructured dedup_minhash /
-  * dedup_clusters must reproduce the r5 shapes' results exactly. */
+/** Focused specs for the kernels and the r6 pipeline restructures: the
+  * vector kernels (lshBuckets, centroidDists, dot, normalize) must be
+  * bit-identical to the interpreted Column forms they replace, through
+  * codegen and through `eval`; the geo kernels (tileCover,
+  * pointInPolygon) must give the same result both ways; and the
+  * restructured dedup_minhash / dedup_clusters must reproduce the r5
+  * shapes' results exactly. */
 class PipelineExprsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -71,7 +71,7 @@ class PipelineExprsSpec extends AnyFunSuite {
     kernelOnly.collect()
     val plan = kernelOnly.queryExecution.executedPlan.toString
     val kernelLine = plan.linesIterator
-      .find(_.contains("lshbuckets(")).getOrElse("")
+      .find(_.contains("lshBuckets")).getOrElse("")
     assert(kernelLine.contains("*("), plan)
   }
 
@@ -142,7 +142,8 @@ class PipelineExprsSpec extends AnyFunSuite {
 
   // ---- property fuzz: each kernel against its interpreted Column form,
   //      bit for bit, through codegen (a kernel-only projection over a
-  //      shuffled frame) and through `eval` on literal children ----
+  //      shuffled frame) and through `eval` (the same projection with
+  //      codegen off) ----
 
   private def check(p: Prop): Unit = {
     val r = org.scalacheck.Test.check(
@@ -171,7 +172,6 @@ class PipelineExprsSpec extends AnyFunSuite {
   private def bits(v: Any): Any = v match {
     case null => null
     case d: Double => java.lang.Double.doubleToLongBits(d)
-    case a: ArrayData => bits(a.toObjectArray(NullType).toSeq)
     case s: scala.collection.Seq[_] => s.map(bits)
     case x => x
   }
@@ -185,6 +185,27 @@ class PipelineExprsSpec extends AnyFunSuite {
   private def results(df: DataFrame, c: Column): Map[Long, Any] =
     df.select(col("id"), c).collect()
       .map(r => r.getLong(0) -> bits(r.get(1))).toMap
+
+  /** `body` under the SQL settings `kv`, restored after. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(
+      spark.conf.set(k, _)) }
+  }
+
+  /** `body` with whole-stage and expression codegen off, so every
+    * projection evaluates its expressions through `eval`. */
+  private def interpreted[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+
+  /** (id → result) of the kernel column `c` over `df` through codegen,
+    * and the same through `eval`. */
+  private def codegenAndEval(df: DataFrame, c: Column)
+      : (Map[Long, Any], Map[Long, Any]) =
+    (results(df, c), interpreted(results(df, c)))
 
   test("CentroidDists ≡ Column form on fuzzed rows, cells, widths") {
     val genCase = for {
@@ -206,12 +227,8 @@ class PipelineExprsSpec extends AnyFunSuite {
       val want = results(df, transform(get(typedLit(mats), col("cell")),
         c => aggregate(zip_with(c, col("ne"), (x, y) => {
           val d = x - y; d * d }), lit(0.0), (acc, v) => acc + v)))
-      val got = results(df,
+      val (got, evald) = codegenAndEval(df,
         PipelineExprs.centroidDists(col("ne"), m, col("cell")))
-      val evald = rows.zipWithIndex.map { case ((ne, cell), i) =>
-        i.toLong -> bits(CentroidDists(
-          Literal.create(ne, ArrayType(DoubleType)),
-          Literal.create(cell, IntegerType), m).eval()) }.toMap
       (got == want && evald == want) :|
         s"want $want\ncodegen $got\neval $evald"
     })
@@ -229,38 +246,44 @@ class PipelineExprsSpec extends AnyFunSuite {
     } yield (mat, float, rows)
     check(Prop.forAllNoShrink(genCase) { case (mat, float, rows) =>
       val m = mat.map(_.map(_.toArray).toArray).toArray
-      val elem = ArrayType(if (float) FloatType else DoubleType)
-      val df = frame(rows.zipWithIndex.map { case (e, i) =>
-        Row(i.toLong, e) }, StructType(Seq(StructField("id", LongType),
-        StructField("e", ArrayType(DoubleType)))))
-        .select(col("id"), col("e").cast(elem).as("e"))
+      val df = vecFrame(rows.map(Seq(_)), float)
       def bucket(planes: Seq[Seq[Double]]): Column =
         planes.zipWithIndex.foldLeft(lit(0)) { case (acc, (pl, p)) =>
-          acc + when(aggregate(zip_with(typedLit(pl), col("e"),
+          acc + when(aggregate(zip_with(typedLit(pl), col("a"),
             (x, v) => x * v.cast("double")), lit(0.0),
             (a, v) => a + v) > 0, lit(1 << p)).otherwise(lit(0))
         }
       val want = results(df,
         if (mat.isEmpty) array().cast("array<int>")
         else array(mat.map(bucket): _*))
-      val got = results(df, PipelineExprs.lshBuckets(col("e"), m))
-      val evald = rows.zipWithIndex.map { case (e, i) =>
-        val in: Expression = Cast(Literal.create(e, ArrayType(DoubleType)),
-          elem)
-        i.toLong -> bits(LshBuckets(in, m).eval()) }.toMap
+      val (got, evald) = codegenAndEval(df,
+        PipelineExprs.lshBuckets(col("a"), m))
       (got == want && evald == want) :|
         s"want $want\ncodegen $got\neval $evald"
     })
   }
 
+  /** A frame of `id` and one array column per row entry (`a`, then
+    * `b`), of float or double elements. */
+  private def vecFrame(rows: Seq[Seq[Seq[java.lang.Double]]],
+                       float: Boolean): DataFrame = {
+    val names = Seq("a", "b").take(rows.headOption.fold(1)(_.length))
+    val elem = ArrayType(if (float) FloatType else DoubleType)
+    frame(rows.zipWithIndex.map { case (r, i) => Row(i.toLong +: r: _*) },
+      StructType(StructField("id", LongType) +:
+        names.map(StructField(_, ArrayType(DoubleType)))))
+      .select(col("id") +: names.map(n => col(n).cast(elem).as(n)): _*)
+  }
+
   /** A row of finite elements (a 64-wide dot over [[genRow]] rows is
     * nearly always NaN), mostly of width `w` but of any width up to
-    * w + 2, sometimes null; a quarter of the rows hold one NaN, ±Inf or
-    * null element. */
-  private def genDotRow(w: Int): Gen[Seq[java.lang.Double]] =
+    * w + 2, sometimes null or all zeros; a quarter of the rows hold one
+    * NaN, ±Inf or null element. */
+  private def genVecRow(w: Int): Gen[Seq[java.lang.Double]] =
     Gen.frequency(
       1 -> Gen.const(null),
-      8 -> (for {
+      1 -> Gen.const(Seq.fill(w)(java.lang.Double.valueOf(0.0))),
+      14 -> (for {
         n <- Gen.frequency(4 -> Gen.const(w), 1 -> Gen.chooseNum(0, w + 2))
         xs <- Gen.listOfN(n,
           Gen.chooseNum(-3.0, 3.0).map(java.lang.Double.valueOf))
@@ -269,43 +292,72 @@ class PipelineExprsSpec extends AnyFunSuite {
           Double.PositiveInfinity, Double.NegativeInfinity, null))
       } yield if (at < n) xs.updated(at, odd) else xs))
 
-  test("dotU ≡ aggregate(zip_with) fold on fuzzed rows and widths") {
-    // rows of width `w` take the unrolled branch, any other width the fold
+  /** Widths 0-7 and 64. */
+  private val genWidth = Gen.frequency(1 -> Gen.const(64),
+    2 -> Gen.chooseNum(0, 7))
+
+  /** The deepest error condition (e.g. `DIVIDE_BY_ZERO`) in `t`'s cause
+    * chain. */
+  private def condition(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collect {
+      case s: SparkThrowable if s.getCondition != null => s.getCondition
+    }.toSeq.lastOption.getOrElse(t.getClass.getName)
+
+  /** [[results]] of `c` over `df`; when that fails, each row's own
+    * result or error condition. */
+  private def outcomes(df: DataFrame, c: => Column): Map[Long, Any] =
+    try results(df, c)
+    catch { case _: Exception =>
+      df.select(col("id")).collect().map(_.getLong(0)).map { i =>
+        i -> (try results(df.where(col("id") === i), c)(i)
+          catch { case e: Exception => "error " + condition(e) })
+      }.toMap
+    }
+
+  /** The Column form the `dot` kernel replaces: the interpreted
+    * `aggregate(zip_with)` fold. */
+  private def foldDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (p, q) => p.cast("double") * q.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  test("dot ≡ aggregate(zip_with) fold on fuzzed rows and widths") {
     val genCase = for {
-      w <- Gen.frequency(1 -> Gen.const(64), 1 -> Gen.chooseNum(0, 5))
+      w <- genWidth
       float <- Gen.oneOf(false, true)
-      rows <- Gen.listOfN(8, Gen.zip(genDotRow(w), genDotRow(w)))
-    } yield (w, float, rows)
-    check(Prop.forAllNoShrink(genCase) { case (w, float, rows) =>
-      val elem = ArrayType(if (float) FloatType else DoubleType)
-      val df = frame(rows.zipWithIndex.map { case ((a, b), i) =>
-        Row(i.toLong, a, b) }, StructType(Seq(StructField("id", LongType),
-        StructField("a", ArrayType(DoubleType)),
-        StructField("b", ArrayType(DoubleType)))))
-        .select(col("id"), col("a").cast(elem).as("a"),
-          col("b").cast(elem).as("b"))
-      val want = results(df, aggregate(zip_with(col("a"), col("b"),
-        (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v))
-      val got = results(df, pipeline.DotU(col("a"), col("b"), w))
-      (got == want) :| s"want $want\ngot $got"
+      rows <- Gen.listOfN(8, Gen.zip(genVecRow(w), genVecRow(w)))
+    } yield (float, rows)
+    check(Prop.forAllNoShrink(genCase) { case (float, rows) =>
+      val df = vecFrame(rows.map { case (a, b) => Seq(a, b) }, float)
+      val want = results(df, foldDot(col("a"), col("b")))
+      val (got, evald) = codegenAndEval(df,
+        PipelineExprs.dot(col("a"), col("b")))
+      (got == want && evald == want) :|
+        s"want $want\ncodegen $got\neval $evald"
     })
   }
 
-  /** (id → result) of the kernel `k` over `df` through codegen, and the
-    * same kernel's `eval` on each row's literals. */
-  private def codegenAndEval(df: DataFrame,
-                             k: Seq[Column] => Column,
-                             e: Seq[Expression] => Expression)
-      : (Map[Long, Any], Map[Long, Any]) = {
-    val cols = df.columns.toSeq.tail
-    val schema = df.schema.fields.tail
-    val got = results(df, k(cols.map(col)))
-    val evald = df.collect().map { r =>
-      r.getLong(0) -> bits(e(schema.indices.map(i =>
-        Literal.create(r.get(i + 1), schema(i).dataType))).eval())
-    }.toMap
-    (got, evald)
+  test("normalize ≡ transform(v / nrm) on fuzzed rows, widths, ANSI") {
+    // under ANSI a zero norm raises DIVIDE_BY_ZERO in both forms; off
+    // ANSI it gives nulls
+    val genCase = for {
+      w <- genWidth
+      float <- Gen.oneOf(false, true)
+      ansi <- Gen.oneOf(true, false)
+      rows <- Gen.listOfN(8, genVecRow(w))
+    } yield (float, ansi, rows)
+    check(Prop.forAllNoShrink(genCase) { case (float, ansi, rows) =>
+      withConf("spark.sql.ansi.enabled" -> ansi.toString) {
+        val df = vecFrame(rows.map(Seq(_)), float)
+        val want = outcomes(
+          df.withColumn("nrm", sqrt(foldDot(col("a"), col("a")))),
+          transform(col("a"), v => v.cast("double") / col("nrm")))
+        val got = outcomes(df, PipelineExprs.normalize(col("a")))
+        val evald = interpreted(
+          outcomes(df, PipelineExprs.normalize(col("a"))))
+        (got == want && evald == want) :|
+          s"want $want\ncodegen $got\neval $evald"
+      }
+    })
   }
 
   /** A double that is often NaN, ±Inf or null, over about the Mercator
@@ -333,9 +385,9 @@ class PipelineExprsSpec extends AnyFunSuite {
           "xmax" -> DoubleType, "ymax" -> DoubleType,
           "margin" -> IntegerType, "extent" -> IntegerType).map {
           case (n, t) => StructField(n, t) }))
-      val (got, evald) = codegenAndEval(df,
-        c => GeoFunctions.tileCover(c(0), c(1), c(2), c(3), c(4), c(5), c(6)),
-        e => TileCover(e(0), e(1), e(2), e(3), e(4), e(5), e(6)))
+      val (got, evald) = codegenAndEval(df, GeoFunctions.tileCover(
+        col("z"), col("xmin"), col("ymin"), col("xmax"), col("ymax"),
+        col("margin"), col("extent")))
       (got == evald) :| s"codegen $got\neval $evald"
     })
   }
@@ -369,8 +421,7 @@ class PipelineExprsSpec extends AnyFunSuite {
         StructField("id", LongType), StructField("rings", ringType),
         StructField("x", DoubleType), StructField("y", DoubleType))))
       val (got, evald) = codegenAndEval(df,
-        c => GeoFunctions.pointInPolygon(c(0), c(1), c(2)),
-        e => PointInPolygon(e(0), e(1), e(2)))
+        GeoFunctions.pointInPolygon(col("rings"), col("x"), col("y")))
       (got == evald) :| s"codegen $got\neval $evald"
     })
   }
@@ -429,13 +480,5 @@ class PipelineExprsSpec extends AnyFunSuite {
       assert(keep == keepOf(doc), s"keep_id mismatch for doc $doc")
       assert(n == sizeOf(keepOf(doc)), s"cluster_n mismatch for doc $doc")
     }
-  }
-}
-
-package pipeline {
-  /** [[PipelineOps.dotU]], package-private, for the kernel fuzz above. */
-  object DotU {
-    def apply(a: Column, b: Column, dim: Int): Column =
-      PipelineOps.dotU(a, b, dim)
   }
 }
