@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -70,120 +71,82 @@ object Query {
   /** Packed cell of a point at zoom z (single cell, pure floor — the
     * degenerate non-margin cover). */
   def pointCell(z: Int, x: Column, y: Column): Column = {
+    val (tx, ty) = cellXY(z, x, y)
+    (lit(z.toLong) * lit(1L << 58) + tx.cast("long") * lit(1L << 29) +
+      ty.cast("long"))
+  }
+
+  /** Grid cell `(tx, ty)` of a point at zoom z: floor of the point's
+    * offset from the world's top-left corner, clamped into the grid. */
+  private def cellXY(z: Int, x: Column, y: Column): (Column, Column) = {
     val span = TileGrid.tileSpan(z)
     val n = (1 << z) - 1
     val tx = least(lit(n), greatest(lit(0),
       floor((x + lit(Mercator.HalfWorld)) / lit(span)).cast("int")))
     val ty = least(lit(n), greatest(lit(0),
       floor((lit(Mercator.HalfWorld) - y) / lit(span)).cast("int")))
-    (lit(z.toLong) * lit(1L << 58) + tx.cast("long") * lit(1L << 29) +
-      ty.cast("long"))
+    (tx, ty)
   }
 
-  /** Distributed grid-ring kNN join (SURVEY.md §2.3 J6; the reference has
-    * no kNN — this is the north-rule extension, after the cell-grid
-    * pattern of the Distributed Stream KNN Join literature in PAPERS.md).
+  /** Grid kNN join (SURVEY.md §2.3 J6; the reference has no kNN — this is
+    * the north-rule extension, after the per-cell counts of Distributed
+    * Stream KNN Join and the per-partition boxes of SpatialHadoop, both
+    * in PAPERS.md). Serves `SparkEntry`'s `knn_join` (z = 4) and the
+    * OpsSpec kNN tests.
     *
     * `queries`: (qid, x, y); `data`: (did, x, y). Returns for each query
-    * its k nearest data points as (qid, rank, did, d2).
+    * its k nearest data points as (qid, rank, did, d2), ties broken by
+    * data id.
     *
-    * Scale shape: data is cell-partitioned once (shuffle on cell); each
-    * round joins only the UNRESOLVED queries' new ring of cells; a query
-    * resolves when its kth candidate distance is ≤ r·span (no unsearched
-    * cell can beat it). Deterministic: ties broken by data id.
+    * One lazy plan. Points and queries are grouped by grid cell into a
+    * count and an x/y box. For each (query cell, data cell) pair, `far`
+    * and `near` are the largest and smallest squared distance between the
+    * two boxes, in the same `(a-b)*(a-b) + (c-d)*(c-d)` shape as `d2`.
+    * A query cell's bound `dk` is the smallest `far` whose running point
+    * count, in `far` order, reaches k; the data cells with `near <= dk`
+    * are the only ones searched (all of them when the data holds fewer
+    * than k points). The bound is exact: every point lies in its cell's
+    * box, whatever the clamping does to points beyond the world edge, and
+    * IEEE rounding is monotone, so each computed `d2` lies within its
+    * pair's `[near, far]`. Hence every query has k points at `d2 <= dk`,
+    * and no point at `d2 > dk` can rank in its top k. The pair table holds
+    * (occupied query cells × occupied data cells) rows, at most 4^z per
+    * side; it is broadcast into one candidate join.
     */
   def knnJoin(spark: SparkSession, queries: DataFrame, data: DataFrame,
-              k: Int, z: Int,
-              roundCounter: java.util.concurrent.atomic.AtomicInteger = null)
-      : DataFrame = {
+              k: Int, z: Int): DataFrame = {
     import spark.implicits._
-    val span = TileGrid.tileSpan(z)
-    val n = 1 << z
-    val dataCells = data.select($"did", $"x", $"y",
-      floor(($"x" + lit(Mercator.HalfWorld)) / lit(span)).cast("int")
-        .as("cx"),
-      floor((lit(Mercator.HalfWorld) - $"y") / lit(span)).cast("int")
-        .as("cy"))
-      .withColumn("cx", least(lit(n - 1), greatest(lit(0), $"cx")))
-      .withColumn("cy", least(lit(n - 1), greatest(lit(0), $"cy")))
-      .repartition(col("cx"), col("cy"))
-      .cache()
-
-    val q0 = queries.select($"qid", $"x".as("qx"), $"y".as("qy"),
-      least(lit(n - 1), greatest(lit(0),
-        floor(($"qx" + lit(Mercator.HalfWorld)) / lit(span)).cast("int")))
-        .as("qcx"),
-      least(lit(n - 1), greatest(lit(0),
-        floor((lit(Mercator.HalfWorld) - $"qy") / lit(span)).cast("int")))
-        .as("qcy")).cache()
-
-    // GEOMETRIC radius growth (VERDICT r1 #7): round t searches the
-    // Chebyshev annulus (prevR, R] with R doubling each round, so the
-    // driver-side loop depth is O(log n) instead of O(n) on sparse data.
-    // The resolution guarantee is unchanged: after searching Chebyshev
-    // ≤ R, every unsearched cell is ≥ R·span away, so a query with k
-    // candidates within R·span can never be beaten.
-    def annulusCells(prevR: Int, r: Int): Seq[(Int, Int)] =
-      for {
-        dx <- -r to r; dy <- -r to r
-        if math.max(math.abs(dx), math.abs(dy)) > prevR
-      } yield (dx, dy)
-
-    var unresolved = q0
-    var best: DataFrame = null
-    var prevR = -1
-    while (prevR < n - 1 && !unresolved.isEmpty) {
-      val r =
-        if (prevR < 0) 0 else math.min(n - 1, math.max(1, prevR * 2 + 1))
-      // annulus cells as a broadcast offset table while small; past 64k
-      // offsets (large z, sparse data) switch to a Chebyshev range join —
-      // by then few queries remain unresolved, so the nested-loop side is
-      // tiny and the offset table would be the blowup
-      val annulusSize =
-        (2L * r + 1) * (2L * r + 1) - (if (prevR < 0) 0L
-          else (2L * prevR + 1) * (2L * prevR + 1))
-      val cand0 =
-        if (annulusSize <= 65536) {
-          val offsets = annulusCells(prevR, r).toDF("dx", "dy")
-          unresolved
-            .join(broadcast(offsets))
-            .select($"qid", $"qx", $"qy",
-              ($"qcx" + $"dx").as("cx"), ($"qcy" + $"dy").as("cy"),
-              $"qcx", $"qcy")
-            .where($"cx" >= 0 && $"cx" < n && $"cy" >= 0 && $"cy" < n)
-            .join(dataCells, Seq("cx", "cy"))
-        } else {
-          val cheb = greatest(abs($"cx" - $"qcx"), abs($"cy" - $"qcy"))
-          unresolved.join(dataCells,
-            cheb <= r && cheb > prevR, "inner")
-        }
-      val cand = cand0
-        .select($"qid", $"qx", $"qy", $"qcx", $"qcy", $"did",
-          (($"qx" - $"x") * ($"qx" - $"x") +
-            ($"qy" - $"y") * ($"qy" - $"y")).as("d2"))
-      val acc = if (best == null) cand else best.unionByName(cand)
-      // keep only k best per query (bounded state across rounds)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"qid").orderBy($"d2", $"did")
-      best = acc.withColumn("rank", row_number().over(w))
-        .where($"rank" <= k)
-        .drop("rank")
-        .localCheckpoint(eager = true)
-      // resolution: k candidates AND kth distance ≤ (r·span)²
-      val kth = best.groupBy($"qid", $"qcx", $"qcy")
-        .agg(count(lit(1)).as("nc"), max($"d2").as("dk"))
-      val guarantee = lit(r.toDouble * span) * lit(r.toDouble * span)
-      val resolvedIds = kth
-        .where($"nc" >= k && $"dk" <= guarantee)
-        .select($"qid")
-      unresolved = unresolved.join(resolvedIds, Seq("qid"), "left_anti")
-        .localCheckpoint(eager = true)
-      prevR = r
-      if (roundCounter != null) roundCounter.incrementAndGet()
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"d2", $"did")
-    best.select($"qid", $"did", $"d2")
+    val (cx, cy) = cellXY(z, $"x", $"y")
+    val q = queries.select($"qid", $"x".as("qx"), $"y".as("qy"),
+      cx.as("qcx"), cy.as("qcy"))
+    val d = data.select($"did", $"x", $"y", cx.as("cx"), cy.as("cy"))
+    val qCells = q.groupBy($"qcx", $"qcy").agg(
+      min($"qx").as("qx0"), max($"qx").as("qx1"),
+      min($"qy").as("qy0"), max($"qy").as("qy1"))
+    val dCells = d.groupBy($"cx", $"cy").agg(count(lit(1)).as("n"),
+      min($"x").as("x0"), max($"x").as("x1"),
+      min($"y").as("y0"), max($"y").as("y1"))
+    val fx = greatest($"qx1" - $"x0", $"x1" - $"qx0")
+    val fy = greatest($"qy1" - $"y0", $"y1" - $"qy0")
+    val nx = greatest(lit(0.0), $"x0" - $"qx1", $"qx0" - $"x1")
+    val ny = greatest(lit(0.0), $"y0" - $"qy1", $"qy0" - $"y1")
+    val byQCell = Window.partitionBy($"qcx", $"qcy")
+    // a row frame orders tied `far`s arbitrarily, but the smallest `far`
+    // whose running count reaches k is the same in any order
+    val pairs = qCells.crossJoin(dCells)
+      .select($"qcx", $"qcy", $"cx", $"cy", $"n",
+        (fx * fx + fy * fy).as("far"), (nx * nx + ny * ny).as("near"))
+      .withColumn("reach", sum($"n").over(byQCell.orderBy($"far")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("dk", min(when($"reach" >= k, $"far")).over(byQCell))
+      .where($"dk".isNull || $"near" <= $"dk")
+      .select($"qcx", $"qcy", $"cx", $"cy")
+    val w = Window.partitionBy($"qid").orderBy($"d2", $"did")
+    q.join(broadcast(pairs), Seq("qcx", "qcy"))
+      .join(d, Seq("cx", "cy"))
+      .select($"qid", $"did",
+        (($"qx" - $"x") * ($"qx" - $"x") +
+          ($"qy" - $"y") * ($"qy" - $"y")).as("d2"))
       .withColumn("rank", row_number().over(w))
       .where($"rank" <= k)
       .select($"qid", $"rank", $"did", $"d2")

@@ -66,27 +66,104 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("grid kNN join == brute force") {
-    import spark.implicits._
+  // a kNN join input: queries and data points, each (id, x, y)
+  private case class KnnCase(name: String, qs: Seq[(Long, Double, Double)],
+      ds: Seq[(Long, Double, Double)], k: Int, z: Int) {
+    def frame = {
+      import spark.implicits._
+      Query.knnJoin(spark, qs.toDF("qid", "x", "y"),
+        ds.toDF("did", "x", "y"), k, z)
+    }
+  }
+
+  private val H = Mercator.HalfWorld
+  private val knnCases = {
     val rnd = new java.util.Random(11)
-    def pts(n: Int, tag: String) = (0 until n).map { i =>
+    def pts(n: Int) = (0 until n).map { i =>
       (i.toLong, (rnd.nextDouble() * 2 - 1) * 1.5e7,
         (rnd.nextDouble() * 2 - 1) * 1.5e7)
     }
-    val qs = pts(40, "q"); val ds = pts(300, "d")
-    val qdf = qs.toDF("qid", "x", "y")
-    val ddf = ds.toDF("did", "x", "y")
-    val got = Query.knnJoin(spark, qdf, ddf, k = 3, z = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .toSet
-    val want = qs.flatMap { case (qid, qx, qy) =>
-      ds.map { case (did, dx, dy) =>
-        (qid, did, (qx - dx) * (qx - dx) + (qy - dy) * (qy - dy))
-      }.sortBy(t => (t._3, t._2)).take(3).zipWithIndex.map {
-        case ((_, did, _), i) => (qid, i + 1, did)
-      }
-    }.toSet
-    assert(got == want)
+    // inside z4 cell (5, 10), away from its edges; integral, so the
+    // ties around it are exact
+    val c = -6.0e6
+    // z4 cell (5, 10): two points at its corners widen its box around a
+    // query at its centre; the query's nearest point sits beside it, and
+    // a point in cell (6, 10) is nearer than the box's edges
+    val s4 = TileGrid.tileSpan(4)
+    val (x0, y0) = (-H + 5 * s4, H - 11 * s4)
+    val (mx, my) = (x0 + s4 / 2, y0 + s4 / 2)
+    val corner = (0 until 20).map(i =>
+      (i.toLong, -0.95 * H + i * 1e4, -0.9 * H - i * 1e4))
+    Seq(
+      KnnCase("random 40x300", pts(40), pts(300), 3, 4),
+      KnnCase("sparse z6",
+        Seq((1L, -0.9 * H, -0.9 * H), (2L, 0.9 * H, 0.9 * H)),
+        Seq((10L, 0.0, 0.0), (11L, 0.85 * H, -0.85 * H),
+          (12L, -0.5 * H, 0.7 * H)), 2, 6),
+      KnnCase("z12, 3 points", Seq((1L, -0.9 * H, -0.9 * H)),
+        Seq((10L, 0.8 * H, 0.8 * H), (11L, 0.0, 0.1 * H)), 2, 12),
+      KnnCase("fewer than k points",
+        Seq((1L, 0.0, 0.0), (2L, 0.5 * H, -0.2 * H)),
+        Seq((10L, 1e5, 2e5), (11L, -0.7 * H, 0.3 * H)), 3, 4),
+      KnnCase("one dense cell with ties",
+        Seq((1L, c, c), (2L, c + 1000, c), (3L, 0.3 * H, 0.2 * H)),
+        Seq((10L, c + 1000, c), (11L, c - 1000, c), (12L, c, c + 1000),
+          (13L, c, c - 1000), (14L, c + 1000, c), (15L, c, c),
+          (16L, c - 1000, c), (17L, c + 2000, c)), 4, 4),
+      KnnCase("query inside a wide cell box", Seq((1L, mx, my)),
+        Seq((10L, x0 + 1000, y0 + 1000), (11L, x0 + s4 - 1000, y0 + s4 - 1000),
+          (12L, mx + 1000, my), (13L, x0 + s4 + 1000, my)), 1, 4),
+      KnnCase("queries far from every point",
+        Seq((1L, 0.9 * H, 0.9 * H), (2L, 0.95 * H, 0.92 * H)),
+        corner, 3, 4),
+      KnnCase("points and queries beyond HalfWorld",
+        Seq((1L, 1.5 * H, 0.0), (2L, -3.0 * H, -2.0 * H), (3L, 0.9 * H, 0.0)),
+        Seq((10L, 0.95 * H, 0.0), (11L, 2.5 * H, 0.1 * H),
+          (12L, 1.2 * H, -1.1 * H), (13L, -1.5 * H, -1.5 * H),
+          (14L, -0.99 * H, -0.99 * H), (15L, 3.0 * H, 3.0 * H)), 3, 4),
+      KnnCase("empty data", Seq((1L, 0.0, 0.0), (2L, H, -H)), Seq.empty, 3, 4))
+  }
+
+  test("kNN join == brute force (qid, rank, did, d2) on every input") {
+    for (c @ KnnCase(name, qs, ds, k, _) <- knnCases) {
+      val got = c.frame.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .sorted.toSeq
+      val want = qs.flatMap { case (qid, qx, qy) =>
+        ds.map { case (did, dx, dy) =>
+          (did, (qx - dx) * (qx - dx) + (qy - dy) * (qy - dy))
+        }.sortBy(t => (t._2, t._1)).take(k).zipWithIndex.map {
+          case ((did, d2), i) => (qid, i + 1, did, d2)
+        }
+      }.sorted
+      assert(got == want, name)
+    }
+  }
+
+  // the most jobs one kNN join collect() starts on any input above
+  // (measured: 7 or 8, and 0 on empty data, whose plan folds away)
+  private val KnnJobs = 8
+
+  test("kNN join: building starts no job, collect a fixed number") {
+    val counts = knnCases.map { c =>
+      val (df, built) =
+        SparkJobs.counted(spark, s"knn-build-${c.name}")(c.frame)
+      val (_, ran) =
+        SparkJobs.counted(spark, s"knn-run-${c.name}")(df.collect())
+      (c.name, built, ran)
+    }
+    assert(counts.forall(t => t._2 == 0 && t._3 <= KnnJobs), counts)
+  }
+
+  test("kNN join leaves nothing cached or persisted after collect") {
+    // the session is shared: drop the caches earlier tests left, and keep
+    // the RDDs they persisted outside the cache manager as the baseline
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    knnCases.foreach(_.frame.collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("raster stub: vectorize finds the disc boundary; rasterize fills") {
@@ -220,43 +297,6 @@ class OpsSpec extends AnyFunSuite {
     want.foreach { case (id, w) => assert(got(id) == w, s"doc $id") }
     // the selection must be non-trivial on the fixture (both classes)
     assert(got.values.exists(_._4) && got.values.exists(!_._4))
-  }
-
-  test("sparse-data kNN completes in O(log n) driver rounds") {
-    import spark.implicits._
-    // 3 data points in far-apart cells at z=6 (n=64): linear ring growth
-    // would need ~30+ driver rounds; geometric growth needs ≤ 8
-    val H = Mercator.HalfWorld
-    val qdf = Seq((1L, -0.9 * H, -0.9 * H), (2L, 0.9 * H, 0.9 * H))
-      .toDF("qid", "x", "y")
-    val ds = Seq((10L, 0.0, 0.0), (11L, 0.85 * H, -0.85 * H),
-      (12L, -0.5 * H, 0.7 * H))
-    val ddf = ds.toDF("did", "x", "y")
-    val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val got = Query.knnJoin(spark, qdf, ddf, k = 2, z = 6, rounds)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(rounds.get() <= 8, s"rounds=${rounds.get()}")
-    val want = Seq((1L, -0.9 * H, -0.9 * H), (2L, 0.9 * H, 0.9 * H))
-      .flatMap { case (qid, qx, qy) =>
-        ds.map { case (did, dx, dy) =>
-          (qid, did, (qx - dx) * (qx - dx) + (qy - dy) * (qy - dy))
-        }.sortBy(t => (t._3, t._2)).take(2).zipWithIndex.map {
-          case ((_, did, _), i) => (qid, i + 1, did)
-        }
-      }.toSet
-    assert(got == want)
-  }
-
-  test("kNN at z=12 (16M-cell grid, 3 points): range-join path, no offset blowup") {
-    import spark.implicits._
-    val H = Mercator.HalfWorld
-    val qdf = Seq((1L, -0.9 * H, -0.9 * H)).toDF("qid", "x", "y")
-    val ds = Seq((10L, 0.8 * H, 0.8 * H), (11L, 0.0, 0.1 * H))
-    val ddf = ds.toDF("did", "x", "y")
-    val got = Query.knnJoin(spark, qdf, ddf, k = 2, z = 12)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    // brute force: 11 is nearer than 10
-    assert(got == Set((1L, 1, 11L), (1L, 2, 10L)))
   }
 
   // n identical docs share every bucket of every pair op: the 1k pile
