@@ -124,20 +124,39 @@ class OpsSpec extends AnyFunSuite {
       KnnCase("empty data", Seq((1L, 0.0, 0.0), (2L, H, -H)), Seq.empty, 3, 4))
   }
 
+  // the join's rows (qid, rank, did, d2), checked against brute force
+  private def knnBruteForce(c: KnnCase): Seq[(Long, Int, Long, Double)] = {
+    val got = c.frame.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .sorted.toSeq
+    val want = c.qs.flatMap { case (qid, qx, qy) =>
+      c.ds.map { case (did, dx, dy) =>
+        (did, (qx - dx) * (qx - dx) + (qy - dy) * (qy - dy))
+      }.sortBy(t => (t._2, t._1)).take(c.k).zipWithIndex.map {
+        case ((did, d2), i) => (qid, i + 1, did, d2)
+      }
+    }.sorted
+    assert(got == want, c.name)
+    got
+  }
+
+  private def knnCase(name: String) = knnCases.find(_.name == name).get
+
   test("kNN join == brute force (qid, rank, did, d2) on every input") {
-    for (c @ KnnCase(name, qs, ds, k, _) <- knnCases) {
-      val got = c.frame.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .sorted.toSeq
-      val want = qs.flatMap { case (qid, qx, qy) =>
-        ds.map { case (did, dx, dy) =>
-          (did, (qx - dx) * (qx - dx) + (qy - dy) * (qy - dy))
-        }.sortBy(t => (t._2, t._1)).take(k).zipWithIndex.map {
-          case ((did, d2), i) => (qid, i + 1, did, d2)
-        }
-      }.sorted
-      assert(got == want, name)
-    }
+    knnCases.foreach(knnBruteForce)
+  }
+
+  test("grid kNN join == brute force") {
+    knnBruteForce(knnCase("random 40x300"))
+  }
+
+  // a 2^12 x 2^12 grid holding 3 points: the per-cell box bound looks only
+  // at occupied cells, so no offset list over the empty grid is built (the
+  // range-join path this name recalls was the earlier way round it)
+  test("kNN at z=12 (16M-cell grid, 3 points): range-join path, no offset blowup") {
+    val got = knnBruteForce(knnCase("z12, 3 points"))
+    // brute force: 11 is nearer than 10
+    assert(got.map(t => (t._1, t._2, t._3)) == Seq((1L, 1, 11L), (1L, 2, 10L)))
   }
 
   // the most jobs one kNN join collect() starts on any input above
