@@ -22,8 +22,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *     — run one query twice (the first warms the JIT) and print the
   *       second run's stages by task-seconds.
   *   runMain graft.BenchExtra dig
-  *     — dig the bench corpus twice and print the second dig's stages by
-  *       task-seconds.
+  *     — dig the bench corpus twice, print each feature table's partition
+  *       count and the second dig's stages by task-seconds.
   *
   * Same session configuration as [[Bench]] (env-parameterised master,
   * shuffle partitions, AQE) so plans and timings match the gate record's
@@ -142,14 +142,18 @@ object BenchExtra {
         docs.count()
         val entities = graft.extract.Extract.entities(docs).cache()
         entities.count()
-        // warm rep (JIT) then the measured rep
-        graft.dig.Dig.features(spark, entities, cfg).count()
+        // warm rep (JIT) then the measured rep; a dig's partition count
+        // is what every pass over its table runs as tasks
+        val warm = graft.dig.Dig.features(spark, entities, cfg)
+        println(s"DIG 1 partitions=${warm.rdd.getNumPartitions}")
         Thread.sleep(500)
         stats.clear()
         val t0 = System.nanoTime()
-        val n = graft.dig.Dig.features(spark, entities, cfg).count()
+        val feats = graft.dig.Dig.features(spark, entities, cfg)
+        val n = feats.count()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500)
+        println(s"DIG 2 partitions=${feats.rdd.getNumPartitions}")
         println(f"DIG n=$n wall=$wall%.2f s; stages by task-sec:")
         printStages(stats, Int.MaxValue)
       case other =>

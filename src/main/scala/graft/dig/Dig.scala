@@ -89,10 +89,14 @@ object Dig {
     * task: on the perfbench tiles corpus (4 cores) the mean per-task
     * deserialize time goes 16.8 → 6.7 ms in an MVT pass and 8.5 → 2.7 ms
     * in a single-tile job. The checkpoint keeps the partitions that AQE
-    * coalesces the dig's last shuffles to: 3 on that corpus, where the
-    * cached uncut table had 48, so a single-tile job runs 3 tasks, not
-    * 48. Costs: the executors' block managers keep one MEMORY_AND_DISK
-    * copy of the table, and a caller's own `.cache()` is a second one
+    * coalesces the dig's last shuffles to, so their number depends on the
+    * corpus and on what the session holds cached (`BenchExtra dig` prints
+    * it for two digs): on that corpus a first dig gives 3, and a second
+    * dig of the same entities 18, since it re-reads the first's still
+    * cached `m`, `mapWays` and `wayCoords` (3 both times without those
+    * caches); the bench corpus gives 18 both times. Costs: the
+    * executors' block managers keep one MEMORY_AND_DISK copy of the
+    * table, and a caller's own `.cache()` is a second one
     * (perfbench `setup.cache_mb` 12.9 → 24.1 MB); a lost executor's
     * blocks are not recomputed, the trade-off the closure loop's
     * checkpoints already make.

@@ -93,12 +93,6 @@ object GeoFunctions {
   def mercY(lat: Column): Column =
     lit(R) * log(tan(lit(math.Pi / 4.0) + radians(lat) / lit(2.0)))
 
-  /** Inclusive bbox-overlap predicate (plain Column algebra — P8). */
-  def bboxIntersects(axmin: Column, aymin: Column, axmax: Column,
-                     aymax: Column, bxmin: Column, bymin: Column,
-                     bxmax: Column, bymax: Column): Column =
-    axmin <= bxmax && axmax >= bxmin && aymin <= bymax && aymax >= bymin
-
   /** Batched tile-cell cover (the "H3/S2 cell encode" of the north
     * rule): all tiles at zoom `z` whose margin-expanded bbox intersects
     * the feature bbox, as packed 63-bit cell ids; null if any input is. */

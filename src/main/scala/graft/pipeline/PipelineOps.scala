@@ -79,12 +79,12 @@ object PipelineOps {
 
   private def words(c: Column): Column = split(c, " ")
 
-  /** Consecutive word 2-shingles; empty for single-word docs (guard needed:
-    * Spark `sequence(a,b)` with a>b yields a DESCENDING sequence). */
-  private def shingles2(ws: Column): Column =
-    when(size(ws) >= 2,
-      transform(sequence(lit(0), size(ws) - 2),
-        i => concat(get(ws, i), lit(" "), get(ws, i + 1))))
+  /** Consecutive word k-shingles joined by a single space; empty for docs
+    * shorter than k words (guard: `sequence(a,b)` with a>b descends). */
+  private def shingles(ws: Column, k: Int): Column =
+    when(size(ws) >= k, transform(sequence(lit(0), size(ws) - k), i =>
+      concat(get(ws, i) +: (1 until k).flatMap(j =>
+        Seq(lit(" "), get(ws, i + j))): _*)))
       .otherwise(array().cast("array<string>"))
 
   // ------------------------------------------------------------- dedup
@@ -111,7 +111,7 @@ object PipelineOps {
 
   private def minhash(d: DataFrame): DataFrame =
     d.where(size(words(col("text"))) >= 2)
-      .select(col("doc_id"), shingles2(words(col("text"))).as("shs"))
+      .select(col("doc_id"), shingles(words(col("text")), 2).as("shs"))
       .select(col("doc_id") +: (0 until 4).map(b =>
         array_min(transform(col("shs"),
           s => md5(concat(lit(s"$b:"), s)))).as(s"sig$b")): _*)
@@ -252,7 +252,7 @@ object PipelineOps {
     * partitioning, which already clusters (doc_id, sh), and Spark plans
     * the fence's repeat of that repartition away. */
   private def keptShingles(d: DataFrame): DataFrame = fenced(
-    d.select(col("doc_id"), explode(shingles2(words(col("text")))).as("sh"))
+    d.select(col("doc_id"), explode(shingles(words(col("text")), 2)).as("sh"))
       .repartition(candParts(d.sparkSession), col("sh")).distinct(),
     Seq("sh"), MaxBucket).cache()
 
@@ -1346,7 +1346,7 @@ object PipelineOps {
     import spark.implicits._
     val d = documentsRaw(spark, sfDir)
     val ws = words($"text")
-    val sh = shingles2(ws)
+    val sh = shingles(ws, 2)
     val (top, topFrac, dupFrac) = repetition(ws, sh)
     d.select(
       $"doc_id",
@@ -1512,7 +1512,7 @@ object PipelineOps {
     *
     * Scale shape: identical to [[vocabTopK]] — per-doc pair counts are a
     * map-side run-length encode of the SORTED bigram array ([[wordRuns]]
-    * over [[shingles2]]: the explode emits one row per DISTINCT pair per
+    * over [[shingles]]: the explode emits one row per DISTINCT pair per
     * doc, not one per word position), then one partial-agg pass; the
     * global top-k plans as TakeOrderedAndProject (per-partition heaps +
     * a k-row driver merge, never a single-partition global sort). */
@@ -1521,7 +1521,8 @@ object PipelineOps {
     import spark.implicits._
     val d = documents(spark, sfDir)
     val pairs = d
-      .select($"doc_id", explode(wordRuns(shingles2(words($"text")))).as("r"))
+      .select($"doc_id",
+        explode(wordRuns(shingles(words($"text"), 2))).as("r"))
       .select($"r.word".as("pair"), $"r.tf".as("tf"))
     val top = pairs.groupBy($"pair")
       .agg(sum($"tf").as("n_total"), count(lit(1)).as("n_docs"))
@@ -1680,7 +1681,7 @@ object PipelineOps {
     import spark.implicits._
     val d = documentsRaw(spark, sfDir)
     val ws = words($"text")
-    val (_, topFrac, dupFrac) = repetition(ws, shingles2(ws))
+    val (_, topFrac, dupFrac) = repetition(ws, shingles(ws, 2))
     val passLang = $"lang" === "en"
     val passLen = size(ws) >= 25
     val passQuality =
@@ -1697,15 +1698,6 @@ object PipelineOps {
         .when(!passQuality, "quality").when(!passRep, "repetition")
         .otherwise("none").as("fail_stage"))
   }
-
-  /** Consecutive word k-shingles joined by a single space; empty for docs
-    * shorter than k words (same descending-`sequence` guard as
-    * [[shingles2]]). */
-  private def shinglesK(ws: Column, k: Int): Column =
-    when(size(ws) >= k,
-      transform(sequence(lit(0), size(ws) - k),
-        i => concat_ws(" ", (0 until k).map(j => get(ws, i + j)): _*)))
-      .otherwise(array().cast("array<string>"))
 
   /** Duplicated-n-gram FRACTION per document — the corpus-level
     * repetition signal (RedPajama-V2 / Gopher family: "fraction of a
@@ -1727,7 +1719,7 @@ object PipelineOps {
     import spark.implicits._
     val d = documents(spark, sfDir)
     val sh = d.select($"doc_id",
-      explode(shinglesK(words($"text"), 5)).as("sh")).distinct()
+      explode(shingles(words($"text"), 5)).as("sh")).distinct()
       .cache() // feeds BOTH the df agg and the join-back (one scan, not two)
     val df = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
     val per = sh.join(df, Seq("sh"))

@@ -98,7 +98,7 @@ object Raster {
 
   /** Vector → raster: scanline-fill polygon features into a per-tile g×g
     * occupancy grid (even-odd rule); returns filled-cell counts.
-    * Runs as mapPartitions over the cover-joined features. */
+    * Runs once per (feature, covered tile) in [[rasterizeLayer]]. */
   def rasterizeCount(rings: Seq[Ring], tcfg: TileCfg, g: Int): Long = {
     val ext = tcfg.tileExtent.toDouble
     var filled = 0L
@@ -139,21 +139,16 @@ object Raster {
                      cfg: EngineCfg, layerName: String, z: Int,
                      grid: Int): DataFrame = {
     import spark.implicits._
-    import graft.expr.GeoFunctions
     val ext = cfg.tileExtent
     features
       .where($"layer" === layerName)
-      .withColumn("tile_id", explode(GeoFunctions.tileCover(lit(z),
-        $"xmin", $"ymin", $"xmax", $"ymax", lit(0), lit(ext))))
-      .select($"layer", $"id", $"tile_id", $"rings")
-      .as[(String, Long, Long, Seq[Ring])]
-      .mapPartitions { it =>
-        it.map { case (layer, id, tileId, rings) =>
-          val tid = TileId.unpack(tileId)
-          val tcfg = TileCfg(tid, ext, 0)
-          (layer, id, tid.z, tid.x, tid.y,
-            rasterizeCount(rings, tcfg, grid))
-        }
+      .flatMap { f =>
+        TileGrid.cover(z, BBox(f.xmin, f.ymin, f.xmax, f.ymax), ext, 0)
+          .iterator.map { tileId =>
+            val tid = TileId.unpack(tileId)
+            (f.layer, f.id, tid.z, tid.x, tid.y,
+              rasterizeCount(f.rings, TileCfg(tid, ext, 0), grid))
+          }
       }
       .toDF("layer", "id", "z", "x", "y", "filled_cells")
       .where($"filled_cells" > 0)

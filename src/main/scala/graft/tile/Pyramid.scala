@@ -1,16 +1,15 @@
 package graft.tile
 
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.when
 
 import graft.core._
-import graft.expr.GeoFunctions
 import graft.model.{Feature, TileRow}
 
 /** One feature row carried into the per-feature encode stage. The layer
   * travels as its config RANK (int — the per-row string is gone) and tag
   * values + rings travel as ONE [[RingCodec.packFeat]] blob, so the
-  * exploded row deserializes as primitives + a byte copy instead of a
+  * fanned-out row deserializes as primitives + a byte copy instead of a
   * boxed object graph per row (see RingCodec's scaladoc). */
 final case class TileFeatRow(tile_id: Long, layer_rank: Int,
                              kind_rank: Int, id: Long,
@@ -33,15 +32,16 @@ final case class FeatPayload(
 
 /** The batch tile-pyramid job (SURVEY.md §3.2 "Spark shape"):
   *
-  *   features ⨝ broadcast(layer meta)  — zoom gate P4, plan-time pruned
-  *     → explode zooms (sequence)      — one pass over the feature table
-  *     → explode tileCover(z, bbox)    — batched cell cover (J4, exact)
-  *     → per-feature encode (map)      — clip+simplify+commands, parallel;
-  *                                        elided features leave no payload
-  *     → groupByKey(tile_id)           — ONE shuffle: layer aggregation
-  *                                        (A3) + tile assembly (A4/A5),
-  *                                        feature order (kind_rank, id),
-  *                                        layer order = config order
+  *   features → flatMap (typed)  — per feature: the zoom gate P4 (resolved
+  *                                  on the driver), one pack, then one row
+  *                                  per tile of TileGrid.cover (J4, exact)
+  *                                  at each active zoom
+  *     → per-feature encode (map) — clip+simplify+commands, parallel;
+  *                                  elided features leave no payload
+  *     → groupByKey(tile_id)      — ONE shuffle: layer aggregation
+  *                                  (A3) + tile assembly (A4/A5),
+  *                                  feature order (kind_rank, id),
+  *                                  layer order = config order
   *
   * Every zoom takes this same path, as in the reference (one R-tree
   * query per tile, then layer fold and assembly). Skew note: the only
@@ -51,7 +51,9 @@ final case class FeatPayload(
   */
 object Pyramid extends Serializable {
 
-  /** MVT margin by zoom as a Column (mvtenc.rs:213-222). */
+  /** MVT margin by zoom as a Column (mvtenc.rs:213-222). Only
+    * [[graft.SparkEntry]] reads it, in its independent Column checks of
+    * tile assignment: `tileContainment`, `ew_tile_assign`, `ew_tile_lookup`. */
   def mvtMarginCol(z: Column): Column =
     when(z <= 12, 8).when(z === 13, 16).when(z === 14, 32)
       .when(z === 15, 64).when(z === 16, 128).otherwise(256)
@@ -59,37 +61,39 @@ object Pyramid extends Serializable {
   def marginFor(fmt: String, z: Int): Int =
     if (fmt == "wyrm") TileGrid.WyrmMargin else TileGrid.mvtZoomMargin(z)
 
-  /** Explode features to (tile_id, layer, feature) rows for all zooms in
-    * [zMin, zMax] where the layer is active. */
+  /** The zoom gate (P4), resolved on the driver for both [[coverJoin]]
+    * and [[tile]]: layer name → (config rank, first zoom, last zoom) of
+    * every layer active somewhere in [zMin, zMax], its zoom range clipped
+    * to that interval. One name may sit at several ranks. */
+  private def activeRanks(group: LayerGroup, zMin: Int, zMax: Int)
+      : Map[String, Seq[(Int, Int, Int)]] =
+    group.layers.zipWithIndex.collect {
+      case (l, rank) if l.zoom.zmin <= zMax && l.zoom.zmax >= zMin =>
+        l.name -> (rank, math.max(l.zoom.zmin, zMin),
+          math.min(l.zoom.zmax, zMax))
+    }.groupMap(_._1)(_._2)
+
+  /** Fan features out to (tile_id, layer, feature) rows for all zooms in
+    * [zMin, zMax] where the layer is active, in one typed pass. */
   def coverJoin(spark: SparkSession, features: Dataset[Feature],
                 group: LayerGroup, extent: Int, fmt: String,
                 zMin: Int, zMax: Int): Dataset[TileFeatRow] = {
     import spark.implicits._
-    val meta = group.layers.zipWithIndex
-      .map { case (l, rank) => (l.name, rank, l.zoom.zmin, l.zoom.zmax) }
-      .toDF("layer", "layer_rank", "zmin", "zmax")
-    val marginCol =
-      if (fmt == "wyrm") lit(TileGrid.WyrmMargin) else mvtMarginCol($"z")
-    // pack values + rings ONCE per feature, BEFORE the zoom/tile explode
-    // — every exploded row then carries primitives and one byte blob
-    // instead of a nested object graph
-    val packed = features
-      .map(f => (f.layer, f.kind_rank, f.id,
-        RingCodec.packFeat(f.values, f.rings),
-        f.xmin, f.ymin, f.xmax, f.ymax))
-      .toDF("layer", "kind_rank", "id", "packed",
-        "xmin", "ymin", "xmax", "ymax")
-    packed
-      .join(broadcast(meta), Seq("layer"))
-      .where($"zmin" <= zMax && $"zmax" >= zMin)
-      .withColumn("z",
-        explode(sequence(greatest($"zmin", lit(zMin)),
-          least($"zmax", lit(zMax)))))
-      .withColumn("tile_id",
-        explode(GeoFunctions.tileCover($"z", $"xmin", $"ymin", $"xmax",
-          $"ymax", marginCol, lit(extent))))
-      .select($"tile_id", $"layer_rank", $"kind_rank", $"id", $"packed")
-      .as[TileFeatRow]
+    val ranks = activeRanks(group, zMin, zMax)
+    features.flatMap { f =>
+      ranks.get(f.layer) match {
+        case Some(rs) =>
+          // pack values + rings ONCE per feature, before the fan-out
+          val packed = RingCodec.packFeat(f.values, f.rings)
+          val b = BBox(f.xmin, f.ymin, f.xmax, f.ymax)
+          for {
+            (rank, z0, z1) <- rs.iterator
+            z <- (z0 to z1).iterator
+            tileId <- TileGrid.cover(z, b, extent, marginFor(fmt, z)).iterator
+          } yield TileFeatRow(tileId, rank, f.kind_rank, f.id, packed)
+        case None => Iterator.empty
+      }
+    }
   }
 
   /** Assemble one tile from its pre-encoded features, STREAMING over an
@@ -226,13 +230,13 @@ object Pyramid extends Serializable {
 
   /** Single-tile render (S8's production shape; the reference answers
     * `GET /{group}/{z}/{x}/{tail}` with one R-tree `query(bbox)`): ONE
-    * Spark job with no shuffle and no broadcast.
+    * Spark job with no exchange.
     *
-    *   - zoom gate, resolved on the driver: layer name → config ranks of
-    *     the layers active at `z`;
+    *   - zoom gate, resolved on the driver by the helper [[coverJoin]]
+    *     uses: layer name → config ranks of the layers active at `z`;
     *   - one narrow pass over `features` keeps a feature only if its layer
     *     passes the gate and [[TileGrid.covers]] holds — the exact
-    *     per-tile form of the pyramid's cover explode — and encodes it
+    *     per-tile form of the pyramid's [[TileGrid.cover]] — and encodes it
     *     map-side with the pyramid's [[FeatureEncoder]];
     *   - the tile's payloads (bounded by its output bytes) are collected,
     *     sorted and assembled on the driver.
@@ -249,8 +253,7 @@ object Pyramid extends Serializable {
     val tid = TileId.pack(z, x, y)
     val extent = cfgE.tileExtent
     val margin = marginFor(fmt, z)
-    val ranks: Map[String, Seq[Int]] = group.layers.indices
-      .filter(group.layers(_).checkZoom(z)).groupBy(group.layers(_).name)
+    val ranks = activeRanks(group, z, z)
     val payloads = features.mapPartitions { it =>
       val fe = new FeatureEncoder(cfgE, group, fmt)
       it.flatMap { f =>
@@ -258,8 +261,9 @@ object Pyramid extends Serializable {
           case Some(rs) if TileGrid.covers(z, x, y,
               BBox(f.xmin, f.ymin, f.xmax, f.ymax), extent, margin) =>
             val packed = RingCodec.packFeat(f.values, f.rings)
-            rs.iterator.flatMap(r =>
-              fe.encode(TileFeatRow(tid, r, f.kind_rank, f.id, packed)))
+            rs.iterator.flatMap { case (rank, _, _) =>
+              fe.encode(TileFeatRow(tid, rank, f.kind_rank, f.id, packed))
+            }
           case _ => Iterator.empty
         }
       }
