@@ -23,7 +23,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *       second run's stages by task-seconds.
   *   runMain graft.BenchExtra dig
   *     — dig the bench corpus twice, print each feature table's partition
-  *       count and the second dig's stages by task-seconds.
+  *       count next to `defaultParallelism` (they should be equal) and
+  *       the second dig's stages by task-seconds.
   *
   * Same session configuration as [[Bench]] (env-parameterised master,
   * shuffle partitions, AQE) so plans and timings match the gate record's
@@ -143,9 +144,11 @@ object BenchExtra {
         val entities = graft.extract.Extract.entities(docs).cache()
         entities.count()
         // warm rep (JIT) then the measured rep; a dig's partition count
-        // is what every pass over its table runs as tasks
+        // is what every pass over its table runs as tasks, one per core
+        val cores = spark.sparkContext.defaultParallelism
         val warm = graft.dig.Dig.features(spark, entities, cfg)
-        println(s"DIG 1 partitions=${warm.rdd.getNumPartitions}")
+        println(s"DIG 1 partitions=${warm.rdd.getNumPartitions} " +
+          s"defaultParallelism=$cores")
         Thread.sleep(500)
         stats.clear()
         val t0 = System.nanoTime()
@@ -153,7 +156,8 @@ object BenchExtra {
         val n = feats.count()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500)
-        println(s"DIG 2 partitions=${feats.rdd.getNumPartitions}")
+        println(s"DIG 2 partitions=${feats.rdd.getNumPartitions} " +
+          s"defaultParallelism=$cores")
         println(f"DIG n=$n wall=$wall%.2f s; stages by task-sec:")
         printStages(stats, Int.MaxValue)
       case other =>

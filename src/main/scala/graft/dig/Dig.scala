@@ -88,18 +88,26 @@ object Dig {
     * re-serialized the whole dig per stage and deserialized it in every
     * task: on the perfbench tiles corpus (4 cores) the mean per-task
     * deserialize time goes 16.8 → 6.7 ms in an MVT pass and 8.5 → 2.7 ms
-    * in a single-tile job. The checkpoint keeps the partitions that AQE
-    * coalesces the dig's last shuffles to, so their number depends on the
-    * corpus and on what the session holds cached (`BenchExtra dig` prints
-    * it for two digs): on that corpus a first dig gives 3, and a second
-    * dig of the same entities 18, since it re-reads the first's still
-    * cached `m`, `mapWays` and `wayCoords` (3 both times without those
-    * caches); the bench corpus gives 18 both times. Costs: the
-    * executors' block managers keep one MEMORY_AND_DISK copy of the
-    * table, and a caller's own `.cache()` is a second one
-    * (perfbench `setup.cache_mb` 12.9 → 24.1 MB); a lost executor's
-    * blocks are not recomputed, the trade-off the closure loop's
-    * checkpoints already make.
+    * in a single-tile job. Costs: the executors' block managers keep one
+    * MEMORY_AND_DISK copy of the table, and a caller's own `.cache()` is
+    * a second one (perfbench `setup.cache_mb` 12.9 → 24.1 MB); a lost
+    * executor's blocks are not recomputed, the trade-off the closure
+    * loop's checkpoints already make.
+    *
+    * The table has exactly `defaultParallelism` partitions, one per core,
+    * hash-partitioned on `id` before the checkpoint, so every pass and
+    * request over it runs one task wave whatever the corpus and whatever
+    * the session holds cached (`BenchExtra dig` prints both counts).
+    * Left to AQE, the count was whatever the dig's last shuffles were
+    * coalesced to: 3 for a first dig of the perfbench tiles corpus, 18
+    * for a second dig of the same entities that re-read the first's
+    * still cached `m`, `mapWays` and `wayCoords`, 130 under `Bench`'s 32
+    * cores. Over that corpus (4 cores, traced medians of seeds 1-3, set-up
+    * tables of 18 partitions before) an MVT z9-14 pass takes 1.08 → 0.60
+    * task-seconds, a z0-8 pass 0.75 → 0.26, and a single-tile request
+    * runs 4 tasks instead of 18 (0.15 → 0.05 task-seconds). The cost is
+    * one more exchange of the whole table: the dig runs 13 → 14 jobs and
+    * shuffles 0.15 → 1.78 MB.
     */
   def features(spark: SparkSession, entities: DataFrame,
                cfg: EngineCfg): Dataset[Feature] = {
@@ -286,7 +294,8 @@ object Dig {
       .unionByName(relPolyFeatures.select(
         $"layer", $"kind_rank", $"id", $"values", $"rings",
         $"xmin", $"ymin", $"xmax", $"ymax"))
-    all.as[Feature].localCheckpoint(eager = true)
+    all.repartition(spark.sparkContext.defaultParallelism, $"id")
+      .as[Feature].localCheckpoint(eager = true)
   }
 
   /** rings column for a single-line/single-ring way: empty coordinate

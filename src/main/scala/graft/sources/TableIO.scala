@@ -1,32 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Table IO seam (BASELINE.md note): the sandbox ships no Iceberg runtime
   * jar, so tables are Parquet directories of the exact `input_hint`
   * schema; in a real deployment `GRAFT_TABLE_FORMAT=iceberg` makes every
   * read/write go through the Iceberg source instead — a one-line swap, no
-  * engine change. Snapshot selection (the reference's newest-`.pbf` pick,
-  * main.rs:33-54) maps to Iceberg snapshot-ids; for Parquet it is the
-  * lexicographically newest subdirectory. */
+  * engine change. */
 object TableIO {
   def format: String = sys.env.getOrElse("GRAFT_TABLE_FORMAT", "parquet")
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.format(format).load(path)
 
   def write(df: DataFrame, path: String, partitionBy: Seq[String] = Nil)
       : Unit = {
     val w = df.write.format(format).mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .save(path)
-  }
-
-  /** Newest snapshot directory under `root` (S3 source-selection analog of
-    * reference main.rs:33-54). */
-  def newestSnapshot(root: String): Option[String] = {
-    val dir = new java.io.File(root)
-    Option(dir.listFiles()).map(_.filter(_.isDirectory).map(_.getName))
-      .filter(_.nonEmpty).map(ns => s"$root/${ns.max}")
   }
 }

@@ -58,6 +58,21 @@ class SingleTileSpec extends AnyFunSuite {
     }
   }
 
+  test("Pyramid.tile over a fresh dig runs one job of defaultParallelism tasks") {
+    import spark.implicits._
+    val fresh = Dig.features(spark, Extract.entities(
+      spark.createDataset(CorpusGen.microDocs()).toDF()), cfg)
+    val want = Pyramid.tiles(spark, fresh, cfg, "tile", "mvt", 12, 12)
+      .collect().minBy(r => TileId.pack(r.z, r.x, r.y))
+    val (got, jobs) = SparkJobs.recorded(spark, "single-tile-tasks") {
+      Pyramid.tile(spark, fresh, cfg, "tile", "mvt", want.z, want.x, want.y)
+        .collect()
+    }
+    assert(jobs.map(_.tasks) == Seq(spark.sparkContext.defaultParallelism),
+      jobs.mkString(", "))
+    assert(got.length == 1 && got.head.bytes.sameElements(want.bytes))
+  }
+
   // county (4-14) is gated out from z15 on; its tiles beyond the other
   // layers' reach then hold only gated-out features (at z12 the gated
   // buildings sit inside the county). The first zoom from z15 up with such
