@@ -82,45 +82,46 @@ object Dig {
     * The result is materialized and its lineage cut: the dig ends with one
     * eager `localCheckpoint`, so the returned frame is a scan of the
     * checkpointed blocks, 4 RDDs deep whatever the dig did (54 on the
-    * micro corpus without it). Spark ships each task's RDD together with
-    * its dependencies, and a `.cache()` does not shorten them, so every
-    * pyramid pass and single-tile request over an uncut table
-    * re-serialized the whole dig per stage and deserialized it in every
-    * task: on the perfbench tiles corpus (4 cores) the mean per-task
-    * deserialize time goes 16.8 → 6.7 ms in an MVT pass and 8.5 → 2.7 ms
-    * in a single-tile job. Costs: the executors' block managers keep one
-    * MEMORY_AND_DISK copy of the table, and a caller's own `.cache()` is
-    * a second one (perfbench `setup.cache_mb` 12.9 → 24.1 MB); a lost
-    * executor's blocks are not recomputed, the trade-off the closure
-    * loop's checkpoints already make.
+    * micro corpus without it). Spark ships each task's RDD with its
+    * dependencies, and a `.cache()` does not shorten them, so over an uncut
+    * table every pyramid pass and single-tile request re-serialized the
+    * whole dig per stage (per-task deserialize 16.8 → 6.7 ms in a
+    * perfbench MVT pass). Costs: the block managers keep one
+    * MEMORY_AND_DISK copy of the table (a caller's `.cache()` is a second),
+    * and a lost executor's blocks are not recomputed, the trade-off the
+    * closure loop's checkpoints already make.
     *
     * The table has exactly `defaultParallelism` partitions, one per core,
     * hash-partitioned on `id` before the checkpoint, so every pass and
-    * request over it runs one task wave whatever the corpus and whatever
-    * the session holds cached (`BenchExtra dig` prints both counts).
-    * Left to AQE, the count was whatever the dig's last shuffles were
-    * coalesced to: 3 for a first dig of the perfbench tiles corpus, 18
-    * for a second dig of the same entities that re-read the first's
-    * still cached `m`, `mapWays` and `wayCoords`, 130 under `Bench`'s 32
-    * cores. Over that corpus (4 cores, traced medians of seeds 1-3, set-up
-    * tables of 18 partitions before) an MVT z9-14 pass takes 1.08 → 0.60
-    * task-seconds, a z0-8 pass 0.75 → 0.26, and a single-tile request
-    * runs 4 tasks instead of 18 (0.15 → 0.05 task-seconds). The cost is
-    * one more exchange of the whole table: the dig runs 13 → 14 jobs and
-    * shuffles 0.15 → 1.78 MB.
+    * request over it runs one task wave whatever the session holds cached.
+    * Left to AQE, the count was whatever the dig's last shuffles coalesced
+    * to (3 or 18 for the same perfbench entities, 130 under `Bench`'s 32
+    * cores). The cost is one more exchange of the whole table: the dig
+    * runs 13 → 14 jobs and shuffles 0.15 → 1.78 MB.
     */
   def features(spark: SparkSession, entities: DataFrame,
                cfg: EngineCfg): Dataset[Feature] = {
     import spark.implicits._
+    plan(spark, entities, cfg)
+      .repartition(spark.sparkContext.defaultParallelism, $"id")
+      .as[Feature].localCheckpoint(eager = true)
+  }
+
+  /** The dig's rows as one lazy plan, in `Feature`'s columns: what
+    * [[features]] checkpoints, and what `DigJob` writes through its own
+    * layer exchange. Only the closure loop's rounds run eagerly. */
+  private[graft] def plan(spark: SparkSession, entities: DataFrame,
+                          cfg: EngineCfg): DataFrame = {
+    import spark.implicits._
     val layers: Seq[LayerDef] =
       cfg.groups.filter(_.osm).flatMap(_.layers)
 
-    // LAZY caches: the final checkpoint job scans each of these several
+    // LAZY caches: the job that runs the plan scans each of these several
     // times; the cache dedupes recomputation per partition. No eager
     // count() barriers — three blocking full passes cost more than the
     // bounded duplicate work of concurrent first-fills (measured: dig
     // wall time unchanged without them, VERDICT r1 #6). They are not
-    // released after the checkpoint: a later dig of the same entities
+    // released after that job: a later dig of the same entities
     // re-hits `m` through the same plan (ROADMAP item 7).
     val m = matched(entities, layers)
       .select("layer", "entity_kind", "id", "tags", "lat", "lon",
@@ -289,13 +290,11 @@ object Dig {
       }
       .toDF()
 
-    val all = pointFeatures
+    pointFeatures
       .unionByName(lineAndWayPolyFeatures)
       .unionByName(relPolyFeatures.select(
         $"layer", $"kind_rank", $"id", $"values", $"rings",
         $"xmin", $"ymin", $"xmax", $"ymax"))
-    all.repartition(spark.sparkContext.defaultParallelism, $"id")
-      .as[Feature].localCheckpoint(eager = true)
   }
 
   /** rings column for a single-line/single-ring way: empty coordinate

@@ -1,13 +1,19 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.EngineCfg
 import graft.dig.Dig
 import graft.extract.Extract
 import graft.ingest.CorpusGen
+import graft.model.Feature
 import graft.run.{DigJob, PyramidJob}
+import graft.tile.Pyramid
 
 /** Resumable-job + feature-table-sink specs. */
 class JobsSpec extends AnyFunSuite {
@@ -18,6 +24,20 @@ class JobsSpec extends AnyFunSuite {
     val d = Files.createTempDirectory(s"graft_$tag")
     d.toFile.deleteOnExit()
     d.toString
+  }
+
+  /** Jobs one `PyramidJob.run` pass starts on the micro corpus. */
+  private val PassJobs = 4
+
+  private def rows(df: DataFrame) =
+    df.select("group", "z", "x", "y", "fmt", "bytes").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
+        r.getString(4), r.getAs[Array[Byte]](5).toSeq)).toSet
+
+  private def microFeatures() = {
+    import spark.implicits._
+    Dig.features(spark,
+      Extract.entities(spark.createDataset(CorpusGen.microDocs()).toDF()), cfg)
   }
 
   test("PyramidJob: checkpointed batches resume idempotently") {
@@ -55,11 +75,7 @@ class JobsSpec extends AnyFunSuite {
     val names = table.schema.fieldNames.toSeq
     assert(names.count(_ == "fmt") == 1 && names.count(_ == "z") == 1,
       names)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("group", "z", "x", "y", "fmt", "bytes").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
-          r.getString(4), r.getAs[Array[Byte]](5).toSeq)).toSet
-    val want = rows(graft.tile.Pyramid.tiles(spark, feats, cfg, "tile",
+    val want = rows(Pyramid.tiles(spark, feats, cfg, "tile",
       "mvt", 0, 6).toDF())
     assert(rows(table) == want)
     feats.unpersist()
@@ -79,5 +95,84 @@ class JobsSpec extends AnyFunSuite {
       .as[Long].collect()
     assert(cells.sorted.toSeq == cells.toSeq ||
       cells.length <= 1) // single output file per partition → sorted
+  }
+
+  test("PyramidJob: one pass starts as many jobs for z0-6 as for z0-12") {
+    val feats = microFeatures()
+    def jobs(zMax: Int) = SparkJobs.recorded(spark, s"pyramid-job-z0-$zMax") {
+      val out = tmpDir(s"pyrjobs$zMax")
+      // every zoom of both ranges has tiles: over an empty zoom set the
+      // read-back would scan no file and start no job
+      assert(PyramidJob.run(spark, feats, cfg, "tile", "mvt", 0, zMax, out)
+        .exists(b => b.z == zMax && b.tiles > 0))
+    }._2
+    val (z6, z12) = (jobs(6), jobs(12))
+    // the pass's write (cover/encode stage, then assembly) and the
+    // manifests' read-back aggregate (scan, then merge)
+    assert(z6.length == PassJobs && z12.length == PassJobs,
+      s"z0-6: ${z6.length} jobs, z0-12: ${z12.length}")
+  }
+
+  test("PyramidJob: a gapped resume rewrites only the missing zooms") {
+    val feats = microFeatures()
+    val out = tmpDir("pyrgap")
+    PyramidJob.run(spark, feats, cfg, "tile", "mvt", 0, 6, out)
+    Seq(2, 5).foreach(z =>
+      Files.delete(Paths.get(s"$out/_manifest/mvt_z$z.json")))
+    // file name → mtime under each committed zoom's directory
+    def files(z: Int): Map[String, Long] = {
+      val d = Paths.get(s"$out/fmt=mvt/z=$z")
+      if (!Files.isDirectory(d)) Map.empty
+      else Files.list(d).iterator().asScala.map(f =>
+        f.getFileName.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    }
+    val kept = Seq(0, 1, 3, 4, 6)
+    val before = kept.map(files)
+    assert(before.exists(_.nonEmpty))
+    val r = PyramidJob.run(spark, feats, cfg, "tile", "mvt", 0, 6, out)
+    assert(r.filter(!_.skipped).map(_.z) == Seq(2, 5), r)
+    assert(kept.map(files) == before)
+    val table = spark.read.parquet(out)
+    assert(rows(table) == rows(Pyramid.tiles(spark, feats, cfg, "tile",
+      "mvt", 0, 6).toDF()))
+    // the two recommitted manifests count what their directories hold
+    val written = table.groupBy("z").count().collect()
+      .map(w => w.getInt(0) -> w.getLong(1)).toMap
+    r.filter(!_.skipped).foreach { b =>
+      assert(b.tiles == written.getOrElse(b.z, 0L), b)
+      assert(Files.readString(Paths.get(s"$out/_manifest/mvt_z${b.z}.json"))
+        .contains(s""""tiles":${b.tiles},"""))
+    }
+  }
+
+  test("PyramidJob: an empty feature table commits a zero manifest per zoom") {
+    import spark.implicits._
+    val out = tmpDir("pyrempty")
+    val r = PyramidJob.run(spark, spark.emptyDataset[Feature], cfg, "tile",
+      "mvt", 0, 6, out)
+    assert(r.map(_.z) == (0 to 6) && r.forall(b => !b.skipped && b.tiles == 0),
+      r)
+    (0 to 6).foreach { z =>
+      val m = Files.readString(Paths.get(s"$out/_manifest/mvt_z$z.json"))
+      assert(m.contains("\"tiles\":0,"), m)
+    }
+  }
+
+  test("DigJob: written rows are Dig.features' rows; metrics count the table") {
+    import spark.implicits._
+    val out = tmpDir("digrows")
+    DigJob.run(spark, spark.createDataset(CorpusGen.microDocs()).toDF(), cfg,
+      out)
+    val t = spark.read.parquet(out)
+    val cols = Encoders.product[Feature].schema.fieldNames.toSeq
+    def featureRows(df: DataFrame) = df.select(cols.map(col): _*).collect()
+    val written = featureRows(t.drop("cell"))
+    val want = featureRows(microFeatures().toDF())
+    assert(written.length == want.length && written.toSet == want.toSet)
+    val metrics = """"layer":"([^"]+)","features":(\d+)""".r
+      .findAllMatchIn(Files.readString(Paths.get(s"$out/_metrics.json")))
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    val counts = t.groupBy("layer").count().as[(String, Long)].collect().toMap
+    assert(metrics.nonEmpty && metrics == counts)
   }
 }
